@@ -286,7 +286,7 @@ def main() -> int:
             detail_out = os.path.join(
                 here,
                 os.environ.get(
-                    "SPARK_GRAFT_SWEEP_DETAIL", "CORRECTNESS_full_r07.json"
+                    "SPARK_GRAFT_SWEEP_DETAIL", "CORRECTNESS_full.json"
                 ),
             )
             res = run_sweep(

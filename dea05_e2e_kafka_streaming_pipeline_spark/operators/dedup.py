@@ -859,16 +859,16 @@ def simhash_pairs_md5(
 # Connected components (transitive dup clusters)
 # ---------------------------------------------------------------------------
 
-def _cc_driver(df: DataFrame, rows: list, id_col: str) -> DataFrame:
+def _cc_driver(df: DataFrame, id_a, id_b, id_col: str) -> DataFrame:
     """Driver-side union-find for SMALL pair graphs (entered only
-    through ``algorithm="auto"``'s bounded-take gate): near-dup graphs
-    are edge-sparse — the sf0.1 semantic-dedup graph is ~1.4k edges —
-    and the distributed loop's per-round stage overhead (join +
-    aggregate + checkpoint × rounds) dwarfs a microsecond union-find.
-    ``rows`` are the already-fetched edges (two longs each); the
-    (node → component-min) mapping broadcasts back over ≤ 2·|edges|
-    rows. Same output contract as the distributed paths (min id per
-    component)."""
+    through ``algorithm="auto"``'s size gate): near-dup graphs are
+    edge-sparse — the sf0.1 semantic-dedup graph is ~1.4k edges — and
+    the distributed loop's per-round stage overhead (join + aggregate +
+    checkpoint × rounds) dwarfs a microsecond union-find. ``id_a`` /
+    ``id_b`` are the edges as two integer numpy arrays (memory bound in
+    ``plans.analytics.SMALL_ROWS``); the (node → component-min) mapping
+    broadcasts back over ≤ 2·|edges| rows. Same output contract as the
+    distributed paths (min id per component)."""
     parent: dict = {}
 
     def find(x):
@@ -879,10 +879,10 @@ def _cc_driver(df: DataFrame, rows: list, id_col: str) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for r in rows:
-        parent.setdefault(r.id_a, r.id_a)
-        parent.setdefault(r.id_b, r.id_b)
-        ra, rb = find(r.id_a), find(r.id_b)
+    for a, b in zip(id_a.tolist(), id_b.tolist()):
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
         if ra != rb:
             if rb < ra:
                 ra, rb = rb, ra
@@ -907,7 +907,6 @@ def connected_components(
     id_col: str = "doc_id",
     max_iterations: int = 25,
     algorithm: str = "label",
-    driver_max_edges: int = 1_000_000,
 ) -> DataFrame:
     """Transitive-closure grouping of a near-dup pair graph: every doc
     gets its component's minimum id as ``component_id`` (isolated docs
@@ -936,20 +935,28 @@ def connected_components(
     Same output contract; equivalence is property-tested on random
     graphs (tests/test_properties.py).
 
-    ``algorithm="auto"``: ONE bounded fetch decides the strategy —
-    ``take(driver_max_edges + 1)`` over the pair plan; if every edge
-    arrived, the closure runs as a driver-side union-find over exactly
-    those rows (:func:`_cc_driver`; near-dup graphs are edge-sparse,
-    and the distributed loop's fixed per-round cost dominates small
-    graphs by orders of magnitude — no second pair-plan execution, no
-    count job), otherwise the fetched rows are discarded and the
-    distributed label loop runs unchanged. Callers on the registry's
-    lazy-build path should pass an explicit algorithm instead.
+    ``algorithm="auto"``: :func:`~..plans.analytics.size_gate` pins the
+    pair list and counts it once. Up to
+    ``SMALL_ROWS["connected_components"]`` edges, the pinned edges come
+    back through Arrow as two integer arrays and the closure runs as a
+    driver-side union-find (:func:`_cc_driver`; near-dup graphs are
+    edge-sparse, and the distributed loop's fixed per-round cost
+    dominates small graphs by orders of magnitude); above it, the label
+    loop reads the pinned edges, so the pair plan runs once either way.
+    Callers on the registry's lazy-build path should pass an explicit
+    algorithm instead.
     """
     if algorithm == "auto":
-        fetched = pairs.select("id_a", "id_b").take(driver_max_edges + 1)
-        if len(fetched) <= driver_max_edges:
-            return _cc_driver(df, fetched, id_col)
+        from dea05_e2e_kafka_streaming_pipeline_spark.plans.analytics import size_gate
+
+        pairs, _, small = size_gate(
+            pairs.select("id_a", "id_b"), "connected_components"
+        )
+        if small:
+            pdf = pairs.toPandas()
+            return _cc_driver(
+                df, pdf["id_a"].to_numpy(), pdf["id_b"].to_numpy(), id_col
+            )
         algorithm = "label"
     if algorithm == "star":
         return _cc_star(df, pairs, id_col, max_iterations)

@@ -283,7 +283,6 @@ def k_core(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iterations: int = 32,
-    driver_max_edges: int = 1_000_000,
 ) -> DataFrame:
     """The k-core of an undirected graph — the maximal subgraph where
     every vertex keeps degree ≥ k — by iterative peeling: drop every
@@ -313,18 +312,14 @@ def k_core(
         .filter(F.col("lo") != F.col("hi"))
         .distinct()
     )
-    # size-adaptive gate (r9 form of the connected_components "auto"
-    # pattern): pin the canonical edge list FIRST, then one exact
-    # count decides the branch — the count materializes the pin, so
-    # the distinct shuffle runs exactly once for EITHER branch (the r8
-    # take(bound+1) probe paid the distinct again for the discarded
-    # rows when over the gate, and collected up to 1M boxed Row
-    # objects when under it — r9 advice items). Under the gate the
-    # edges come back as two int64 numpy arrays via Arrow (16
+    # size gate: the pinned canonical edge list is counted once, so the
+    # distinct shuffle runs exactly once for EITHER branch. Under the
+    # gate the edges come back as two int64 numpy arrays via Arrow (16
     # bytes/edge; see _kcore_driver's memory bound).
-    e = e_plan.localCheckpoint(eager=False)
-    n_edges = e.count()
-    if n_edges <= driver_max_edges:
+    from dea05_e2e_kafka_streaming_pipeline_spark.plans.analytics import size_gate
+
+    e, n_edges, small = size_gate(e_plan, "k_core")
+    if small:
         pdf = e.toPandas()
         return _kcore_driver(
             edges.sparkSession,

@@ -13,131 +13,246 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def global_row_number(
+SMALL_ROWS: dict[str, int] = {
+    "connected_components": 1_000_000,
+    "k_core": 1_000_000,
+    "global_row_number": 2_000_000,
+    "global_cumsum": 2_000_000,
+    "theil_sen": 8_000_000,
+}
+"""Row bound of the single-node branch of each size-adaptive operator:
+inputs of at most ``SMALL_ROWS[op]`` rows run on the driver or in ONE
+task instead of the distributed plan, whose fixed per-stage cost
+dominates small inputs. The bound is what keeps that single node's
+memory bounded:
+
+- ``connected_components`` (edges; driver heap): two int64 arrays via
+  Arrow (16 B/edge) plus the union-find dict and the (node → component)
+  mapping, ~300 B/edge when every endpoint is distinct — ~0.3 GB at
+  the gate.
+- ``k_core`` (canonical edges; driver heap): two int64 arrays plus the
+  per-vertex degree array and two masks, ~26 B/edge — ~26 MB at the
+  gate (see ``operators.graph._kcore_driver``).
+- ``global_row_number`` (rows; one JVM task): the ``Coalesce(1)`` sort
+  buffers each row's UnsafeRow bytes plus a 16 B pointer/prefix entry
+  in that task's execution memory (spillable).
+- ``global_cumsum`` (distinct values; one task): the same sort buffer;
+  its Python worker holds one Arrow batch at a time.
+- ``theil_sen`` (pairwise slopes or intercept candidates; one JVM
+  task): the ``repartition(1)`` sort of one 8- or 16-byte key, ~40 B/row
+  with row overhead and sort pointer — ~0.3 GB at the bound.
+
+Every entry is read at call time, so a test can force the distributed
+branch with ``monkeypatch.setitem(SMALL_ROWS, op, 0)``.
+"""
+
+
+def size_gate(df: DataFrame, op: str) -> tuple[DataFrame, int, bool]:
+    """The one size gate of the size-adaptive operators: pin ``df``
+    with a lazy ``localCheckpoint`` and count it exactly once. Returns
+    ``(pinned, n, small)``, where ``small`` is ``n <= SMALL_ROWS[op]``.
+
+    The count materializes the pin, so the input plan runs ONCE for
+    either branch: the small branch collects or coalesces the pinned
+    blocks, the distributed branch reads them (a ``take(bound + 1)``
+    probe would re-run the plan over the bound and collect up to bound
+    boxed Rows under it). NOT ``.persist()``: the
+    checkpoint binds to this DataFrame object, so nothing leaks across
+    invocations the way a plan-matched cache entry does. Callers project
+    to the columns they need first, so the pin is a narrow-table write.
+    """
+    pinned = df.localCheckpoint(eager=False)
+    n = pinned.count()
+    return pinned, n, n <= SMALL_ROWS[op]
+
+
+def _running_sums(sum_cols: list[str], prefix: str):
+    """``mapInArrow`` function appending ``prefix + c``, the running
+    total of each integer column ``c`` within the partition.
+    Arrow-native, not mapInPandas: payload and DECIMAL order columns
+    pass through as untouched Arrow buffers (pandas would box every
+    decimal) and the int64 cumsum runs vectorized."""
+
+    def running(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        carry = {c: 0 for c in sum_cols}
+        for batch in batches:
+            names = list(batch.schema.names)
+            cols = list(batch.columns)
+            for c in sum_cols:
+                col = pc.cast(batch.column(names.index(c)), pa.int64())
+                cs = pc.add(pc.cumulative_sum_checked(col), carry[c])
+                if batch.num_rows:
+                    carry[c] = cs[batch.num_rows - 1].as_py()
+                cols.append(cs)
+                names.append(f"{prefix}{c}")
+            yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    return running
+
+
+def _prefix_scaffold(
     df: DataFrame,
     order_cols: list[str],
-    out_col: str = "rn",
+    sum_cols: list[str],
     num_partitions: int | None = None,
-    local_max_rows: int = 2_000_000,
-    known_n: int | None = None,
 ) -> DataFrame:
-    """Total-order global row numbering WITHOUT the single-reducer
-    collapse of ``row_number() OVER (ORDER BY ...)`` — Spark plans that
-    window as an Exchange to ONE partition, which is the canonical
-    100 TB anti-pattern (one task sorts the world).
-
-    Plan instead (the DataFrame form of RDD ``zipWithIndex``):
+    """The distributed running-total plan behind :func:`global_cumsum`
+    and :func:`global_row_number` (the DataFrame form of RDD
+    ``zipWithIndex``), never the single-reducer ``OVER (ORDER BY ...)``
+    collapse — Spark plans that window as an Exchange to ONE partition,
+    the canonical 100 TB anti-pattern (one task sorts the world):
 
     1. ``repartitionByRange`` + ``sortWithinPartitions`` on the order
        key — a normal range shuffle, every partition sorted and
        globally ordered BETWEEN partitions;
-    2. one Arrow ``mapInPandas`` pass stamps (partition id, local row
-       number) with zero shuffle;
-    3. per-partition counts (a ≤ num_partitions-row aggregate) come
+    2. one Arrow pass stamps the local running totals and the JVM
+       stamps the partition id, with zero shuffle;
+    3. per-partition totals (a ≤ num_partitions-row aggregate) come
        back to the driver, prefix-summed into offsets, and broadcast-
-       joined back: ``rn = offset[pid] + local_rn``.
+       joined back: ``cum_c = offset[pid] + local_c``.
 
-    The numbered stream is pinned with a lazy ``localCheckpoint``
-    because steps 2→3 take two actions over it; at lake scale the
-    natural form of this operator is "write the range-sorted table,
-    then number from file row counts" — the local checkpoint is the
-    interactive equivalent. NOT ``.persist()``: CacheManager matches
-    by canonicalized plan, so a persisted stream would leak across
-    bench repetitions of the same query (r8 verdict); the checkpoint
-    RDD binds to THIS DataFrame object and is recomputed from the
-    inputs on every invocation. ``order_cols`` must be a total order
-    (include a unique tie-break) for the result to be deterministic.
-
-    Also the exact-ntile building block: ``bucket = 1 +
-    (rn-1)*k/total`` gives equal-frequency buckets without the
-    unpartitioned ``ntile`` window (see ``customer_spend_quartiles``'s
-    scale note).
-
-    Size-adaptive small branch (r9, the ``connected_components("auto")``
-    / ``k_core`` gate discipline): when the caller proves the input
-    small — ``known_n`` from a count it already ran, or an opt-in
-    ``local_max_rows`` gate (lazy localCheckpoint + count, so the gate
-    probe IS the materialization the scaffold needs anyway) — the
-    numbering collapses to ONE sorted single-partition JVM pass (an
-    explicit ``coalesce(1)``, never a silent ``Window.orderBy``
-    collapse; ``monotonically_increasing_id`` on the one sorted
-    partition is the position, whole-stage codegen, no Python
-    boundary). That skips the scaffold's fixed cost (range-shuffle
-    sample job + pin + per-partition-count collect + broadcast join —
-    measured ~0.9 s at any input size). Above the gate the scaffold
-    runs over the already-materialized checkpoint, so the gate costs
-    one narrow-table write, not a second derivation (every call site
-    projects to the order/payload columns first). ``local_max_rows=0``
-    disables the gate outright for inputs too wide to checkpoint.
+    The stamped stream is pinned with a lazy ``localCheckpoint`` because
+    steps 2→3 take two actions over it; at lake scale the natural form
+    is "write the range-sorted table, then offset from file totals" —
+    the local checkpoint is the interactive equivalent. ``sum_cols``
+    must be integer-typed (the offsets add exactly in any schedule).
+    Output: the input columns plus ``cum_<c>`` for each ``c``.
     """
     from pyspark.sql import types as T
 
     spark = df.sparkSession
-    if known_n is None and local_max_rows > 0:
-        # the probe doubles as the materialization: every scaffold
-        # consumer pays a full pass anyway (the old persist), so the
-        # count that decides the branch is not an extra derivation
-        df = df.localCheckpoint(eager=False)
-        known_n = df.count()
-    if known_n is not None and local_max_rows > 0 and known_n <= local_max_rows:
-        # one sorted partition → monotonically_increasing_id IS the
-        # 0-based position (partition 0 contributes no high bits), so
-        # the numbering stays JVM-only whole-stage codegen — no Python
-        # boundary at all on this branch
-        return (
-            df.coalesce(1)
-            .sortWithinPartitions(*[F.col(c) for c in order_cols])
-            .withColumn(
-                out_col, (F.monotonically_increasing_id() + 1).cast("long")
-            )
-        )
     n = num_partitions or spark.sparkContext.defaultParallelism
     cols = [F.col(c) for c in order_cols]
     ranged = df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
     out_schema = T.StructType(
         list(ranged.schema.fields)
-        + [
-            T.StructField("__pid", T.IntegerType(), False),
-            T.StructField("__lrn", T.LongType(), False),
-        ]
+        + [T.StructField(f"__lcs_{c}", T.LongType(), False) for c in sum_cols]
+    )
+    local = (
+        ranged.mapInArrow(_running_sums(sum_cols, "__lcs_"), out_schema)
+        .withColumn("__pid", F.spark_partition_id())
+        .localCheckpoint(eager=False)
+    )
+    totals = sorted(
+        (r["__pid"], tuple(r[f"__t_{c}"] for c in sum_cols))
+        for r in local.groupBy("__pid")
+        .agg(*[F.sum(c).alias(f"__t_{c}") for c in sum_cols])
+        .collect()
+    )
+    offsets, acc = [], [0] * len(sum_cols)
+    for pid, tots in totals:
+        offsets.append((pid, *acc))
+        acc = [a + (t or 0) for a, t in zip(acc, tots)]
+    off_schema = "__pid int, " + ", ".join(f"__off_{c} long" for c in sum_cols)
+    off_df = spark.createDataFrame(offsets, off_schema)
+    out = local.join(F.broadcast(off_df), "__pid")
+    for c in sum_cols:
+        out = out.withColumn(f"cum_{c}", F.col(f"__off_{c}") + F.col(f"__lcs_{c}"))
+    return out.drop(
+        "__pid", *[f"__lcs_{c}" for c in sum_cols], *[f"__off_{c}" for c in sum_cols]
     )
 
-    def number(batches):
-        # arrow-native: the payload columns (doc bodies, decimals) pass
-        # through as untouched arrow buffers — mapInPandas materialized
-        # every cell as a Python object just to stamp two ints (§4.2)
-        import numpy as np
-        import pyarrow as pa
-        from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
-        seen = 0
-        for batch in batches:
-            n_rows = batch.num_rows
-            pid_arr = pa.array(np.full(n_rows, pid, dtype="int32"))
-            lrn = pa.array(np.arange(seen + 1, seen + 1 + n_rows, dtype="int64"))
-            seen += n_rows
-            yield pa.RecordBatch.from_arrays(
-                list(batch.columns) + [pid_arr, lrn],
-                names=list(batch.schema.names) + ["__pid", "__lrn"],
-            )
-
-    local = ranged.mapInArrow(number, out_schema).localCheckpoint(
-        eager=False
-    )
-    counts = sorted(
-        (r["__pid"], r["cnt"])
-        for r in local.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    )
-    offsets, acc = [], 0
-    for pid, cnt in counts:
-        offsets.append((pid, acc))
-        acc += cnt
-    off_df = spark.createDataFrame(offsets, "__pid int, __off long")
+def _row_number_scaffold(
+    df: DataFrame,
+    order_cols: list[str],
+    out_col: str,
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """Distributed row numbering: the running count in ``order_cols``
+    order is the :func:`_prefix_scaffold` running total of a literal-1
+    column."""
     return (
-        local.join(F.broadcast(off_df), "__pid")
-        .withColumn(out_col, F.col("__off") + F.col("__lrn"))
-        .drop("__pid", "__lrn", "__off")
+        _prefix_scaffold(
+            df.withColumn("__one", F.lit(1).cast("long")),
+            order_cols,
+            ["__one"],
+            num_partitions,
+        )
+        .drop("__one")
+        .withColumnRenamed("cum___one", out_col)
+    )
+
+
+def global_row_number(
+    df: DataFrame,
+    order_cols: list[str],
+    out_col: str = "rn",
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """Total-order global row numbering (1-based, in ``out_col``)
+    WITHOUT the single-reducer ``row_number() OVER (ORDER BY ...)``
+    collapse. ``order_cols`` must be a total order (include a unique
+    tie-break) for the result to be deterministic.
+
+    Size-adaptive (:func:`size_gate`): inputs of at most
+    ``SMALL_ROWS["global_row_number"]`` rows are numbered in ONE sorted
+    single-partition JVM pass — an explicit ``coalesce(1)``, never a
+    silent ``Window.orderBy`` collapse; ``monotonically_increasing_id``
+    on the one sorted partition is the position, whole-stage codegen,
+    no Python boundary. That skips the scaffold's fixed cost (range-
+    shuffle sample job + pin + per-partition-count collect + broadcast
+    join — measured ~0.9 s at any input size). Larger inputs run
+    :func:`_prefix_scaffold` over the already-pinned input, counting a
+    literal-1 column.
+
+    Also the exact-ntile building block: ``bucket = 1 +
+    (rn-1)*k/total`` gives equal-frequency buckets without the
+    unpartitioned ``ntile`` window (see ``customer_spend_quartiles``'s
+    scale note).
+    """
+    df, _, small = size_gate(df, "global_row_number")
+    if not small:
+        return _row_number_scaffold(df, order_cols, out_col, num_partitions)
+    # one sorted partition → monotonically_increasing_id IS the 0-based
+    # position (partition 0 contributes no high bits)
+    return (
+        df.coalesce(1)
+        .sortWithinPartitions(*[F.col(c) for c in order_cols])
+        .withColumn(out_col, (F.monotonically_increasing_id() + 1).cast("long"))
+    )
+
+
+def global_cumsum(
+    df: DataFrame,
+    order_cols: list[str],
+    sum_cols: list[str],
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """Running totals of ``sum_cols`` in ``order_cols`` order WITHOUT the
+    single-reducer ``sum() OVER (ORDER BY ...)`` collapse. ``order_cols``
+    should be a total order for a deterministic result; ``sum_cols``
+    must be integer-typed (the offsets add exactly in any schedule —
+    the same order-insensitivity discipline as the fixed-point
+    aggregates elsewhere).
+
+    Output: the input columns plus ``cum_<c>`` for each ``c`` in
+    ``sum_cols``.
+
+    Size-adaptive (:func:`size_gate`): every caller feeds this a
+    DISTINCT-VALUE counts table, so the input is usually bounded by the
+    value domain, not the row count — at that size the scaffold's fixed
+    cost dwarfs the work. Inputs of at most
+    ``SMALL_ROWS["global_cumsum"]`` rows take ONE sorted single-
+    partition Arrow pass (explicit ``coalesce(1)``); larger inputs run
+    :func:`_prefix_scaffold` over the already-pinned input.
+    """
+    from pyspark.sql import types as T
+
+    df, _, small = size_gate(df, "global_cumsum")
+    if not small:
+        return _prefix_scaffold(df, order_cols, sum_cols, num_partitions)
+    small_schema = T.StructType(
+        list(df.schema.fields)
+        + [T.StructField(f"cum_{c}", T.LongType(), True) for c in sum_cols]
+    )
+    return (
+        df.coalesce(1)
+        .sortWithinPartitions(*[F.col(c) for c in order_cols])
+        .mapInArrow(_running_sums(sum_cols, "cum_"), small_schema)
     )
 
 
@@ -1535,137 +1650,6 @@ def hbos_scores(
     )
 
 
-def global_cumsum(
-    df: DataFrame,
-    order_cols: list[str],
-    sum_cols: list[str],
-    num_partitions: int | None = None,
-    local_max_rows: int = 2_000_000,
-    known_n: int | None = None,
-) -> DataFrame:
-    """Running totals of ``sum_cols`` in ``order_cols`` order WITHOUT the
-    single-reducer ``sum() OVER (ORDER BY ...)`` collapse — the cumsum
-    sibling of :func:`global_row_number`, same three-step plan: range
-    shuffle + in-partition sort, one Arrow pass stamping per-partition
-    local running totals, then per-partition sums (a ≤ num_partitions-row
-    aggregate) prefix-summed on the driver and broadcast back as
-    offsets. Every partition works independently; nothing sorts the
-    world. ``order_cols`` should be a total order for a deterministic
-    result; ``sum_cols`` must be integer-typed (the offsets add exactly
-    in any schedule — the same order-insensitivity discipline as the
-    fixed-point aggregates elsewhere).
-
-    Output: the input columns plus ``cum_<c>`` for each ``c`` in
-    ``sum_cols``.
-
-    Size-adaptive small branch (r9): every caller feeds this a
-    DISTINCT-VALUE counts table, so the input is usually bounded by
-    the value domain, not the row count — at that size the scaffold's
-    fixed cost (range-shuffle sample job + pin + per-partition-totals
-    collect + broadcast join, ~0.9 s at any input size) dwarfs the
-    work. The gate (lazy localCheckpoint + count — the probe IS the
-    materialization the scaffold paid anyway) routes inputs ≤
-    ``local_max_rows`` to ONE sorted single-partition Arrow pass (the
-    ``_seq_cumsum`` idiom, explicit ``coalesce(1)``); larger inputs
-    run the scaffold over the already-materialized checkpoint
-    unchanged. ``local_max_rows=0`` disables the gate; ``known_n``
-    skips the probe when the caller already counted.
-    """
-    from pyspark.sql import types as T
-
-    spark = df.sparkSession
-    if known_n is None and local_max_rows > 0:
-        df = df.localCheckpoint(eager=False)
-        known_n = df.count()
-    if known_n is not None and local_max_rows > 0 and known_n <= local_max_rows:
-        small_schema = T.StructType(
-            list(df.schema.fields)
-            + [T.StructField(f"cum_{c}", T.LongType(), True) for c in sum_cols]
-        )
-
-        def running_single(batches):
-            # arrow-native (mapInArrow, not mapInPandas): the order
-            # column is often DECIMAL, which pandas converts to Python
-            # Decimal objects row by row — pyarrow passes it through as
-            # untouched decimal128 buffers and the int64 cumsum runs
-            # vectorized (guide §4.2)
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            carry = {c: 0 for c in sum_cols}
-            for batch in batches:
-                names = list(batch.schema.names)
-                cols = list(batch.columns)
-                for c in sum_cols:
-                    col = pc.cast(batch.column(names.index(c)), pa.int64())
-                    cs = pc.add(pc.cumulative_sum_checked(col), carry[c])
-                    if batch.num_rows:
-                        carry[c] = cs[batch.num_rows - 1].as_py()
-                    cols.append(cs)
-                    names.append(f"cum_{c}")
-                yield pa.RecordBatch.from_arrays(cols, names=names)
-
-        return (
-            df.coalesce(1)
-            .sortWithinPartitions(*[F.col(c) for c in order_cols])
-            .mapInArrow(running_single, small_schema)
-        )
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    cols = [F.col(c) for c in order_cols]
-    ranged = df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
-    out_schema = T.StructType(
-        list(ranged.schema.fields)
-        + [T.StructField("__pid", T.IntegerType(), False)]
-        + [T.StructField(f"__lcs_{c}", T.LongType(), False) for c in sum_cols]
-    )
-
-    def running(batches):
-        # arrow-native for the same reason as global_row_number's
-        # stamping pass: decimal order columns stay decimal128 buffers
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        carry = {c: 0 for c in sum_cols}
-        for batch in batches:
-            names = list(batch.schema.names)
-            cols = list(batch.columns)
-            cols.append(pa.array(np.full(batch.num_rows, pid, dtype="int32")))
-            names.append("__pid")
-            for c in sum_cols:
-                col = pc.cast(batch.column(names.index(c)), pa.int64())
-                cs = pc.add(pc.cumulative_sum_checked(col), carry[c])
-                if batch.num_rows:
-                    carry[c] = cs[batch.num_rows - 1].as_py()
-                cols.append(cs)
-                names.append(f"__lcs_{c}")
-            yield pa.RecordBatch.from_arrays(cols, names=names)
-
-    local = ranged.mapInArrow(running, out_schema).localCheckpoint(
-        eager=False
-    )
-    totals = sorted(
-        (r["__pid"], tuple(r[f"__t_{c}"] for c in sum_cols))
-        for r in local.groupBy("__pid")
-        .agg(*[F.sum(c).alias(f"__t_{c}") for c in sum_cols])
-        .collect()
-    )
-    offsets, acc = [], [0] * len(sum_cols)
-    for pid, tots in totals:
-        offsets.append((pid, *acc))
-        acc = [a + (t or 0) for a, t in zip(acc, tots)]
-    off_schema = "__pid int, " + ", ".join(f"__off_{c} long" for c in sum_cols)
-    off_df = spark.createDataFrame(offsets, off_schema)
-    out = local.join(F.broadcast(off_df), "__pid")
-    for c in sum_cols:
-        out = out.withColumn(f"cum_{c}", F.col(f"__off_{c}") + F.col(f"__lcs_{c}"))
-    return out.drop(
-        "__pid", *[f"__lcs_{c}" for c in sum_cols], *[f"__off_{c}" for c in sum_cols]
-    )
-
-
 def ks_two_sample(
     df_a: DataFrame,
     df_b: DataFrame,
@@ -1822,9 +1806,6 @@ def mann_whitney_u_tagged(
     )
 
 
-_RANK_LOCAL_MAX = 8_000_000  # single-task rank-selection bound (doubles)
-
-
 def theil_sen(
     series: DataFrame,
     x_col: str = "x",
@@ -1838,8 +1819,9 @@ def theil_sen(
 
     Exactness discipline: slopes and intercepts are quantized to
     1e-9 fixed point and the MEDIAN IS RANK-DEFINED — the value at
-    row_number (n+1)//2 in slope order, found with the range-shuffle
-    :func:`global_row_number`, NOT an interpolating percentile whose
+    row_number (n+1)//2 in slope order (one sorted task up to
+    ``SMALL_ROWS["theil_sen"]`` pairs, the range-shuffle row-number
+    scaffold above), NOT an interpolating percentile whose
     arithmetic differs between engines. Ties are harmless: ranks
     within a tie block are arbitrary but the VALUE at the target rank
     is unique, so the result is deterministic and hash-matches the
@@ -1849,8 +1831,8 @@ def theil_sen(
     — the documented STL/Kaplan-Meier exception); the pair space is
     |series|², generated by a range self-join at day grain, never over
     raw facts. For multi-year daily series that is ~10⁶–10⁷ slope
-    rows — a small shuffle, and the two median passes are
-    global_row_number folds over it.
+    rows — a small shuffle, and the two median passes are rank
+    selections over it.
 
     Output: ONE row — n_points, n_pairs, the exact fixed-point medians
     (slope_q, intercept_q, 1e-9 units) and their double views.
@@ -1918,13 +1900,12 @@ def theil_sen(
         # 1-partition sort, never a silent Window collapse) and the
         # single sorted task streams to the target rank. Bounded input
         # by contract (daily-grain pair space ~2.9M rows at every SF —
-        # docstring); above ``_RANK_LOCAL_MAX`` fall back to the
+        # docstring); above ``SMALL_ROWS["theil_sen"]`` fall back to the
         # range-shuffle scaffold over a pinned copy.
         target = (n + 1) // 2
-        if n > _RANK_LOCAL_MAX:
-            df = df.localCheckpoint(eager=False)
-            ranked = global_row_number(
-                df, [col], out_col="__rn", local_max_rows=0, known_n=n
+        if n > SMALL_ROWS["theil_sen"]:
+            ranked = _row_number_scaffold(
+                df.localCheckpoint(eager=False), [col], "__rn"
             )
         else:
             ranked = (

@@ -539,7 +539,7 @@ def test_new_tpch_shapes_join_strategies(spark):
     assert "LeftAnti, BuildRight" in plan_ps  # broadcast anti-join
 
 
-def test_global_row_number_matches_window(spark):
+def test_global_row_number_matches_window(spark, monkeypatch):
     """global_row_number under a scrambled multi-partition input must
     equal the single-partition row_number window (the semantics oracle),
     and the persisted numbering must be stable across re-reads."""
@@ -547,6 +547,7 @@ def test_global_row_number_matches_window(spark):
     from pyspark.sql import functions as F
 
     from dea05_e2e_kafka_streaming_pipeline_spark.plans.analytics import (
+        SMALL_ROWS,
         global_row_number,
     )
 
@@ -566,14 +567,13 @@ def test_global_row_number_matches_window(spark):
         ).collect()
     }
     assert got == want
-    # both branches of the r9 size gate must agree with the oracle:
-    # the default above routed 1000 rows to the Coalesce(1) JVM branch;
-    # local_max_rows=0 forces the range-shuffle scaffold
+    # both branches of the size gate must agree with the oracle: the
+    # default above routed 1000 rows to the Coalesce(1) JVM branch; a
+    # zero bound forces the range-shuffle scaffold
+    monkeypatch.setitem(SMALL_ROWS, "global_row_number", 0)
     got_scaffold = {
         (r.key, r.id): r.rn
-        for r in global_row_number(
-            df, ["key", "id"], num_partitions=5, local_max_rows=0
-        ).collect()
+        for r in global_row_number(df, ["key", "id"], num_partitions=5).collect()
     }
     assert got_scaffold == want
 
@@ -615,13 +615,14 @@ def test_ndcg_eval_perfect_and_reversed(spark):
     assert worse.dcg_micro < worse.idcg_micro
 
 
-def test_global_cumsum_matches_window(spark):
+def test_global_cumsum_matches_window(spark, monkeypatch):
     """global_cumsum under a scrambled multi-partition input equals the
     single-partition SUM() OVER (ORDER BY) window on every row."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from dea05_e2e_kafka_streaming_pipeline_spark.plans.analytics import (
+        SMALL_ROWS,
         global_cumsum,
     )
 
@@ -648,13 +649,12 @@ def test_global_cumsum_matches_window(spark):
         ).collect()
     }
     assert got == want
-    # both branches of the r9 size gate must agree with the oracle
+    # both branches of the size gate must agree with the oracle
     # (default above = arrow single-partition branch; 0 = scaffold)
+    monkeypatch.setitem(SMALL_ROWS, "global_cumsum", 0)
     got_scaffold = {
         (r.key): (r.cum_x, r.cum_y)
-        for r in global_cumsum(
-            df, ["key"], ["x", "y"], num_partitions=5, local_max_rows=0
-        ).collect()
+        for r in global_cumsum(df, ["key"], ["x", "y"], num_partitions=5).collect()
     }
     assert got_scaffold == want
 
@@ -703,18 +703,22 @@ def test_ks_two_sample_no_unpartitioned_window(spark):
     assert "Coalesce 1" in plan or "rangepartitioning" in plan
 
 
-def test_global_cumsum_scaffold_above_gate_uses_range_shuffle(spark):
-    """With the size gate disabled, global_cumsum must keep the
+def test_global_cumsum_scaffold_above_gate_uses_range_shuffle(
+    spark, monkeypatch
+):
+    """Above the size gate, global_cumsum must keep the
     range-shuffle scaffold: no Window operator, rangepartitioning
     present — the 100 TB contract for above-gate inputs."""
     from dea05_e2e_kafka_streaming_pipeline_spark.plans.analytics import (
+        SMALL_ROWS,
         global_cumsum,
     )
 
     df = spark.range(0, 300).selectExpr(
         "cast(id as double) as v", "id % 7 + 1 as c"
     )
-    out = global_cumsum(df, ["v"], ["c"], local_max_rows=0)
+    monkeypatch.setitem(SMALL_ROWS, "global_cumsum", 0)
+    out = global_cumsum(df, ["v"], ["c"])
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
     # the scaffold signature: the numbered stream is a pinned RDD scan
@@ -778,6 +782,32 @@ def test_theil_sen_ignores_outliers_on_known_line(spark):
     assert r.n_points == 30 and r.n_pairs == 30 * 29 // 2
     assert r.slope_q == 3_000_000_000  # exactly 3 in 1e-9 units
     assert r.intercept_q == 7_000_000_000
+
+
+def test_theil_sen_above_rank_bound_matches_one_task_branch(spark, monkeypatch):
+    """Above ``SMALL_ROWS["theil_sen"]`` both medians come from the
+    range-shuffle row-number scaffold instead of the one-task sort; the
+    output row must be identical — on the outlier line and on a series
+    with tied x (no pair), tied slopes and an even pair count."""
+    from dea05_e2e_kafka_streaming_pipeline_spark.plans.analytics import (
+        SMALL_ROWS,
+        theil_sen,
+    )
+
+    line = [(float(x), 3.0 * x + 7.0) for x in range(30)]
+    line[5] = (5.0, 500.0)
+    line[20] = (20.0, -400.0)
+    noisy = [
+        (float(i % 13), float(i * 7919 % 101) + 0.25 * (i % 3)) for i in range(38)
+    ]
+    frames = [
+        spark.createDataFrame(pts, "x double, y double") for pts in (line, noisy)
+    ]
+    one_task = [theil_sen(df, "x", "y").collect() for df in frames]
+    monkeypatch.setitem(SMALL_ROWS, "theil_sen", 0)
+    scaffold = [theil_sen(df, "x", "y").collect() for df in frames]
+    assert scaffold == one_task
+    assert one_task[1][0].n_pairs % 2 == 0
 
 
 def test_spearman_known_values_and_tie_invariance(spark):

@@ -785,13 +785,15 @@ def test_residual_ivfpq_quantizes_finer_than_raw_pq(spark):
     assert res_err < raw_err * 0.7  # residuals quantize markedly finer
 
 
-def test_cc_auto_matches_distributed_and_gates(spark):
+def test_cc_auto_matches_distributed_and_gates(spark, monkeypatch):
     """algorithm='auto': driver union-find output equals the
     distributed label loop; with a tiny edge gate it falls back to the
     distributed path (same answer either way)."""
+    from dea05_e2e_kafka_streaming_pipeline_spark.operators import dedup
     from dea05_e2e_kafka_streaming_pipeline_spark.operators.dedup import (
         connected_components,
     )
+    from dea05_e2e_kafka_streaming_pipeline_spark.plans.analytics import SMALL_ROWS
 
     docs = spark.createDataFrame([(i,) for i in range(12)], "doc_id long")
     # two chains and one isolated cluster: 0-1-2-3, 5-6, 8-9-10
@@ -806,12 +808,16 @@ def test_cc_auto_matches_distributed_and_gates(spark):
     )
     assert got_auto == want
     # gate: max 2 edges → must fall back to the distributed loop
+    monkeypatch.setitem(SMALL_ROWS, "connected_components", 2)
+
+    def no_driver(*args, **kwargs):
+        raise AssertionError("driver union-find ran over the gate")
+
+    monkeypatch.setattr(dedup, "_cc_driver", no_driver)
     got_gated = sorted(
         map(
             tuple,
-            connected_components(
-                docs, pairs, algorithm="auto", driver_max_edges=2
-            ).collect(),
+            connected_components(docs, pairs, algorithm="auto").collect(),
         )
     )
     assert got_gated == want

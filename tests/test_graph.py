@@ -174,12 +174,13 @@ def test_kcore_empty_result(spark):
     assert got == {}
 
 
-def test_kcore_driver_and_distributed_branches_agree(spark):
+def test_kcore_driver_and_distributed_branches_agree(spark, monkeypatch):
     """The r9 compact numpy peel (under the size gate) and the
     distributed loop (gate forced to 0) must reach the identical
     fixpoint — including the cascading pendant chain and a k above
     every degree."""
     from dea05_e2e_kafka_streaming_pipeline_spark.operators.graph import k_core
+    from dea05_e2e_kafka_streaming_pipeline_spark.plans.analytics import SMALL_ROWS
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (2, 1), (5, 5), (4, 1)],
@@ -189,10 +190,11 @@ def test_kcore_driver_and_distributed_branches_agree(spark):
         a = sorted(
             (r.v, r.core_degree) for r in k_core(edges, k).collect()
         )
-        b = sorted(
-            (r.v, r.core_degree)
-            for r in k_core(edges, k, driver_max_edges=0).collect()
-        )
+        with monkeypatch.context() as m:
+            m.setitem(SMALL_ROWS, "k_core", 0)
+            b = sorted(
+                (r.v, r.core_degree) for r in k_core(edges, k).collect()
+            )
         assert a == b, f"k={k}: driver {a} != distributed {b}"
 
 

@@ -7,13 +7,14 @@ the omission impossible to repeat silently: it runs each step in order,
 stops on the first failure, and prints the artifact manifest at the end.
 
     python tools/round_close.py --round 8            # everything
-    python tools/round_close.py --round 8 --skip pytest,x100_sweep
+    python tools/round_close.py --round 8 --skip pytest,sweep_x100
 
 Steps (each gated on the previous):
   pytest        python -m pytest tests/ -q
   sweep_sf001   full-registry sf0.01 sweep  -> CORRECTNESS_full_r{N}.json
   sweep_x10     tools/x10_sweep.py          -> CORRECTNESS_x10_r{N}.json
-  sweep_x100    tools/x100_sweep.py @ 8 GiB -> CORRECTNESS_x100_r{N}.json
+  sweep_x100    tools/x100_sweep_chunked.py @ 8 GiB
+                                            -> CORRECTNESS_x100_r{N}.json
   bench_sf01    bench.py @ sf0.1            -> bench_metrics.json
   bench_x10     bench.py @ x10              -> bench_metrics_x10.json
   bench_x100    constrained x10-subset + x100 runs + tools/x100_ledger.py
@@ -87,7 +88,7 @@ def main() -> int:
 
     x100_out = f"CORRECTNESS_x100_r{n:02d}.json"
     step("sweep_x100", lambda: _run(
-        [py, "tools/x100_sweep.py", "testdata_x100/sf10", x100_out],
+        [py, "tools/x100_sweep_chunked.py", "testdata_x100/sf10", x100_out],
         {"SPARK_GRAFT_DRIVER_MEM": "8g"},
     ))
     artifacts.append(x100_out)
