@@ -9,9 +9,10 @@ different execution plan:
 **The reference runs one Spark job per column/rule** (a ``.filter().count()``
 inside a loop — O(checks) full scans). **This engine folds every
 completeness/accuracy/volume check into ONE aggregate job** over the input
-(conditional-sum pattern), and each referential-integrity check into one
-anti-join job. At 100 TB the difference is "12 scans" vs "1 scan + 1
-broadcast anti-join".
+(conditional-sum pattern); each referential-integrity check is an
+existence-join marker column summed inside that same aggregate. At
+100 TB the difference is "12 scans" vs "1 scan + 1 broadcast existence
+join".
 
 Faithful semantics preserved:
 
@@ -71,8 +72,9 @@ class _VolumeCheck:
 
 
 class DataQualityValidator:
-    """Fluent DQ check builder; ``report()`` executes everything in
-    one aggregate job plus one anti-join job per consistency check.
+    """Fluent DQ check builder; ``report()`` and ``passed()`` execute
+    everything in one aggregate job, with one existence-join marker per
+    consistency check inside it.
 
     Usage (mirrors reference curated/data_quality.py:137-157)::
 
@@ -123,12 +125,13 @@ class DataQualityValidator:
         """Referential integrity: % of rows whose ``key`` has no match in
         ``dim`` (reference data_quality.py:74-91, left-anti join).
 
-        ``broadcast_dim=True`` (default) force-broadcasts the distinct
-        dim-key set — right for real dimensions (the reference's
-        customers dim has ≤50 keys). Pass ``False`` for fact-to-fact FK
-        checks whose key set is unbounded: the marker join then falls
-        back to whatever strategy AQE picks (shuffle join at scale),
-        instead of OOMing the driver on an unbroadcastable build side."""
+        ``broadcast_dim=True`` (default) force-broadcasts the dim's key
+        column as the existence join's build side — right for real
+        dimensions (the reference's customers dim has ≤50 keys). Pass
+        ``False`` for fact-to-fact FK checks whose key set is unbounded:
+        the marker join then falls back to whatever strategy AQE picks
+        (shuffle join at scale), instead of OOMing the driver on an
+        unbroadcastable build side."""
         self._consistency.append(
             _ConsistencyCheck(check_name, dim, key, threshold_pct, broadcast_dim)
         )
@@ -143,30 +146,26 @@ class DataQualityValidator:
 
     # -- execution --------------------------------------------------------
 
-    def report(self) -> DataFrame:
-        """Long-format report DataFrame (one row per check).
+    def _aggregate(self) -> DataFrame:
+        """The one-row aggregate every check is read from: ``__total``,
+        one failure count per completeness/accuracy check (``__c{i}``)
+        and one orphan count per consistency check (``__k{j}``).
 
-        Physical shape: **one pass over the fact table**. Consistency
-        checks become broadcast LEFT joins against the (distinct) dim
-        keys with a hit-marker column, so orphan counting is just another
-        conditional sum in the same aggregate as completeness/accuracy —
-        no separate anti-join jobs, no second scan. One explode turns the
-        1-row aggregate into the long-format report.
-        """
-        spark = self._df.sparkSession
-
-        # Augment the fact side with one hit-marker per FK check. Dim keys
-        # are deduplicated so the left join cannot fan out fact rows.
+        Each consistency check adds a hit-marker column to the fact side
+        as an IN-subquery against the dim's key column, which Spark plans
+        as an ExistenceJoin: one boolean per fact row whatever the dim's
+        key multiplicity, so the dim keys need no per-batch distinct.
+        The marker is ``coalesce(key IN dim, false)``: a NULL fact key,
+        or a miss against a dim holding NULL keys, is an orphan — the
+        reference's left-anti semantics."""
         aug = self._df
         for j, con in enumerate(self._consistency):
-            dim_keys = (
-                con.dim.select(F.col(con.key))
-                .distinct()
-                .withColumn(f"__dim{j}", F.lit(1))
-            )
+            dim_keys = con.dim.select(F.col(con.key))
             if con.broadcast_dim:
                 dim_keys = F.broadcast(dim_keys)
-            aug = aug.join(dim_keys, con.key, "left")
+            aug = aug.withColumn(
+                f"__dim{j}", F.coalesce(F.col(con.key).isin(dim_keys), F.lit(False))
+            )
 
         aggs = [F.count(F.lit(1)).cast("long").alias("__total")]
         for i, chk in enumerate(self._agg_checks):
@@ -176,14 +175,25 @@ class DataQualityValidator:
                 .alias(f"__c{i}")
             )
         for j, _con in enumerate(self._consistency):
-            # NULL marker ⇔ no dim match ⇔ orphan (NULL fact keys never
-            # match — same as the reference's left-anti semantics)
             aggs.append(
-                F.sum(F.when(F.col(f"__dim{j}").isNull(), 1).otherwise(0))
+                F.sum(F.when(F.col(f"__dim{j}"), 0).otherwise(1))
                 .cast("long")
                 .alias(f"__k{j}")
             )
-        base = aug.agg(*aggs)  # 1 row
+        return aug.agg(*aggs)
+
+    def report(self) -> DataFrame:
+        """Long-format report DataFrame (one row per check).
+
+        Physical shape: **one pass over the fact table**. Consistency
+        checks are existence-join hit markers (see :meth:`_aggregate`),
+        so orphan counting is just another conditional sum in the same
+        aggregate as completeness/accuracy — no separate anti-join jobs,
+        no second scan. One explode turns the 1-row aggregate into the
+        long-format report.
+        """
+        spark = self._df.sparkSession
+        base = self._aggregate()  # 1 row
 
         # All scan-side checks come off the single aggregate row via ONE
         # explode — no union of N copies of the aggregate subtree, no
@@ -285,9 +295,21 @@ class DataQualityValidator:
 
     def passed(self) -> bool:
         """True iff every check PASSes (drives the gate). Collects the
-        tiny report — never the data."""
-        rows = self.report().select("status").collect()
-        return all(r.status == "PASS" for r in rows)
+        one aggregate row and applies :meth:`report`'s rules to it on
+        the driver — strict ``<`` against each threshold, 0% on empty
+        input, volume PASS iff ``min <= total <= max`` — never the
+        data."""
+        row = self._aggregate().collect()[0]
+        total = row["__total"]
+        failed = [
+            (row[f"__c{i}"], chk.threshold_pct) for i, chk in enumerate(self._agg_checks)
+        ] + [
+            (row[f"__k{j}"], con.threshold_pct) for j, con in enumerate(self._consistency)
+        ]
+        in_bounds = all(v.expected_min <= total <= v.expected_max for v in self._volume)
+        return in_bounds and all(
+            (n * 100.0 / total if total else 0.0) < float(t) for n, t in failed
+        )
 
     def write_report(self, path: str) -> dict:
         """Land :meth:`summary` as one JSON object at ``path`` — the

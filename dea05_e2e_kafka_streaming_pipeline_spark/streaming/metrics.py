@@ -4,11 +4,12 @@ its consumer loop prints nothing but errors,
 ``ingestion/s3-orders-ingestion.py``).
 
 A ``StreamingQueryListener`` receives every micro-batch's progress
-driver-side — rows read, processing rate, batch duration, sink — with
-ZERO cost on the executor path (the engine already computes these; the
-listener only observes). Collected rows land in memory and optionally a
-JSONL file, the shape a metrics shipper (CloudWatch/Prometheus
-sidecar) would tail in production.
+driver-side — rows read, processing rate, batch duration and its
+phases, observed DQ counters, sink — with ZERO cost on the executor
+path (the engine already computes these; the listener only observes).
+Collected rows land in memory and optionally a JSONL file, the shape a
+metrics shipper (CloudWatch/Prometheus sidecar) would tail in
+production.
 """
 
 from __future__ import annotations
@@ -24,10 +25,14 @@ class MetricsListener(StreamingQueryListener):
 
     ``progress`` holds one dict per completed micro-batch:
     query_id / batch_id / num_input_rows / processed_rows_per_second /
-    batch_duration_ms / sink / timestamp. ``started`` maps query id →
-    name at start; ``terminated`` maps query id → exception string (None
-    for clean stops). Pass ``jsonl_path`` to also append each row as a
-    JSON line (the production tail-me file)."""
+    batch_duration_ms / sink / timestamp, plus ``duration_ms`` (the
+    progress's ``durationMs`` phase dict: addBatch, getBatch,
+    queryPlanning, walCommit, triggerExecution, ...) and
+    ``observed_metrics`` (``observedMetrics``: observation name → its
+    counters as a dict, e.g. from :func:`observe_quality`). ``started``
+    maps query id → name at start; ``terminated`` maps query id →
+    exception string (None for clean stops). Pass ``jsonl_path`` to also
+    append each row as a JSON line (the production tail-me file)."""
 
     def __init__(self, jsonl_path: str | None = None) -> None:
         self.progress: list[dict] = []
@@ -48,11 +53,13 @@ class MetricsListener(StreamingQueryListener):
             "batch_duration_ms": getattr(p, "batchDuration", None),
             "sink": p.sink.description,
             "timestamp": p.timestamp,
+            "duration_ms": dict(p.durationMs),
+            "observed_metrics": {k: v.asDict() for k, v in p.observedMetrics.items()},
         }
         self.progress.append(row)
         if self._path:
             with open(self._path, "a") as f:
-                f.write(json.dumps(row) + "\n")
+                f.write(json.dumps(row, default=str) + "\n")
 
     def onQueryIdle(self, event) -> None:  # noqa: N802
         pass

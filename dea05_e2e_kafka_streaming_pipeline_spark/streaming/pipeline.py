@@ -26,7 +26,7 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -138,18 +138,28 @@ def upsert_batch_into_parquet(
     crashed half-committed write converges on the next attempt, which
     is what makes the streaming wrapper effectively-once end to end.
 
+    Each touched bucket is rewritten as ONE file by ONE task: the merged
+    frame is repartitioned by bucket before the write, so a batch adds
+    one file per touched bucket however many partitions the merge ran
+    on (no file, ``.crc`` and commit rename per task per bucket, and no
+    file count growing with the number of batches). A bucket is thus
+    one task's work: pick ``n_buckets`` so a bucket stays near one
+    task's worth of bytes.
+
     A bucket whose last key is deleted yields zero output rows, which
     dynamic overwrite alone would leave stale — those partitions are
     explicitly dropped (driver-side filesystem metadata op, the same
-    discipline any parquet table manager applies).
+    discipline any parquet table manager applies). The buckets still
+    present are observed on the write itself, not by a second job.
+
+    An empty batch returns before any read or write: the one job that
+    lists the touched buckets also decides emptiness.
     """
     spark = batch.sparkSession
     meta = {op_col, ts_col} | ({seq_col} if seq_col else set())
     data_cols = [c for c in batch.columns if c not in meta]
     bucket = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
-    affected = sorted(
-        r.bucket for r in batch.select(bucket.alias("bucket")).distinct().collect()
-    )
+    affected = sorted(batch.agg(F.collect_set(bucket)).collect()[0][0])
     if not affected:
         return
     try:
@@ -169,17 +179,19 @@ def upsert_batch_into_parquet(
             target, batch, key, ts_col=ts_col, op_col=op_col, seq_col=seq_col
         )
         .withColumn("bucket", bucket)
+        .repartition("bucket")
         # materialize BEFORE overwriting the directory the plan reads
         .localCheckpoint(eager=True)
     )
+    written = Observation()
     (
-        merged.write.mode("overwrite")
+        merged.observe(written, F.collect_set("bucket").alias("present"))
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")
         .parquet(target_dir)
     )
-    present = {r.bucket for r in merged.select("bucket").distinct().collect()}
-    emptied = set(affected) - present
+    emptied = set(affected) - set(written.get["present"])
     if emptied:
         jvm = spark.sparkContext._jvm
         conf = spark.sparkContext._jsc.hadoopConfiguration()
@@ -215,8 +227,6 @@ def stream_upsert_sink(
     its Delta flavor implies (mage-programs/orders_delta_lake.py:53)."""
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         upsert_batch_into_parquet(
             batch_df,
             target_dir,

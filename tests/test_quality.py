@@ -183,6 +183,87 @@ def test_consistency_broadcast_opt_out(spark):
     assert "broadcast" not in plan_free.lower()
 
 
+def _fk_frames(spark):
+    """Facts with a NULL key and an orphan (4); a dim with duplicate and
+    NULL keys — the fan-out and NULL-IN cases of the FK marker."""
+    facts = spark.createDataFrame(
+        [(1,), (1,), (2,), (None,), (3,), (4,)], "customer_id int"
+    )
+    dim = spark.createDataFrame(
+        [(1,), (1,), (1,), (2,), (None,), (3,)], "customer_id int"
+    )
+    return facts, dim
+
+
+def _agreement_case(spark, case):
+    if case.startswith("empty"):
+        df = spark.range(0).select(F.col("id").alias("order_id"))
+        lo = 0 if case == "empty" else 1
+        return DataQualityValidator(df).check_completeness(["order_id"]).check_volume(lo, 10)
+    if case in ("at_threshold", "under_threshold"):
+        rate = 0.05 if case == "at_threshold" else 0.049
+        df = _orders_with_nulls(spark, 1000, rate)
+        return DataQualityValidator(df).check_completeness(["customer_id"], threshold_pct=5.0)
+    if case.startswith("null_rule"):
+        # 1 violation in 3 rows (the NULL row is not one): 33.3%
+        df = spark.createDataFrame([(None,), (5.0,), (-1.0,)], "order_amount double")
+        t = 34.0 if case == "null_rule_pass" else 33.0
+        return DataQualityValidator(df).check_accuracy(
+            "positive_amount", F.col("order_amount") > 0, threshold_pct=t
+        )
+    if case.startswith("volume"):
+        lo, hi = (500, 500) if case == "volume_at_bounds" else (501, 1000)
+        return DataQualityValidator(spark.range(500)).check_volume(lo, hi)
+    facts, dim = _fk_frames(spark)  # 2 orphans in 6 rows: 33.3%
+    t = 34.0 if case == "fk_pass" else 33.0
+    return DataQualityValidator(facts).check_consistency(
+        "fk", dim, "customer_id", threshold_pct=t
+    )
+
+
+@pytest.mark.parametrize(
+    "case,expected",
+    [
+        ("empty", True),
+        ("empty_under_volume", False),
+        ("at_threshold", False),
+        ("under_threshold", True),
+        ("null_rule_pass", True),
+        ("null_rule_fail", False),
+        ("volume_at_bounds", True),
+        ("volume_out_of_bounds", False),
+        ("fk_pass", True),
+        ("fk_fail", False),
+    ],
+)
+def test_passed_agrees_with_report(spark, case, expected):
+    """passed() decides on the driver from the one aggregate row; it must
+    give exactly report()'s verdict: strict < at the threshold, 0% on
+    empty input, NULL rule results not violations, inclusive volume
+    bounds, NULL and duplicate keys on either side of an FK check."""
+    v = _agreement_case(spark, case)
+    statuses = [r.status for r in v.report().collect()]
+    assert v.passed() is expected
+    assert all(s == "PASS" for s in statuses) is expected
+
+
+def test_consistency_marker_is_existence_join(spark):
+    """The FK marker is an IN-subquery planned as an ExistenceJoin: NULL
+    fact keys and misses against a dim holding NULL keys are orphans,
+    duplicate dim keys cannot fan out fact rows, and the dim side needs
+    no distinct (the only Aggregate is the report's one)."""
+    facts, dim = _fk_frames(spark)
+    for broadcast_dim in (True, False):
+        v = DataQualityValidator(facts).check_consistency(
+            "fk", dim, "customer_id", broadcast_dim=broadcast_dim
+        )
+        (row,) = v.report().collect()
+        assert (row.total_rows, row.failed_count) == (6, 2)
+        plan = v.report()._jdf.queryExecution().optimizedPlan().toString()
+        assert "ExistenceJoin" in plan
+        assert plan.count("Aggregate") == 1
+
+
 def test_write_report_lands_summary_json(spark, tmp_path):
     import json
 

@@ -493,6 +493,41 @@ def test_upsert_batch_clears_fully_deleted_buckets(spark, tmp_path):
     assert list(target.glob("bucket=*")) == []
 
 
+def test_upsert_batch_writes_one_file_per_bucket(spark, tmp_path):
+    """Each touched bucket is rewritten as one file by one task, however
+    many partitions the preload and the change batches arrive in, so the
+    file count stays at one per bucket across batches."""
+    from dea05_e2e_kafka_streaming_pipeline_spark.streaming.pipeline import (
+        upsert_batch_into_parquet,
+    )
+
+    target = tmp_path / "silver"
+    preload = [(k, float(k), "r", 0) for k in range(200)]
+    upsert_batch_into_parquet(
+        _changes(spark, preload).repartition(8), str(target), key="order_id", n_buckets=4
+    )
+    state = {k: float(k) for k in range(200)}
+    for ts in (1, 2, 3):
+        rows = [(k, k + ts * 1000.0, "u", ts) for k in range(ts, 200, 7)]
+        rows += [(k, None, "d", ts) for k in range(ts + 3, 200, 11)]
+        rows += [(1000 * ts + k, 1.0, "c", ts) for k in range(20)]
+        upsert_batch_into_parquet(
+            _changes(spark, rows).repartition(4), str(target), key="order_id", n_buckets=4
+        )
+        for k, amount, op, _ in sorted(rows, key=lambda r: r[2] == "d"):
+            if op == "d":
+                state.pop(k, None)
+            else:
+                state[k] = amount
+        buckets = list(target.glob("bucket=*"))
+        assert len(buckets) == 4
+        for b in buckets:
+            assert len(list(b.glob("part-*"))) == 1, b
+    got = spark.read.parquet(str(target)).select("order_id", "amount").collect()
+    assert len(got) == len(state)
+    assert {r.order_id: r.amount for r in got} == state
+
+
 def test_stream_upsert_sink_converges_across_batches(spark, tmp_path):
     import pyspark.sql.types as T
 
@@ -880,6 +915,54 @@ def test_metrics_listener_captures_batches(spark, tmp_path):
     assert os.path.exists(jsonl)
     lines = [json.loads(line) for line in open(jsonl)]
     assert sum(r["num_input_rows"] for r in lines) == n
+
+
+def test_metrics_listener_keeps_phases_and_observed_metrics(spark, tmp_path):
+    """Each progress row the listener keeps carries the micro-batch's
+    durationMs phase breakdown and the observe_quality counters, in
+    memory and in the JSONL mirror."""
+    import json
+
+    from dea05_e2e_kafka_streaming_pipeline_spark.streaming.metrics import (
+        capture_stream_metrics,
+        observe_quality,
+    )
+
+    n = _land_events_json(spark, tmp_path / "landing", F.col("event_id") < 120)
+    n += _land_events_json(spark, tmp_path / "landing", F.col("event_id") >= 120)
+    jsonl = str(tmp_path / "metrics.jsonl")
+    with capture_stream_metrics(spark, jsonl_path=jsonl) as m:
+        stream = observe_quality(
+            file_stream(
+                spark, str(tmp_path / "landing"), EVENTS_SCHEMA, max_files_per_trigger=1
+            ),
+            name="dq",
+            required=["user_id"],
+        )
+        q = ingest_to_lake(
+            stream,
+            path=str(tmp_path / "lake"),
+            checkpoint=str(tmp_path / "ckpt"),
+            available_now=True,
+        )
+        assert q.awaitTermination(600)
+        deadline = time.time() + 30
+        while not m.terminated and time.time() < deadline:
+            time.sleep(0.5)
+    rows = [r for r in m.progress if r["num_input_rows"]]
+    assert len(rows) > 1
+    for r in rows:
+        assert {"addBatch", "getBatch", "queryPlanning", "triggerExecution"} <= set(
+            r["duration_ms"]
+        )
+        assert set(r["observed_metrics"]["dq"]) == {"rows", "null_user_id"}
+        assert r["observed_metrics"]["dq"]["rows"] == r["num_input_rows"]
+    assert sum(r["observed_metrics"]["dq"]["rows"] for r in rows) == n
+    lines = [json.loads(line) for line in open(jsonl)]
+    assert [x["duration_ms"] for x in lines] == [r["duration_ms"] for r in m.progress]
+    assert [x["observed_metrics"] for x in lines] == [
+        r["observed_metrics"] for r in m.progress
+    ]
 
 
 def test_avro_stream_sink_round_trip(spark, tmp_path):
