@@ -237,10 +237,10 @@ def _agreement_case(spark, case):
     ],
 )
 def test_passed_agrees_with_report(spark, case, expected):
-    """passed() decides on the driver from the one aggregate row; it must
-    give exactly report()'s verdict: strict < at the threshold, 0% on
-    empty input, NULL rule results not violations, inclusive volume
-    bounds, NULL and duplicate keys on either side of an FK check."""
+    """passed() gives exactly report()'s verdict, and that verdict is the
+    expected one: strict < at the threshold, 0% on empty input, NULL
+    rule results not violations, inclusive volume bounds, NULL and
+    duplicate keys on either side of an FK check."""
     v = _agreement_case(spark, case)
     statuses = [r.status for r in v.report().collect()]
     assert v.passed() is expected
