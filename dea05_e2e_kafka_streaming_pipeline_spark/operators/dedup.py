@@ -33,6 +33,9 @@ from dea05_e2e_kafka_streaming_pipeline_spark.operators.text import (
     tokens,
     word_shingles,
 )
+from dea05_e2e_kafka_streaming_pipeline_spark.sources.registry import (
+    read_parquet_or_none,
+)
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -1214,22 +1217,21 @@ def dedup_incremental_batch(
     bodies, and at 100 TB the store is bucketable by digest prefix so
     the join co-partitions. The store append is the only write —
     callers land the surviving documents wherever the pipeline puts
-    them. First call (no store yet) admits the whole deduped batch.
+    them. First call (no store yet) admits the whole deduped batch; a
+    store that exists but cannot be read fails the call rather than
+    re-admitting everything it holds.
     """
-    spark = batch.sparkSession
     fp = content_fingerprint(text_col).alias("__fp")
     w = Window.partitionBy("__fp").orderBy(id_col)
-    in_batch_first = (
+    fresh = (  # first id wins within the batch
         batch.select("*", fp)
         .withColumn("__rk", F.row_number().over(w))
         .filter(F.col("__rk") == 1)
         .drop("__rk")
     )
-    try:
-        store = spark.read.parquet(store_path)
-        fresh = in_batch_first.join(store, "__fp", "left_anti")
-    except Exception:  # first batch: no store yet
-        fresh = in_batch_first
+    store = read_parquet_or_none(batch.sparkSession, store_path)
+    if store is not None:
+        fresh = fresh.join(store, "__fp", "left_anti")
     # materialize survivors before appending their fingerprints (the
     # append must not re-trigger the anti-join against a moving store)
     fresh = fresh.localCheckpoint(eager=True)

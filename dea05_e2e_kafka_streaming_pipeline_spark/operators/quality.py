@@ -191,75 +191,65 @@ class DataQualityValidator:
         aggregate as completeness/accuracy — no separate anti-join jobs,
         no second scan. One explode turns the 1-row aggregate into the
         long-format report.
+
+        Each check contributes one struct ``(check_type, check_name,
+        failed_count, denominator, threshold)``; ``total_rows``,
+        ``failed_pct`` and ``status`` are computed once, after the
+        explode. Volume is a 0/1 failure over denominator 1 with
+        threshold 100, so it PASSes iff in bounds under the same strict
+        ``<`` rule.
         """
-        spark = self._df.sparkSession
-        base = self._aggregate()  # 1 row
 
-        # All scan-side checks come off the single aggregate row via ONE
-        # explode — no union of N copies of the aggregate subtree, no
-        # reliance on physical exchange reuse.
-        entries = []
-        for i, chk in enumerate(self._agg_checks):
-            entries.append(
-                F.struct(
-                    F.lit(chk.check_type).alias("check_type"),
-                    F.lit(chk.name).alias("check_name"),
-                    F.col("__total").alias("total_rows"),
-                    F.col(f"__c{i}").alias("failed_count"),
-                    self._pct(F.col(f"__c{i}"), F.col("__total")).alias("failed_pct"),
-                    F.lit(float(chk.threshold_pct)).alias("threshold_pct"),
-                )
+        def entry(check_type, name, failed, denominator, threshold):
+            return F.struct(
+                F.lit(check_type).alias("check_type"),
+                F.lit(name).alias("check_name"),
+                failed.cast("long").alias("failed_count"),
+                denominator.alias("denominator"),
+                F.lit(float(threshold)).alias("threshold"),
             )
+
+        total = F.col("__total")
+        entries = [
+            entry(chk.check_type, chk.name, F.col(f"__c{i}"), total, chk.threshold_pct)
+            for i, chk in enumerate(self._agg_checks)
+        ]
         for vol in self._volume:
-            in_bounds = (F.col("__total") >= vol.expected_min) & (
-                F.col("__total") <= vol.expected_max
-            )
-            entries.append(
-                F.struct(
-                    F.lit("volume").alias("check_type"),
-                    F.lit(vol.name).alias("check_name"),
-                    F.col("__total").alias("total_rows"),
-                    F.when(in_bounds, F.lit(0)).otherwise(F.lit(1))
-                    .cast("long")
-                    .alias("failed_count"),
-                    F.when(in_bounds, F.lit(0.0))
-                    .otherwise(F.lit(100.0))
-                    .alias("failed_pct"),
-                    F.lit(100.0).alias("threshold_pct"),
-                )
-            )
-
-        for j, con in enumerate(self._consistency):
-            entries.append(
-                F.struct(
-                    F.lit("consistency").alias("check_type"),
-                    F.lit(con.name).alias("check_name"),
-                    F.col("__total").alias("total_rows"),
-                    F.col(f"__k{j}").alias("failed_count"),
-                    self._pct(F.col(f"__k{j}"), F.col("__total")).alias("failed_pct"),
-                    F.lit(float(con.threshold_pct)).alias("threshold_pct"),
-                )
-            )
-
+            in_bounds = (total >= vol.expected_min) & (total <= vol.expected_max)
+            failed = F.when(in_bounds, F.lit(0)).otherwise(F.lit(1))
+            one = F.lit(1).cast("long")
+            entries.append(entry("volume", vol.name, failed, one, 100.0))
+        entries += [
+            entry("consistency", con.name, F.col(f"__k{j}"), total, con.threshold_pct)
+            for j, con in enumerate(self._consistency)
+        ]
         if not entries:
+            spark = self._df.sparkSession
             return spark.createDataFrame([], schema=self._empty_schema())
 
-        out = base.select(F.explode(F.array(*entries)).alias("e")).select("e.*")
-        # strict-< threshold (reference semantics); volume uses failed_pct
-        # ∈ {0,100} with threshold 100 so PASS iff in-bounds
+        e = self._aggregate().select(
+            total.alias("total_rows"), F.explode(F.array(*entries)).alias("e")
+        )
+        # zero-guard the reference lacked: empty table → 0.0%
+        pct = F.when(
+            F.col("e.denominator") != 0,
+            F.col("e.failed_count").cast("double") * 100.0 / F.col("e.denominator"),
+        ).otherwise(F.lit(0.0))
+        out = e.select(
+            "e.check_type",
+            "e.check_name",
+            "total_rows",
+            "e.failed_count",
+            pct.alias("failed_pct"),
+            F.col("e.threshold").alias("threshold_pct"),
+        )
+        # strict-< threshold (reference semantics)
         return out.withColumn(
             "status",
             F.when(F.col("failed_pct") < F.col("threshold_pct"), "PASS").otherwise(
                 "FAIL"
             ),
         )
-
-    @staticmethod
-    def _pct(failed: Column, total: Column) -> Column:
-        # zero-guard the reference lacked: empty table → 0.0%
-        return F.when(
-            total != 0, failed.cast("double") * 100.0 / total
-        ).otherwise(F.lit(0.0))
 
     @staticmethod
     def _empty_schema():

@@ -25,6 +25,10 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dea05_e2e_kafka_streaming_pipeline_spark.sources.registry import (
+    read_parquet_or_none,
+)
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -1103,7 +1107,6 @@ def ann_index_ingest_batch(
     appends nothing (the same digest-store discipline as incremental
     dedup; the join ships ids, never vectors). Returns the admitted
     rows (id, probes, primary cell) for observability."""
-    spark = batch.sparkSession
     probed = with_ivf_probes(
         batch.filter(F.col(vec_col).isNotNull()), centroids, n_probe, vec_col
     ).select(
@@ -1112,14 +1115,12 @@ def ann_index_ingest_batch(
         "ivf_probes",
         F.element_at("ivf_probes", 1).alias("ivf_cell"),
     )
-    try:
-        seen = spark.read.parquet(index_path).select(id_col)
-        fresh = probed.join(seen, id_col, "left_anti")
-    except Exception:  # first batch: no store yet
-        fresh = probed
+    seen = read_parquet_or_none(batch.sparkSession, index_path)
+    if seen is not None:
+        probed = probed.join(seen.select(id_col), id_col, "left_anti")
     # materialize admissions before the append so the write cannot
     # re-trigger the anti-join against the store it is growing
-    fresh = fresh.localCheckpoint(eager=True)
+    fresh = probed.localCheckpoint(eager=True)
     fresh.write.mode("append").partitionBy("ivf_cell").parquet(index_path)
     return fresh
 
@@ -1208,10 +1209,10 @@ def ann_store_paths(store_root: str, version: int) -> tuple[str, str]:
 
 
 def ann_store_publish(store_root: str, version: int) -> None:
-    """Atomically commit a fully-written version: tmp-write + rename of
-    the manifest file. After this returns, ``ann_store_versions`` lists
-    the version and new readers resolve to it."""
-    import json
+    """Atomically commit a fully-written version: an atomic write of
+    the manifest file (:func:`write_json_atomic`). After this returns,
+    ``ann_store_versions`` lists the version and new readers resolve to
+    it."""
     import os
 
     index_path, state_path = ann_store_paths(store_root, version)
@@ -1219,12 +1220,8 @@ def ann_store_publish(store_root: str, version: int) -> None:
         raise FileNotFoundError(
             f"version {version} not fully written under {store_root}"
         )
-    log = os.path.join(store_root, _ANN_LOG)
-    os.makedirs(log, exist_ok=True)
-    tmp = os.path.join(log, f".v{version:06d}.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"version": version}, f)
-    os.rename(tmp, os.path.join(log, f"v{version:06d}.json"))
+    manifest = os.path.join(store_root, _ANN_LOG, f"v{version:06d}.json")
+    write_json_atomic(manifest, {"version": version})
 
 
 def ann_store_state(store_root: str, version: int | None = None) -> dict:
@@ -1300,9 +1297,6 @@ def ann_index_rebuild(
     (but before the swap is observed) is reconciled into the new
     version by the sink's first post-swap batch — see
     ``streaming.pipeline.ann_ingest_sink_versioned``."""
-    import json
-    import os
-
     versions = ann_store_versions(store_root)
     if not versions:
         raise FileNotFoundError(f"no committed ANN versions under {store_root}")
@@ -1325,11 +1319,7 @@ def ann_index_rebuild(
     )
     probed.write.mode("error").partitionBy("ivf_cell").parquet(index_path)
     state["rebuilt_from"] = cur
-    os.makedirs(os.path.dirname(state_path), exist_ok=True)
-    tmp = f"{state_path}.tmp"
-    with open(tmp, "w") as f:
-        json.dump(state, f)
-    os.replace(tmp, state_path)
+    write_json_atomic(state_path, state)
     ann_store_publish(store_root, nxt)
     state["version"] = nxt
     return state
@@ -1892,19 +1882,29 @@ def save_ann_state(
     query job loads and scores, and two jobs can never disagree about
     the quantizer. Floats round-trip exactly (JSON decimal strings of
     Python floats are lossless via repr)."""
-    import json
-    import os
-
     state = {
         "format_version": 1,
         "centroids": centroids,
         "codebooks": codebooks,
         "metadata": metadata or {},
     }
+    write_json_atomic(path, state)
+
+
+def write_json_atomic(path: str, obj) -> None:
+    """Write ``obj`` as JSON to ``path`` through a temp file and one
+    rename (creating the parent directory), so a reader sees the old
+    file or the new one, never a torn write — the contract txlog's
+    commits keep. Every ANN state file and store manifest is written
+    here."""
+    import json
+    import os
+
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     tmp = f"{path}.tmp-{os.getpid()}"
     with open(tmp, "w") as f:
-        json.dump(state, f)
-    os.replace(tmp, path)  # atomic publish, same contract as txlog
+        json.dump(obj, f)
+    os.replace(tmp, path)
 
 
 def load_ann_state(path: str) -> dict:

@@ -31,6 +31,7 @@ from pyspark.sql.window import Window
 
 __all__ = [
     "partial_aggregate",
+    "fold_partials",
     "merge_partials",
     "finalize_aggregate",
     "incremental_update",
@@ -84,10 +85,21 @@ def merge_partials(
     keys: list[str],
     spec: list[tuple[str, str, str]],
 ) -> DataFrame:
-    """Fold two partial-state tables into one: sums and counts add,
-    mins take min, maxes take max — groups present in only one side
-    pass through. Associative and commutative by construction, so any
-    merge tree over any batch split yields the same state."""
+    """Fold two partial-state tables into one (:func:`fold_partials`
+    over their union) — groups present in only one side pass through.
+    Associative and commutative by construction, so any merge tree over
+    any batch split yields the same state."""
+    return fold_partials(a.unionByName(b), keys, spec)
+
+
+def fold_partials(
+    state: DataFrame,
+    keys: list[str],
+    spec: list[tuple[str, str, str]],
+) -> DataFrame:
+    """Fold a partial-state table holding any number of rows per group
+    (e.g. the union of many epochs' partials) to one row per group:
+    sums and counts add, mins take min, maxes take max."""
     aggs = []
     for name, _src, kind in spec:
         for c in _state_cols(name, kind):
@@ -97,7 +109,7 @@ def merge_partials(
                 aggs.append(F.max(c).alias(c))
             else:  # _sum or _cnt
                 aggs.append(F.sum(c).alias(c))
-    return a.unionByName(b).groupBy(*keys).agg(*aggs)
+    return state.groupBy(*keys).agg(*aggs)
 
 
 def finalize_aggregate(
@@ -236,15 +248,24 @@ def retractable_update(
         # non-zero sum delta, and that delta still has to reach the
         # merge (read paths re-filter dead groups at finalize time).
         return part
-    merged_aggs = [
-        F.sum(f"__{name}_sum").alias(f"__{name}_sum")
-        for name, _ in measures
+    return fold_retractable(state.unionByName(part), keys, measures)
+
+
+def fold_retractable(
+    state: DataFrame,
+    keys: list[str],
+    measures: list[tuple[str, str]],
+) -> DataFrame:
+    """Fold signed partial state holding any number of rows per group
+    (state plus a batch's partial, or many epochs' partials) to one row
+    per group: signed sums and live counts add. A zero live count means
+    the group's inserts were all retracted (sums are zero too under
+    consistent CDC), so the group is dropped, as it would be from a
+    fresh GROUP BY."""
+    aggs = [
+        F.sum(f"__{name}_sum").alias(f"__{name}_sum") for name, _ in measures
     ] + [F.sum("__cnt").cast("long").alias("__cnt")]
-    merged = state.unionByName(part).groupBy(*keys).agg(*merged_aggs)
-    # Post-merge, a zero live count means the group's inserts were all
-    # retracted (sums are zero too under consistent CDC) — drop it so a
-    # fully-deleted group disappears as it would from a fresh GROUP BY.
-    return merged.filter(F.col("__cnt") != 0)
+    return state.groupBy(*keys).agg(*aggs).filter(F.col("__cnt") != 0)
 
 
 def finalize_retractable(

@@ -23,6 +23,7 @@ captures.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -35,6 +36,23 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     columns into the scan automatically.
     """
     return spark.read.parquet(path)
+
+
+def read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+    """The first-batch read of a sink that merges into its own output:
+    the current target, or ``None`` when there is none yet. Exactly two
+    states mean "none": the path does not exist (``PATH_NOT_FOUND``) or
+    holds no data files (``UNABLE_TO_INFER_SCHEMA``, e.g. a bucketed
+    target whose every bucket was deleted). Any other failure — a
+    corrupt footer, IO, permissions — propagates, so the batch fails
+    and the checkpoint retries it instead of the sink rewriting its
+    target from the batch alone."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as exc:
+        if exc.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
 
 
 def read_parquet_lenient(spark: SparkSession, path: str) -> DataFrame:

@@ -25,14 +25,37 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from dea05_e2e_kafka_streaming_pipeline_spark.operators.quality import (
     DataQualityValidator,
 )
+from dea05_e2e_kafka_streaming_pipeline_spark.sources.registry import (
+    read_parquet_or_none,
+)
+
+
+def _start(
+    writer: DataStreamWriter,
+    checkpoint: str,
+    available_now: bool,
+    trigger_seconds: int | None,
+) -> StreamingQuery:
+    """Start a sink's query: the one place that sets the checkpoint and
+    picks the trigger. ``available_now`` drains what is available and
+    stops (the backfill mode, and what tests use); otherwise
+    ``trigger_seconds`` sets a ``processingTime`` cadence, and ``None``
+    keeps Spark's default (the next batch starts when the last ends).
+    Each sink builds its own writer, output mode included: a
+    stream-stream join upstream supports only append."""
+    writer = writer.option("checkpointLocation", checkpoint)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_seconds is not None:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()
 
 
 def ingest_to_lake(
@@ -60,15 +83,10 @@ def ingest_to_lake(
     writer = (
         stamped.writeStream.format(fmt)
         .option("path", path)
-        .option("checkpointLocation", checkpoint)
         .partitionBy("date")
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(writer, checkpoint, available_now, trigger_seconds)
 
 
 def dq_gated_sink(
@@ -98,16 +116,8 @@ def dq_gated_sink(
             lambda df: df.write.mode("append").json(quarantine_path),
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    writer = stream.writeStream.foreachBatch(_gate).outputMode("append")
+    return _start(writer, checkpoint, available_now, trigger_seconds)
 
 
 def upsert_batch_into_parquet(
@@ -161,6 +171,13 @@ def upsert_batch_into_parquet(
 
     An empty batch returns before any read or write: the one job that
     lists the touched buckets also decides emptiness.
+
+    The target is read with :func:`~..sources.registry.read_parquet_or_none`:
+    a missing target, or one left with no data files after every key was
+    deleted, merges against an empty frame. Any other read failure (a
+    corrupt file in any bucket fails schema inference) raises, so the
+    batch fails and the checkpoint retries it; merging against an empty
+    frame there would rewrite each touched bucket from the batch alone.
     """
     spark = batch.sparkSession
     meta = {op_col, ts_col} | ({seq_col} if seq_col else set())
@@ -169,14 +186,11 @@ def upsert_batch_into_parquet(
     affected = sorted(batch.agg(F.collect_set(bucket)).collect()[0][0])
     if not affected:
         return
-    try:
-        target = (
-            spark.read.parquet(target_dir)
-            .filter(F.col("bucket").isin(affected))
-            .select(*data_cols)
-        )
-    except Exception:  # first batch: no target yet
+    target = read_parquet_or_none(spark, target_dir)
+    if target is None:  # first batch, or every key deleted
         target = spark.createDataFrame([], batch.select(*data_cols).schema)
+    else:
+        target = target.filter(F.col("bucket").isin(affected)).select(*data_cols)
     from dea05_e2e_kafka_streaming_pipeline_spark.operators.cdc import (
         apply_cdc_changes,
     )
@@ -244,16 +258,8 @@ def stream_upsert_sink(
             n_buckets=n_buckets,
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    writer = stream.writeStream.foreachBatch(_apply).outputMode("update")
+    return _start(writer, checkpoint, available_now, trigger_seconds)
 
 
 def dedup_stream(
@@ -418,14 +424,8 @@ def enrich_stream_sink(
         dim = batch_df.sparkSession.read.parquet(dim_path)
         batch_df.join(F.broadcast(dim), on, how).write.mode("append").parquet(path)
 
-    writer = (
-        stream.writeStream.foreachBatch(_enrich)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = stream.writeStream.foreachBatch(_enrich).outputMode("append")
+    return _start(writer, checkpoint, available_now, None)
 
 
 def incremental_gold_sink(
@@ -453,7 +453,7 @@ def incremental_gold_sink(
     Cost per batch: one shuffle of the batch to its partial state
     (tiny: one row per touched group). Read-side merge cost grows with
     epoch count — compact epochs periodically with the same
-    ``merge_partials`` fold (any merge tree yields the same state)."""
+    ``fold_partials`` fold (any merge tree yields the same state)."""
     from dea05_e2e_kafka_streaming_pipeline_spark.plans.incremental import (
         partial_aggregate,
     )
@@ -462,14 +462,8 @@ def incremental_gold_sink(
         part = partial_aggregate(batch_df, keys, spec)
         part.write.mode("overwrite").parquet(f"{state_path}/epoch={epoch_id}")
 
-    writer = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = stream.writeStream.foreachBatch(_apply).outputMode("append")
+    return _start(writer, checkpoint, available_now, None)
 
 
 def read_incremental_gold(
@@ -479,19 +473,16 @@ def read_incremental_gold(
     spec: list[tuple[str, str, str]],
 ) -> DataFrame:
     """Read-side of :func:`incremental_gold_sink`: fold every epoch's
-    partial state (one aggregate over the small state table) and
+    partial state with ``fold_partials`` (one aggregate over the small
+    state table, the fold ``merge_partials`` applies to two states) and
     finalize to the gold metrics."""
     from dea05_e2e_kafka_streaming_pipeline_spark.plans.incremental import (
         finalize_aggregate,
-        merge_partials,
+        fold_partials,
     )
 
     state = spark.read.parquet(state_path).drop("epoch")
-    # merge_partials(a, b) with an empty b == a single groupBy fold of
-    # the union; reuse it directly on the already-unioned epoch rows
-    empty = state.limit(0)
-    merged = merge_partials(state, empty, keys, spec)
-    return finalize_aggregate(merged, keys, spec)
+    return finalize_aggregate(fold_partials(state, keys, spec), keys, spec)
 
 
 def sessionized_event_stats(
@@ -668,16 +659,8 @@ def avro_stream_sink(
             return
         write_avro_distributed(batch_df, out, codec=codec)
 
-    writer = (
-        stream.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    writer = stream.writeStream.foreachBatch(_land).outputMode("append")
+    return _start(writer, checkpoint, available_now, trigger_seconds)
 
 
 def cdc_snapshot_stream_sink(
@@ -735,16 +718,8 @@ def cdc_snapshot_stream_sink(
             ts_col=ts_col, op_col=op_col, seq_col=seq_col,
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    writer = stream.writeStream.foreachBatch(_apply).outputMode("update")
+    return _start(writer, checkpoint, available_now, trigger_seconds)
 
 
 def hll_register_store_sink(
@@ -787,35 +762,17 @@ def hll_register_store_sink(
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
         fresh = hll_partials(batch_df, keys, value_col, p=p)
-        try:
-            current = spark.read.parquet(target_dir)
-        except AnalysisException as exc:
-            # Only a MISSING store means "first batch". Any other read
-            # failure (IO, permissions, corrupt footer) must fail the
-            # batch so the checkpoint retries it — swallowing it would
-            # overwrite the store with this batch's registers alone and
-            # silently discard all accumulated distinct-count state.
-            msg = str(exc)
-            if "PATH_NOT_FOUND" not in msg and "Path does not exist" not in msg:
-                raise
-            current = spark.createDataFrame([], fresh.schema)
-        merged = hll_merge(
-            current.unionByName(fresh), keys
-        ).localCheckpoint(eager=True)  # materialize before overwrite
+        # No store yet is the first batch; any other read failure raises,
+        # or the overwrite below would keep this batch's registers alone.
+        current = read_parquet_or_none(batch_df.sparkSession, target_dir)
+        if current is not None:
+            fresh = current.unionByName(fresh)
+        merged = hll_merge(fresh, keys).localCheckpoint(eager=True)  # before overwrite
         merged.write.mode("overwrite").parquet(target_dir)
 
-    writer = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    writer = stream.writeStream.foreachBatch(_apply).outputMode("update")
+    return _start(writer, checkpoint, available_now, trigger_seconds)
 
 
 def retractable_gold_sink(
@@ -853,14 +810,8 @@ def retractable_gold_sink(
         part = retractable_update(None, signed, keys, measures)
         part.write.mode("overwrite").parquet(f"{state_path}/epoch={epoch_id}")
 
-    writer = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = stream.writeStream.foreachBatch(_apply).outputMode("append")
+    return _start(writer, checkpoint, available_now, None)
 
 
 def read_retractable_gold(
@@ -870,18 +821,46 @@ def read_retractable_gold(
     measures: list[tuple[str, str]],
 ) -> DataFrame:
     """Read-side of :func:`retractable_gold_sink`: fold every epoch's
-    signed partials (one aggregate over the small state table), drop
-    dead groups, finalize."""
+    signed partials with ``fold_retractable`` (one aggregate over the
+    small state table, dead groups dropped, the fold
+    ``retractable_update`` applies to state plus batch) and finalize."""
     from dea05_e2e_kafka_streaming_pipeline_spark.plans.incremental import (
         finalize_retractable,
+        fold_retractable,
     )
 
     state = spark.read.parquet(state_path).drop("epoch")
-    aggs = [
-        F.sum(f"__{name}_sum").alias(f"__{name}_sum") for name, _ in measures
-    ] + [F.sum("__cnt").cast("long").alias("__cnt")]
-    merged = state.groupBy(*keys).agg(*aggs).filter(F.col("__cnt") != 0)
+    merged = fold_retractable(state, keys, measures)
     return finalize_retractable(merged, keys, measures)
+
+
+def _ann_ingest_and_record(
+    batch_df: DataFrame,
+    index_path: str,
+    state_path: str,
+    state: dict,
+    retrain_psi: float,
+    vec_col: str,
+    id_col: str,
+) -> None:
+    """The per-batch step both ANN sinks share: ingest the batch into
+    the index under ``state``'s quantizer, then record the occupancy
+    drift (``psi``, ``retrain_due``) in the state file, written
+    atomically so readers never see a torn file."""
+    from dea05_e2e_kafka_streaming_pipeline_spark.operators.similarity import (
+        ann_index_ingest_batch,
+        ann_occupancy_psi,
+        write_json_atomic,
+    )
+
+    ann_index_ingest_batch(
+        batch_df, index_path, state["centroids"],
+        n_probe=state["n_probe"], vec_col=vec_col, id_col=id_col,
+    )
+    psi = ann_occupancy_psi(batch_df.sparkSession, index_path, state["ref_shares"])
+    state["psi"] = round(psi, 6)
+    state["retrain_due"] = psi > retrain_psi
+    write_json_atomic(state_path, state)
 
 
 def ann_ingest_sink(
@@ -928,8 +907,6 @@ def ann_ingest_sink(
     import os
 
     from dea05_e2e_kafka_streaming_pipeline_spark.operators.similarity import (
-        ann_index_ingest_batch,
-        ann_occupancy_psi,
         ann_train_state,
     )
 
@@ -944,28 +921,12 @@ def ann_ingest_sink(
                 batch_df, n_centroids=n_centroids, n_probe=n_probe,
                 vec_col=vec_col, id_col=id_col,
             )
-        ann_index_ingest_batch(
-            batch_df, index_path, state["centroids"],
-            n_probe=state["n_probe"], vec_col=vec_col, id_col=id_col,
+        _ann_ingest_and_record(
+            batch_df, index_path, state_path, state, retrain_psi, vec_col, id_col
         )
-        psi = ann_occupancy_psi(
-            batch_df.sparkSession, index_path, state["ref_shares"]
-        )
-        state["psi"] = round(psi, 6)
-        state["retrain_due"] = psi > retrain_psi
-        tmp = f"{state_path}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, state_path)  # atomic: readers never see a torn file
 
-    writer = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = stream.writeStream.foreachBatch(_apply).outputMode("append")
+    return _start(writer, checkpoint, available_now, None)
 
 
 def ann_ingest_sink_versioned(
@@ -1015,15 +976,14 @@ def ann_ingest_sink_versioned(
     picks up on its next batch. Restart- and replay-safe exactly like
     the flat sink (per-id anti-join inside the resolved version)."""
     import json
-    import os
 
     from dea05_e2e_kafka_streaming_pipeline_spark.operators.similarity import (
         ann_index_ingest_batch,
-        ann_occupancy_psi,
         ann_store_paths,
         ann_store_publish,
         ann_store_versions,
         ann_train_state,
+        write_json_atomic,
     )
 
     def _reconcile_swap_race(spark, version: int, state: dict) -> None:
@@ -1054,10 +1014,7 @@ def ann_ingest_sink_versioned(
                     n_probe=state["n_probe"], vec_col=vec_col, id_col=id_col,
                 )
         state["reconciled_from"] = sorted(done | set(chain))
-        tmp = f"{state_path}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, state_path)
+        write_json_atomic(state_path, state)
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1078,28 +1035,11 @@ def ann_ingest_sink_versioned(
                 vec_col=vec_col, id_col=id_col,
             )
             bootstrap = True
-        ann_index_ingest_batch(
-            batch_df, index_path, state["centroids"],
-            n_probe=state["n_probe"], vec_col=vec_col, id_col=id_col,
+        _ann_ingest_and_record(
+            batch_df, index_path, state_path, state, retrain_psi, vec_col, id_col
         )
-        psi = ann_occupancy_psi(
-            batch_df.sparkSession, index_path, state["ref_shares"]
-        )
-        state["psi"] = round(psi, 6)
-        state["retrain_due"] = psi > retrain_psi
-        os.makedirs(os.path.dirname(state_path), exist_ok=True)
-        tmp = f"{state_path}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, state_path)  # atomic: readers never see a torn file
         if bootstrap:
             ann_store_publish(store_root, version)
 
-    writer = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = stream.writeStream.foreachBatch(_apply).outputMode("append")
+    return _start(writer, checkpoint, available_now, None)

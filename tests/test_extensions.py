@@ -623,6 +623,28 @@ def test_dedup_incremental_batch_across_days(spark, tmp_path):
     assert kept2b.count() == 0
 
 
+def test_dedup_incremental_batch_raises_on_corrupt_store(spark, tmp_path):
+    """A store that exists but cannot be read fails the call: treating
+    it as absent would re-admit every fingerprint it holds."""
+    import pytest
+
+    from dea05_e2e_kafka_streaming_pipeline_spark.operators.dedup import (
+        dedup_incremental_batch,
+    )
+
+    store = tmp_path / "fps"
+    day1 = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "gamma")], "doc_id long, text string"
+    )
+    dedup_incremental_batch(day1, str(store))
+    parts = list(store.glob("part-*"))
+    assert parts
+    for f in parts:
+        f.write_bytes(b"not parquet" * 64)
+    with pytest.raises(Exception):
+        dedup_incremental_batch(day1, str(store))
+
+
 def test_pq_topk_recalls_clustered_neighbors(spark):
     """PQ on well-separated clusters: codes are deterministic, encode
     compresses to m small ints, and ADC top-k recovers the query's own

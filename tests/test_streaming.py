@@ -491,6 +491,55 @@ def test_upsert_batch_clears_fully_deleted_buckets(spark, tmp_path):
     # dynamic overwrite can't emit an empty partition: the sink must
     # drop the emptied bucket directory itself, or the delete resurrects
     assert list(target.glob("bucket=*")) == []
+    # the emptied target holds no data files; the next batch still lands
+    upsert_batch_into_parquet(
+        _changes(spark, [(7, 3.0, "c", 3)]), str(target), key="order_id", n_buckets=4
+    )
+    got = spark.read.parquet(str(target)).select("order_id", "amount").collect()
+    assert [(r.order_id, r.amount) for r in got] == [(7, 3.0)]
+
+
+def test_upsert_batch_raises_on_unreadable_target(spark, tmp_path):
+    """A corrupt file in a bucket the batch does not touch fails the
+    target's schema inference. The upsert must raise (so the checkpoint
+    retries the batch) instead of merging against an empty target, which
+    would rewrite the touched bucket from the batch alone."""
+    from dea05_e2e_kafka_streaming_pipeline_spark.streaming.pipeline import (
+        upsert_batch_into_parquet,
+    )
+
+    target = tmp_path / "silver"
+    upsert_batch_into_parquet(
+        _changes(spark, [(k, float(k), "r", 0) for k in range(1000)]),
+        str(target),
+        key="order_id",
+        n_buckets=4,
+    )
+
+    def bucket_rows(b):
+        return spark.read.parquet(str(target / f"bucket={b}")).count()
+
+    before = bucket_rows(1)
+    assert before > 1
+    bucket = F.pmod(F.xxhash64("order_id"), F.lit(4))
+    key = (
+        spark.range(1000)
+        .withColumnRenamed("id", "order_id")
+        .filter(bucket == 1)
+        .first()
+        .order_id
+    )
+    # schema inference reads the first file in path order: bucket=0
+    for f in (target / "bucket=0").glob("part-*"):
+        f.write_bytes(b"not parquet" * 64)
+    with pytest.raises(Exception):
+        upsert_batch_into_parquet(
+            _changes(spark, [(key, -1.0, "u", 1)]),
+            str(target),
+            key="order_id",
+            n_buckets=4,
+        )
+    assert bucket_rows(1) == before
 
 
 def test_upsert_batch_writes_one_file_per_bucket(spark, tmp_path):
