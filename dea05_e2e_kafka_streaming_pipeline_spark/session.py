@@ -116,17 +116,12 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # engine-native jar-less Avro (format "avro_lite") and the
-    # snapshot-log table format ("txlog", time travel) ride along on
-    # every session — registration is cheap and idempotent
-    from dea05_e2e_kafka_streaming_pipeline_spark.sources.avro_datasource import (
-        register_avro_datasource,
-    )
+    # the snapshot-log table format ("txlog", time travel) rides along
+    # on every session — registration is cheap and idempotent
     from dea05_e2e_kafka_streaming_pipeline_spark.sources.txlog_datasource import (
         register_txlog_datasource,
     )
 
-    register_avro_datasource(spark)
     register_txlog_datasource(spark)
     return spark
 

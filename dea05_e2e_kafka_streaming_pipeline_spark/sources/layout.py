@@ -54,27 +54,52 @@ def write_zordered(
     df: DataFrame,
     path: str,
     cols: list[Column | str],
-    bits: int = 16,
-    num_files: int = 8,
-    fmt: str = "parquet",
+    bits: int = 10,
+    num_files: int = 64,
+    stats: list[tuple[float, float]] | None = None,
 ) -> None:
-    """Cluster ``df`` on the Morton key of ``cols`` and write it:
-    one range shuffle on ``zval`` (equal-size output files via range
-    partitioning, robust to key skew) + an in-partition sort so each
-    row-group covers a contiguous Morton range — a tight K-dim
-    hyper-rectangle in the zone maps.
+    """Z-order-clustered Parquet layout: each of ``cols`` is min/max
+    scaled into ``bits`` levels (``2**bits - 1`` steps, clamped), keyed
+    with :func:`zorder_key`, and the rows are range-partitioned on the
+    key (equal-size output files, robust to key skew) and sorted within
+    each file — so every file and row-group covers a tight K-dim
+    hyper-rectangle, and per-file AND per-row-group (min, max) ranges on
+    ALL the clustered columns stay narrow, which is what data skipping
+    consumes. A column with no spread keys as 0.
 
-    At 100 TB this is the table-maintenance OPTIMIZE job: cost is a
-    single full-table range shuffle, amortized over every subsequent
+    Where the skipping is exploited: parquet predicate pushdown skips
+    row groups inside each file (vanilla Spark, automatic — the engine's
+    scans push comparison filters, see tests/test_plans.py); file-level
+    skipping additionally needs a stats-tracking table format (Delta/
+    Iceberg ``OPTIMIZE ZORDER`` consumes exactly this layout). The
+    clustering benefit is asserted from parquet footer stats in
+    tests/test_medallion.py.
+
+    ``stats`` ((min, max) per column of ``cols``, in order) skips the
+    one min/max aggregate job; at scale pass known bounds or reuse
+    catalog stats. At 100 TB this is the table-maintenance OPTIMIZE
+    job: a single full-table range shuffle, amortized over every later
     selective scan on any of the clustered columns."""
-    keyed = df.withColumn("_zval", zorder_key(cols, bits))
+    exprs = [F.col(c) if isinstance(c, str) else c for c in cols]
+    if stats is None:
+        row = df.agg(*(f(e) for e in exprs for f in (F.min, F.max))).collect()[0]
+        stats = [(row[2 * i], row[2 * i + 1]) for i in range(len(exprs))]
+    levels = (1 << bits) - 1
+    scaled = []
+    for e, (lo, hi) in zip(exprs, stats):
+        if lo is None or float(hi) <= float(lo):  # empty input or no spread
+            scaled.append(F.lit(0))
+            continue
+        norm = (e.cast("double") - F.lit(float(lo))) / F.lit(float(hi) - float(lo))
+        clamped = F.least(F.greatest(norm, F.lit(0.0)), F.lit(1.0))
+        scaled.append(F.round(clamped * levels, 0))
     (
-        keyed.repartitionByRange(num_files, "_zval")
+        df.withColumn("_zval", zorder_key(scaled, bits))
+        .repartitionByRange(num_files, "_zval")
         .sortWithinPartitions("_zval")
         .drop("_zval")
         .write.mode("overwrite")
-        .format(fmt)
-        .save(path)
+        .parquet(path)
     )
 
 
@@ -114,8 +139,14 @@ def rowgroups_matching_box(
     )
 
 
-def hilbert_key(xcol: Column | str, ycol: Column | str, bits: int = 4) -> Column:
-    """Hilbert-curve index of a 2-D point — the locality-preserving
+def with_hilbert(
+    df: DataFrame,
+    xcol: Column | str,
+    ycol: Column | str,
+    bits: int = 8,
+    out_col: str = "hval",
+) -> DataFrame:
+    """Hilbert-curve rank of a 2-D point — the locality-preserving
     alternative to :func:`zorder_key` (the technique behind
     liquid-clustering-style layouts): consecutive curve positions are
     ALWAYS adjacent cells (unit L1 step, tested exhaustively), where
@@ -126,53 +157,14 @@ def hilbert_key(xcol: Column | str, ycol: Column | str, bits: int = 4) -> Column
     The classic per-level fold (Wikipedia ``xy2d``): at each of
     ``bits`` levels, quadrant bits (rx, ry) contribute
     ``s²·((3·rx) XOR ry)`` to the rank and the frame rotates/reflects.
-    Unrolled here into pure codegen shift/and/when arithmetic. CAVEAT:
-    the single-Column form QUADRUPLES its expression tree per level
-    (each rotated coordinate references both predecessors twice), so it
-    is only usable to ~5 bits — use :func:`with_hilbert` for the
-    practical 8-bit default; it breaks the growth by materializing the
-    per-level state as real columns. Inputs are taken modulo
-    2**bits like ``zorder_key``.
-    """
-    n = 1 << bits
-    x = F.pmod(
-        (F.col(xcol) if isinstance(xcol, str) else xcol).cast("bigint"), F.lit(n)
-    )
-    y = F.pmod(
-        (F.col(ycol) if isinstance(ycol, str) else ycol).cast("bigint"), F.lit(n)
-    )
-    d: Column = F.lit(0).cast("bigint")
-    s = n >> 1
-    while s > 0:
-        k = s.bit_length() - 1
-        rx = F.shiftright(x, k).bitwiseAND(F.lit(1))
-        ry = F.shiftright(y, k).bitwiseAND(F.lit(1))
-        d = d + F.lit(s * s) * (rx * 3).bitwiseXOR(ry)
-        swap = ry == 0
-        flip = swap & (rx == 1)
-        fx = F.when(flip, F.lit(n - 1) - x).otherwise(x)
-        fy = F.when(flip, F.lit(n - 1) - y).otherwise(y)
-        x, y = (
-            F.when(swap, fy).otherwise(fx),
-            F.when(swap, fx).otherwise(fy),
-        )
-        s >>= 1
-    return d.alias("hval")
-
-
-def with_hilbert(
-    df: DataFrame,
-    xcol: Column | str,
-    ycol: Column | str,
-    bits: int = 8,
-    out_col: str = "hval",
-) -> DataFrame:
-    """Hilbert rank as a DataFrame fold: one chained projection per
-    level, so the (x, y, d) state is materialized as named columns and
-    the expression tree stays LINEAR in ``bits`` (the Column form
-    :func:`hilbert_key` quadruples per level and overflows the
-    analyzer beyond ~5 bits). Still zero shuffle, zero UDF — the whole
-    chain is per-row arithmetic inside one codegen stage.
+    It runs as one chained projection per level, so the (x, y, d) state
+    is materialized as named columns and the expression tree stays
+    LINEAR in ``bits`` (as a single Column expression each rotated
+    coordinate references both predecessors twice, so the tree would
+    quadruple per level and stop planning beyond ~5 bits). Still zero
+    shuffle, zero UDF — the whole chain is per-row arithmetic inside
+    one codegen stage. Inputs are taken modulo ``2**bits`` like
+    ``zorder_key``.
     """
     n = 1 << bits
     x = (F.col(xcol) if isinstance(xcol, str) else xcol).cast("bigint")

@@ -17,8 +17,8 @@ ivy/sbt cache exists. The JVM paths therefore remain exercised through
 their error/gating tests only; the jar-less Avro story is instead made
 scale-credible by :func:`read_avro_distributed` (binaryFile +
 mapInPandas over the vendored pure-Python decoder — distributed, no
-driver materialization), verified against the reference's real Debezium
-captures.
+driver materialization; ``read_avro(fallback=True)`` uses it), verified
+against the reference's real Debezium captures.
 """
 
 from __future__ import annotations
@@ -181,66 +181,33 @@ def read_avro(
     Prefers the JVM spark-avro connector when its jar is on the
     classpath (codegen decode, block-level splits). When absent —
     this container, see docs/JAR_ATTEMPT.md — ``fallback=True``
-    switches to the ENGINE-NATIVE jar-less source: the vendored
-    pure-Python container codec registered as ``format("avro_lite")``
-    through the public PySpark 4 Python Data Source API
-    (``sources/avro_datasource.py``) — one partition per container
-    file, decoded on executors, never the driver.
+    switches to the engine's jar-less scan,
+    :func:`read_avro_distributed`: one task per container file,
+    decoded on executors.
     """
     try:
         return spark.read.format("avro").load(path)
     except Exception as exc:  # pragma: no cover - depends on jar availability
         if fallback:
-            return spark.read.format("avro_lite").load(path)
+            return read_avro_distributed(spark, path)
         raise RuntimeError(
             "Avro reads need the spark-avro package "
             "(--packages org.apache.spark:spark-avro_2.13:<spark-version>); "
             "pass fallback=True to read with the engine's jar-less "
-            "format('avro_lite') Python data source (distributed, "
-            "per-file partitions). "
+            "binaryFile scan (distributed, one task per file). "
             f"Underlying error: {exc}"
         ) from exc
 
 
-def read_avro_distributed(
-    spark: SparkSession, path: str, spark_schema: T.StructType | None = None
-) -> DataFrame:
-    """Jar-less DISTRIBUTED Avro scan: the binaryFile source lists and
-    ships whole container files to executors, where each is decoded with
-    the vendored pure-Python reader (``sources/avro_lite.py``) inside an
-    Arrow-batched ``mapInPandas`` — no spark-avro required and no
-    driver-side materialization (upgrades ``read_avro(fallback=True)``,
-    which decodes on the driver).
-
-    The work unit is a FILE (Avro blocks within a file are not
-    range-split the way the JVM reader does), which matches the shape of
-    Kafka-topic dumps — many medium objects (reference layout:
-    ``curated/dq_kafka.py:140-141`` reads ``partition=0/*``). Pass
-    ``spark_schema`` to skip the driver-side peek of one file's embedded
-    writer schema.
-    """
-    import glob as _glob
-    import os
-
+def decode_avro_files(files: DataFrame, spark_schema: T.StructType) -> DataFrame:
+    """Decode a binaryFile frame (batch or streaming) of whole Avro
+    container files into rows of ``spark_schema``: each file is decoded
+    on an executor with the vendored pure-Python reader
+    (``sources/avro_lite.py``) inside an Arrow-batched ``mapInPandas``.
+    The one Avro decode of the engine; the batch scan and the stream
+    entry (``streaming/sources.py:avro_file_stream``) both use it."""
     from dea05_e2e_kafka_streaming_pipeline_spark.sources import avro_lite
 
-    if spark_schema is None:
-        if os.path.isdir(path):
-            cands = sorted(
-                p
-                for p in _glob.glob(os.path.join(path, "**", "*"), recursive=True)
-                if os.path.isfile(p)
-            )
-        else:
-            cands = sorted(_glob.glob(path)) or [path]
-        # skip _SUCCESS/.crc-style markers, matching the binaryFile
-        # source's own hidden-path filter, and read the HEADER only
-        cands = [
-            p for p in cands if not os.path.basename(p)[0] in ("_", ".")
-        ] or cands
-        schema0 = avro_lite.read_avro_schema(cands[0])
-        spark_schema = avro_lite.avro_to_spark_type(schema0)
-    files = spark.read.format("binaryFile").load(path).select("path", "content")
     names = [f.name for f in spark_schema.fields]
 
     def decode(batches):
@@ -256,7 +223,42 @@ def read_avro_distributed(
             if frames:
                 yield pd.concat(frames)
 
-    return files.mapInPandas(decode, spark_schema)
+    return files.select("path", "content").mapInPandas(decode, spark_schema)
+
+
+def read_avro_distributed(
+    spark: SparkSession, path: str, spark_schema: T.StructType | None = None
+) -> DataFrame:
+    """Jar-less DISTRIBUTED Avro scan: the binaryFile source lists and
+    ships whole container files to executors, where
+    :func:`decode_avro_files` decodes them — no spark-avro required and
+    no driver-side materialization. ``read_avro(fallback=True)`` reads
+    through here.
+
+    The work unit is a FILE (Avro blocks within a file are not
+    range-split the way the JVM reader does), which matches the shape of
+    Kafka-topic dumps — many medium objects (reference layout:
+    ``curated/dq_kafka.py:140-141`` reads ``partition=0/*``).
+
+    Without ``spark_schema`` the driver reads the writer schema from the
+    HEADER of the first listed file. The listing is the JVM's (globs;
+    ``_``/``.``-prefixed markers and staging files skipped); the header
+    is read through the local file system, so pass the schema where the
+    driver cannot open the files.
+    """
+    files = spark.read.format("binaryFile").load(path)
+    if spark_schema is None:
+        from urllib.parse import urlparse
+        from urllib.request import url2pathname
+
+        from dea05_e2e_kafka_streaming_pipeline_spark.sources import avro_lite
+
+        listed = files.inputFiles()
+        if not listed:
+            raise FileNotFoundError(f"no Avro container files under {path}")
+        first = url2pathname(urlparse(min(listed)).path)
+        spark_schema = avro_lite.avro_to_spark_type(avro_lite.read_avro_schema(first))
+    return decode_avro_files(files, spark_schema)
 
 
 def read_xml(

@@ -19,7 +19,7 @@ takes an encryption parameter.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -70,94 +70,6 @@ def write_orc_partitioned(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.orc(path)
-
-
-def zorder_value(
-    cols: list[str],
-    stats: dict[str, tuple[float, float]],
-    bits: int = 10,
-) -> Column:
-    """Morton (Z-order) curve value over ``cols``: each column is
-    normalized to a ``bits``-bit integer using the provided
-    (min, max) ``stats``, and the bit patterns are interleaved — points
-    close in EVERY dimension get close z-values. Pure codegen column
-    arithmetic (2·bits shift/mask terms per column)."""
-    if len(cols) * bits > 63:
-        # Java shift amounts mask to 6 bits — positions >= 64 would
-        # silently wrap onto low bits and scramble the curve
-        raise ValueError(
-            f"z-value needs {len(cols)}x{bits} = {len(cols) * bits} bits; "
-            "max is 63 — lower `bits` or cluster fewer columns"
-        )
-    levels = (1 << bits) - 1
-    ints = []
-    for c in cols:
-        lo, hi = stats[c]
-        span = float(hi) - float(lo)
-        if span <= 0:
-            ints.append(F.lit(0).cast("long"))
-            continue
-        norm = (F.col(c).cast("double") - F.lit(float(lo))) / F.lit(span)
-        clamped = F.least(F.greatest(norm, F.lit(0.0)), F.lit(1.0))
-        ints.append(F.round(clamped * levels, 0).cast("long"))
-    n = len(cols)
-    z = F.lit(0).cast("long")
-    for i, v in enumerate(ints):
-        for b in range(bits):
-            z = z.bitwiseOR(
-                F.shiftleft(
-                    F.shiftright(v, b).bitwiseAND(F.lit(1)), b * n + i
-                )
-            )
-    return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 10,
-    num_files: int = 64,
-    stats: dict[str, tuple[float, float]] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order-clustered Parquet layout: rows are range-partitioned and
-    sorted by their Morton value over ``cols``, so every output file
-    covers a tight hyper-rectangle of the key space — per-file AND
-    per-row-group (min, max) ranges on ALL the clustered columns stay
-    narrow, which is what data skipping consumes. This is the
-    multi-column analog of the ivf_cell partition layout: partitioning
-    prunes on ONE column hierarchy, z-ordering makes min/max skipping
-    effective on EVERY clustered column simultaneously.
-
-    Where the skipping is exploited: parquet predicate pushdown skips
-    row groups inside each file (vanilla Spark, automatic — the engine's
-    scans push comparison filters, see tests/test_plans.py); file-level
-    skipping additionally needs a stats-tracking table format (Delta/
-    Iceberg `OPTIMIZE ZORDER` consumes exactly this layout). The
-    clustering benefit is asserted directly from parquet footer stats in
-    tests/test_medallion.py.
-
-    ``stats`` ((min, max) per column) skips the one driver-side stats
-    aggregation; at scale pass known bounds or reuse catalog stats.
-    """
-    if stats is None:
-        aggs = []
-        for c in cols:
-            aggs += [F.min(c).alias(f"__mn_{c}"), F.max(c).alias(f"__mx_{c}")]
-        row = df.agg(*aggs).collect()[0]
-        stats = {
-            c: (float(row[f"__mn_{c}"]), float(row[f"__mx_{c}"])) for c in cols
-        }
-    z = zorder_value(cols, stats, bits)
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(num_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .parquet(path)
-    )
 
 
 def write_bucketed_table(
@@ -387,6 +299,7 @@ def write_avro_distributed(
     path: str,
     codec: str = "deflate",
     record_name: str = "topLevelRecord",
+    mode: str = "append",
 ) -> dict:
     """Jar-less DISTRIBUTED Avro sink: each partition encodes its rows
     with the vendored pure-Python writer (``sources/avro_lite.py``) and
@@ -395,34 +308,62 @@ def write_avro_distributed(
     including against the schema of the reference's real Debezium
     captures ``testing/streaming.public.order.avro``).
 
-    The work unit is a PARTITION → one ``part-NNNNN.avro`` object, the
-    same one-file-per-task shape as Spark's own file sinks; a
-    ``_SUCCESS`` marker lands only after the action completes, so
-    readers never observe a half-written directory as complete. Encoding
-    runs row-at-a-time in Python — acceptable for a SINK (write path is
-    I/O-bound; this is the jar-less fallback, spark-avro's JVM writer is
-    the 100 TB path). Requires a filesystem all executors can reach
-    (true in local mode and on any shared/posix mount; object stores
-    need the JVM writer). Returns the Avro writer schema used.
+    Commit protocol: each task writes a hidden ``.staging-<job>-*``
+    file (invisible to every Spark file source); only after the whole
+    job succeeds does the driver rename them to
+    ``part-NNNNN-<job>.avro`` and drop a ``_SUCCESS`` marker. A failed
+    job leaves the directory as it was, staging files removed. An empty
+    partition lands no file. ``mode="append"`` adds this job's files
+    (the job id keeps names unique); ``mode="overwrite"`` then removes
+    everything else in ``path``, after the new files are in place, so a
+    crash in between leaves duplicates, never a loss. Encoding runs
+    row-at-a-time in Python — acceptable for a SINK (this is the
+    jar-less fallback, spark-avro's JVM writer is the 100 TB path).
+    Requires a filesystem the driver and all executors can reach (true
+    in local mode and on any shared/posix mount; object stores need the
+    JVM writer). Returns the Avro writer schema used.
     """
+    import glob
     import os
+    import shutil
+    import uuid
 
     from dea05_e2e_kafka_streaming_pipeline_spark.sources import avro_lite
 
+    if mode not in ("append", "overwrite"):
+        raise ValueError(f"mode must be 'append' or 'overwrite', got {mode!r}")
     schema = avro_lite.spark_schema_to_avro(df.schema, name=record_name)
     os.makedirs(path, exist_ok=True)
+    job = uuid.uuid4().hex[:8]
 
-    def write_partition(rows) -> None:
+    def write_partition(rows):
         from pyspark import TaskContext
 
         records = [r.asDict(recursive=True) for r in rows]
         if not records:
             return
-        pid = TaskContext.get().partitionId()
-        out = os.path.join(path, f"part-{pid:05d}.avro")
-        avro_lite.write_avro(out, schema, records, codec=codec)
+        tc = TaskContext.get()
+        staged = os.path.join(path, f".staging-{job}-{tc.taskAttemptId()}")
+        avro_lite.write_avro(staged, schema, records, codec=codec)
+        yield staged, f"part-{tc.partitionId():05d}-{job}.avro"
 
-    df.foreachPartition(write_partition)
+    try:
+        staged = df.rdd.mapPartitions(write_partition).collect()
+        for tmp, name in staged:
+            os.replace(tmp, os.path.join(path, name))
+    finally:
+        # a failed job's and a failed attempt's staged files
+        for tmp in glob.glob(os.path.join(path, f".staging-{job}-*")):
+            os.remove(tmp)
+    if mode == "overwrite":
+        keep = {name for _, name in staged}
+        for entry in os.listdir(path):
+            if entry not in keep:
+                full = os.path.join(path, entry)
+                if os.path.isdir(full):
+                    shutil.rmtree(full)
+                else:
+                    os.remove(full)
     with open(os.path.join(path, "_SUCCESS"), "w"):
         pass
     return schema

@@ -636,28 +636,24 @@ def avro_stream_sink(
     """Stream → Avro container files via the jar-less writer
     (``sources/sinks.py:write_avro_distributed``) inside
     ``foreachBatch`` — each micro-batch lands under
-    ``<path>/batch=<epoch>/`` so replays of an epoch OVERWRITE that
-    epoch's directory instead of duplicating rows (epoch-keyed
-    idempotence, same discipline as ``incremental_gold_sink``); the
-    checkpoint guarantees each epoch is delivered at least once, the
-    directory key collapses retries. Downstream reads the whole prefix
-    with ``read_avro_distributed``. At 100 TB the JVM spark-avro
-    streaming sink replaces this; the semantics are identical."""
-    import shutil
+    ``<path>/batch=<epoch>/`` in ``overwrite`` mode, so a replayed
+    epoch REPLACES that epoch's files instead of duplicating rows
+    (epoch-keyed idempotence, same discipline as
+    ``incremental_gold_sink``); the checkpoint guarantees each epoch is
+    delivered at least once, the directory key collapses retries.
+    Downstream reads the whole prefix with ``read_avro_distributed`` or
+    tails it with ``streaming/sources.py:avro_file_stream``. At 100 TB
+    the JVM spark-avro streaming sink replaces this; the semantics are
+    identical."""
+    import os
 
     from dea05_e2e_kafka_streaming_pipeline_spark.sources.sinks import (
         write_avro_distributed,
     )
 
     def _land(batch_df: DataFrame, epoch_id: int) -> None:
-        import os
-
         out = os.path.join(path, f"batch={epoch_id}")
-        if os.path.isdir(out):  # replayed epoch: replace, don't duplicate
-            shutil.rmtree(out)
-        if batch_df.isEmpty():
-            return
-        write_avro_distributed(batch_df, out, codec=codec)
+        write_avro_distributed(batch_df, out, codec=codec, mode="overwrite")
 
     writer = stream.writeStream.foreachBatch(_land).outputMode("append")
     return _start(writer, checkpoint, available_now, trigger_seconds)

@@ -13,7 +13,8 @@ become declarative Structured Streaming sources:
   every run, at-least-once with duplicates); file sinks become
   exactly-once.
 - :func:`file_stream` — file-based surrogate for local testing and for
-  landing-zone tailing (new JSON/parquet files under a prefix).
+  landing-zone tailing (new JSON/parquet files under a prefix);
+  :func:`avro_file_stream` tails Avro container files the same way.
 - :func:`synthetic_orders_stream` / :func:`synthetic_customers_stream`
   — the Faker generators (``streaming-source/topic_orders_streaming.py:14-21``)
   re-expressed over the ``rate`` source with the same bounded domains
@@ -148,6 +149,39 @@ def file_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.load(path)
+
+
+# binaryFile's fixed schema: a streaming file source must be given one.
+BINARY_FILE_SCHEMA = T.StructType(
+    [
+        T.StructField("path", T.StringType()),
+        T.StructField("modificationTime", T.TimestampType()),
+        T.StructField("length", T.LongType()),
+        T.StructField("content", T.BinaryType()),
+    ]
+)
+
+
+def avro_file_stream(
+    spark: SparkSession,
+    path: str,
+    spark_schema: T.StructType,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """Tail a prefix of Avro container files (a jar-less Debezium topic
+    dump, or ``avro_stream_sink``'s output): :func:`file_stream` over
+    the binaryFile source, decoded by ``registry.decode_avro_files``.
+    The file source keeps a checkpointed log of every file it has read,
+    so a restarted query reads exactly the files added since, whatever
+    their names."""
+    from dea05_e2e_kafka_streaming_pipeline_spark.sources.registry import (
+        decode_avro_files,
+    )
+
+    files = file_stream(
+        spark, path, BINARY_FILE_SCHEMA, "binaryFile", max_files_per_trigger
+    )
+    return decode_avro_files(files, spark_schema)
 
 
 def to_kafka_payload(df: DataFrame, key_col: str | None = None) -> DataFrame:

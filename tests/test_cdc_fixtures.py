@@ -200,32 +200,3 @@ def test_read_avro_distributed_matches_driver_fallback(spark):
     got_rows = sorted((r.asDict(recursive=True) for r in got.collect()), key=key)
     want_rows = sorted((r.asDict(recursive=True) for r in want.collect()), key=key)
     assert got_rows == want_rows
-
-
-def test_read_avro_schema_header_only_and_marker_skip(tmp_path):
-    """The distributed scan's driver peek must read only the container
-    header and must skip _SUCCESS/.crc-style marker files."""
-    import shutil
-
-    from dea05_e2e_kafka_streaming_pipeline_spark.sources.avro_lite import (
-        read_avro,
-        read_avro_schema,
-    )
-
-    src = "/root/reference/testing/streaming.public.order.avro"
-    schema_full, _ = read_avro(src)
-    assert read_avro_schema(src) == schema_full
-    # directory with markers that sort before the data file
-    d = tmp_path / "dump"
-    d.mkdir()
-    (d / "_SUCCESS").write_bytes(b"")
-    (d / ".part-0.crc").write_bytes(b"\x00\x01")
-    shutil.copy(src, d / "part-0.avro")
-    from dea05_e2e_kafka_streaming_pipeline_spark.sources.registry import (
-        read_avro_distributed,
-    )
-    from dea05_e2e_kafka_streaming_pipeline_spark.session import get_spark
-
-    spark = get_spark(app_name="engine-tests")
-    got = read_avro_distributed(spark, str(d))
-    assert got.count() > 0

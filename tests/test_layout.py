@@ -131,10 +131,7 @@ def test_hilbert_matches_reference_and_unit_steps(spark):
     Hilbert property Morton lacks: consecutive ranks are always
     adjacent cells (unit L1 step) — the locality claim behind using it
     as a clustering key."""
-    from dea05_e2e_kafka_streaming_pipeline_spark.sources.layout import (
-        hilbert_key,
-        with_hilbert,
-    )
+    from dea05_e2e_kafka_streaming_pipeline_spark.sources.layout import with_hilbert
 
     def xy2d(n, x, y):
         d, s = 0, n // 2
@@ -152,15 +149,11 @@ def test_hilbert_matches_reference_and_unit_steps(spark):
     grid = spark.createDataFrame(
         [(x, y) for x in range(16) for y in range(16)], "x int, y int"
     )
-    got_col = {
-        (r.x, r.y): r.hval
-        for r in grid.select("x", "y", hilbert_key("x", "y", bits=4)).collect()
-    }
-    got_df = {
+    got = {
         (r.x, r.y): r.hval for r in with_hilbert(grid, "x", "y", bits=4).collect()
     }
     want = {(x, y): xy2d(16, x, y) for x in range(16) for y in range(16)}
-    assert got_col == want and got_df == want
+    assert got == want
 
     inv = {d: xy for xy, d in want.items()}
     assert all(
@@ -170,7 +163,7 @@ def test_hilbert_matches_reference_and_unit_steps(spark):
 
 
 def test_with_hilbert_8bit_plans_and_is_bijective_on_diagonal(spark):
-    """The DataFrame fold survives 8 levels (the Column form cannot),
+    """The DataFrame fold survives 8 levels (a single Column form cannot),
     stays shuffle-free, and distinct inputs map to distinct ranks."""
     from dea05_e2e_kafka_streaming_pipeline_spark.sources.layout import with_hilbert
 

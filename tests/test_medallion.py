@@ -183,7 +183,7 @@ def test_zorder_layout_tightens_file_stats(spark, tmp_path):
     stats-tracking table format)."""
     import pyarrow.parquet as pq
 
-    from dea05_e2e_kafka_streaming_pipeline_spark.sources.sinks import (
+    from dea05_e2e_kafka_streaming_pipeline_spark.sources.layout import (
         write_zordered,
     )
     from tests.conftest import SF_DIR
@@ -228,16 +228,3 @@ def test_zorder_layout_tightens_file_stats(spark, tmp_path):
     assert z_hits <= z_total // 2, (z_hits, z_total)
     # layout preserves the data
     assert spark.read.parquet(zpath).count() == events.count()
-
-
-def test_zorder_value_bit_budget_guard(spark):
-    """More than 63 interleaved bits would silently wrap (Java shift
-    masks to 6 bits) — must raise instead."""
-    import pytest as _pytest
-
-    from dea05_e2e_kafka_streaming_pipeline_spark.sources.sinks import zorder_value
-
-    stats = {c: (0.0, 1.0) for c in "abcdefg"}
-    with _pytest.raises(ValueError, match="63"):
-        zorder_value(list("abcdefg"), stats, bits=10)  # 70 bits
-    zorder_value(list("abcdef"), stats, bits=10)  # 60 bits: fine

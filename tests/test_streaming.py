@@ -996,6 +996,9 @@ def test_avro_stream_sink_round_trip(spark, tmp_path):
     from dea05_e2e_kafka_streaming_pipeline_spark.streaming.pipeline import (
         avro_stream_sink,
     )
+    from dea05_e2e_kafka_streaming_pipeline_spark.streaming.sources import (
+        avro_file_stream,
+    )
 
     n = _land_events_json(spark, tmp_path / "landing_av")
     stream = file_stream(spark, str(tmp_path / "landing_av"), EVENTS_SCHEMA)
@@ -1013,6 +1016,17 @@ def test_avro_stream_sink_round_trip(spark, tmp_path):
     assert back.count() == n
     src = load_table(spark, SF_SMOKE, "events")
     assert sorted(back.columns) == sorted(src.columns)
+    # the epoch directories tail as a stream too: every row once
+    tail = (
+        avro_file_stream(spark, out, back.schema)
+        .writeStream.format("memory")
+        .queryName("avro_sink_tail")
+        .option("checkpointLocation", str(tmp_path / "ckpt_av_tail"))
+        .start()
+    )
+    tail.processAllAvailable()
+    tail.stop()
+    assert spark.table("avro_sink_tail").count() == n
 
 
 def test_kafka_surrogate_lifecycle_end_to_end(spark, tmp_path):

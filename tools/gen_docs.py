@@ -32,12 +32,11 @@ FAMILIES = [
     ("Sessions & config", f"{PKG}.session", "SparkSession factory with the engine's scale defaults (AQE, shuffle partitions, Arrow)."),
     ("Source registry (CSV / JSON / Parquet / Avro / ORC)", f"{PKG}.sources.registry", "Typed scans with explicit schemas, quarantine variants, schema evolution, jar-less Avro."),
     ("Avro (pure-Python codec)", f"{PKG}.sources.avro_lite", "From-scratch Avro 1.11 container reader/writer (no spark-avro jar in this environment)."),
-    ("Avro as an engine data source", f"{PKG}.sources.avro_datasource", "The codec registered through the public PySpark Python Data Source API — distributed scans/writes."),
     ("Reference entities", f"{PKG}.sources.entities", "orders/customers entity mapping over the testdata star schema (FIXTURES.md §4)."),
     ("Catalog & metadata", f"{PKG}.sources.catalog", "Table DDL registration, file/row-group inventory, zone maps, small-files doctor."),
     ("Sinks (partitioned parquet, compaction, retention)", f"{PKG}.sources.sinks", "Date-partitioned writes, compaction, backfill, retention."),
     ("Versioned snapshot log (Delta-semantics substitute)", f"{PKG}.sources.txlog", "Atomic manifest commits: time travel, history, VACUUM, MERGE INTO — jar-less."),
-    ("Z-order clustering layout", f"{PKG}.sources.layout", "Morton-key clustering writes + zone-map pruning decisions (measured skipping benefit)."),
+    ("Z-order clustering layout", f"{PKG}.sources.layout", "Morton-key clustering writes, Hilbert ranks + zone-map pruning decisions (measured skipping benefit)."),
     ("Gold aggregates", f"{PKG}.plans.gold", "Reference gold tables: daily sales by region, customer lifetime value."),
     ("Analytics plans (windows, cubes, global ordering)", f"{PKG}.plans.analytics", "Ranking/lag/ntile windows, grouping sets, gap-fill, funnel, global row numbering."),
     ("Incremental plans", f"{PKG}.plans.incremental", "Watermark/high-water-mark incremental recomputation."),
@@ -59,7 +58,7 @@ FAMILIES = [
     ("Scalar & nested functions", f"{PKG}.functions.scalars", "The reference's 13 scalar functions as codegen expressions."),
     ("Nested-data functions", f"{PKG}.functions.nested", "Array/map/struct manipulation helpers."),
     ("UDTF surface", f"{PKG}.functions.udtf", "API-surface demo of Python UDTFs (policy: not on data paths)."),
-    ("Streaming sources", f"{PKG}.streaming.sources", "Kafka JSON stream (+file-backed surrogate with the same option surface), rate-source synthetics."),
+    ("Streaming sources", f"{PKG}.streaming.sources", "Kafka JSON stream (+file-backed surrogate with the same option surface), Avro file stream, rate-source synthetics."),
     ("Streaming pipelines", f"{PKG}.streaming.pipeline", "Checkpointed ingestion, DQ-gated sink, windowed stats, upsert sink, Avro sink."),
     ("Stateful streaming", f"{PKG}.streaming.stateful", "applyInPandasWithState processors (visit counts, dedup state)."),
     ("Streaming metrics", f"{PKG}.streaming.metrics", "Query-progress listener capture."),
