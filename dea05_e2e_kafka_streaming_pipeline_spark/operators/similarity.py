@@ -20,6 +20,7 @@ accumulation would make results depend on partitioning.
 from __future__ import annotations
 
 import math
+import os
 import random
 
 from pyspark.sql import Column, DataFrame
@@ -27,6 +28,12 @@ from pyspark.sql import functions as F
 
 from dea05_e2e_kafka_streaming_pipeline_spark.sources.registry import (
     read_parquet_or_none,
+)
+from dea05_e2e_kafka_streaming_pipeline_spark.sources.txlog import (
+    log_versions,
+    manifest_path,
+    resolve_version,
+    write_json_atomic,
 )
 
 
@@ -1166,7 +1173,7 @@ def ann_occupancy_psi(
 # ---------------------------------------------------------------------------
 # Versioned ANN store — rebuild-and-swap (round-6 verdict item 5)
 # ---------------------------------------------------------------------------
-# Layout (the txlog atomic-publish idiom, sources/txlog.py):
+# Layout (the snapshot log's format, sources/txlog.py):
 #
 #   store_root/
 #     v000000/index/       parquet partitioned by ivf_cell
@@ -1179,31 +1186,24 @@ def ann_occupancy_psi(
 # highest committed manifest. A rebuild writes v+1 COMPLETELY (index +
 # state) before publishing its manifest, so a reader holding v keeps a
 # stable view forever — the swap is one atomic rename, and old versions
-# stay on disk until explicitly vacuumed (same contract as txlog).
+# stay on disk until explicitly vacuumed. Listing, resolving and
+# publishing are txlog's own functions over ``_ann_log/``, so the store
+# has the snapshot log's contract, single writer included.
 
-_ANN_LOG = "_ann_log"
+
+def _ann_log(store_root: str) -> str:
+    return os.path.join(store_root, "_ann_log")
 
 
 def ann_store_versions(store_root: str) -> list[int]:
     """Committed index versions, ascending (empty if none)."""
-    import os
-
-    log = os.path.join(store_root, _ANN_LOG)
-    if not os.path.isdir(log):
-        return []
-    return sorted(
-        int(f[1:-5])
-        for f in os.listdir(log)
-        if f.startswith("v") and f.endswith(".json")
-    )
+    return log_versions(_ann_log(store_root))
 
 
 def ann_store_paths(store_root: str, version: int) -> tuple[str, str]:
     """(index_path, state_path) for a version — valid whether or not the
     version is committed yet (the rebuild writes into these paths BEFORE
     publishing)."""
-    import os
-
     vdir = os.path.join(store_root, f"v{version:06d}")
     return os.path.join(vdir, "index"), os.path.join(vdir, "state.json")
 
@@ -1213,15 +1213,14 @@ def ann_store_publish(store_root: str, version: int) -> None:
     the manifest file (:func:`write_json_atomic`). After this returns,
     ``ann_store_versions`` lists the version and new readers resolve to
     it."""
-    import os
-
     index_path, state_path = ann_store_paths(store_root, version)
     if not os.path.isdir(index_path) or not os.path.exists(state_path):
         raise FileNotFoundError(
             f"version {version} not fully written under {store_root}"
         )
-    manifest = os.path.join(store_root, _ANN_LOG, f"v{version:06d}.json")
-    write_json_atomic(manifest, {"version": version})
+    write_json_atomic(
+        manifest_path(_ann_log(store_root), version), {"version": version}
+    )
 
 
 def ann_store_state(store_root: str, version: int | None = None) -> dict:
@@ -1229,12 +1228,7 @@ def ann_store_state(store_root: str, version: int | None = None) -> dict:
     The returned dict carries ``version`` so callers can pin it."""
     import json
 
-    versions = ann_store_versions(store_root)
-    if not versions:
-        raise FileNotFoundError(f"no committed ANN versions under {store_root}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not in {versions}")
+    v = resolve_version(_ann_log(store_root), version)
     _, state_path = ann_store_paths(store_root, v)
     with open(state_path) as f:
         state = json.load(f)
@@ -1246,12 +1240,7 @@ def ann_store_read(spark, store_root: str, version: int | None = None) -> DataFr
     """Scan a committed version's index (default: current). A reader
     that resolved version N before a rebuild keeps reading N's files —
     the rebuild never touches them."""
-    versions = ann_store_versions(store_root)
-    if not versions:
-        raise FileNotFoundError(f"no committed ANN versions under {store_root}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not in {versions}")
+    v = resolve_version(_ann_log(store_root), version)
     index_path, _ = ann_store_paths(store_root, v)
     return spark.read.parquet(index_path)
 
@@ -1297,10 +1286,7 @@ def ann_index_rebuild(
     (but before the swap is observed) is reconciled into the new
     version by the sink's first post-swap batch — see
     ``streaming.pipeline.ann_ingest_sink_versioned``."""
-    versions = ann_store_versions(store_root)
-    if not versions:
-        raise FileNotFoundError(f"no committed ANN versions under {store_root}")
-    cur = versions[-1]
+    cur = resolve_version(_ann_log(store_root))
     vectors = ann_store_read(spark, store_root, cur).select(id_col, vec_col)
     state = ann_train_state(
         vectors, n_centroids=n_centroids, n_probe=n_probe,
@@ -1889,22 +1875,6 @@ def save_ann_state(
         "metadata": metadata or {},
     }
     write_json_atomic(path, state)
-
-
-def write_json_atomic(path: str, obj) -> None:
-    """Write ``obj`` as JSON to ``path`` through a temp file and one
-    rename (creating the parent directory), so a reader sees the old
-    file or the new one, never a torn write — the contract txlog's
-    commits keep. Every ANN state file and store manifest is written
-    here."""
-    import json
-    import os
-
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    tmp = f"{path}.tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(obj, f)
-    os.replace(tmp, path)
 
 
 def load_ann_state(path: str) -> dict:

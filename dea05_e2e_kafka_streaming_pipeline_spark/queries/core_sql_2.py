@@ -469,55 +469,3 @@ def q_welch_ttest_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("df_r6"),
     )
-
-
-
-
-@register(
-    "orders_timetravel_datasource",
-    bench=False,
-    oracle=f"""
-    WITH o AS (SELECT order_id, order_date,
-                      CAST(order_amount AS DECIMAL(18,2)) AS order_amount
-               FROM ({ORDERS_SQL})),
-    v1 AS (
-      SELECT order_id, order_date,
-             CASE WHEN order_id % 97 = 0
-                  THEN CAST(order_amount + 1 AS DECIMAL(18,2))
-                  ELSE order_amount END AS order_amount
-      FROM o WHERE order_id % 101 <> 0
-    ),
-    a0 AS (SELECT CAST(strftime(order_date, '%Y') AS INT) AS year,
-                  count(*) AS n_v0,
-                  CAST(sum(order_amount) AS DOUBLE) AS sum_v0
-           FROM o GROUP BY 1),
-    a1 AS (SELECT CAST(strftime(order_date, '%Y') AS INT) AS year,
-                  count(*) AS n_v1,
-                  CAST(sum(order_amount) AS DOUBLE) AS sum_v1
-           FROM v1 GROUP BY 1)
-    SELECT a0.year, a0.n_v0, a0.sum_v0, a1.n_v1, a1.sum_v1
-    FROM a0 JOIN a1 USING (year)
-    """,
-)
-def q_orders_timetravel_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time travel through the ENGINE DATA SOURCE (r4 verdict item 8):
-    the same committed snapshot-log table as
-    `orders_snapshot_timetravel`, but both versions are read back via
-    ``spark.read.format("txlog").option("versionAsOf", n)`` — the
-    Python-Data-Source registration in sources/txlog_datasource.py
-    (Arrow-batch executor-side decode) — and must hash-match the same
-    pure-SQL oracle. A one-token swap to ``format("delta")`` where the
-    jar exists. bench=False (shares the eager table materialization)."""
-    from pyspark.sql import functions as F
-
-    path = _txlog_table(sf_dir)
-    v0 = spark.read.format("txlog").option("versionAsOf", 0).load(path)
-    v1 = spark.read.format("txlog").option("versionAsOf", 1).load(path)
-
-    def agg(df, n_name, s_name):
-        return df.groupBy(F.year("order_date").alias("year")).agg(
-            F.count(F.lit(1)).alias(n_name),
-            F.sum("order_amount").cast("double").alias(s_name),
-        )
-
-    return agg(v0, "n_v0", "sum_v0").join(agg(v1, "n_v1", "sum_v1"), "year")

@@ -116,13 +116,6 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # the snapshot-log table format ("txlog", time travel) rides along
-    # on every session — registration is cheap and idempotent
-    from dea05_e2e_kafka_streaming_pipeline_spark.sources.txlog_datasource import (
-        register_txlog_datasource,
-    )
-
-    register_txlog_datasource(spark)
     return spark
 
 

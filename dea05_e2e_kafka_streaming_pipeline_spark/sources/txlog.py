@@ -10,14 +10,21 @@ pipeline, on nothing but parquet + JSON manifests:
   exact data files (with sizes) that version comprises;
 - **committing** = writing new data files under unique names (never
   overwriting), then atomically publishing the next manifest
-  (write-temp + rename — the same single-file atomic-publish trick
-  Delta's ``_last_checkpoint`` uses);
+  (:func:`write_json_atomic`: write-temp + rename — the same
+  single-file atomic-publish trick Delta's ``_last_checkpoint`` uses);
 - **reading as of version N** = scanning exactly the files in manifest
   N. Old versions stay readable until their files are vacuumed.
 
+This is the one module that knows the log format: a directory of
+``vNNNNNN.json`` manifests, latest = highest number
+(:func:`log_versions`, :func:`resolve_version`, :func:`manifest_path`).
+The versioned ANN store (``operators/similarity.py:ann_store_*``)
+keeps its own log, ``_ann_log/``, through the same three functions.
+
 What this deliberately does NOT provide: multi-writer conflict
 resolution (Delta's optimistic concurrency) — single-writer-per-table
-is the contract, which matches the reference's job-per-table layout.
+(and per ANN store) is the contract, which matches the reference's
+job-per-table layout.
 
 At 100 TB the manifest is metadata (one JSON row per file); scan
 planning cost is the listing it replaces.
@@ -37,20 +44,55 @@ def _log_path(table_path: str) -> str:
     return os.path.join(table_path, _LOG_DIR)
 
 
-def snapshot_versions(table_path: str) -> list[int]:
-    """Committed versions, ascending (empty if never committed)."""
-    log = _log_path(table_path)
-    if not os.path.isdir(log):
+def manifest_path(log_dir: str, version: int) -> str:
+    """Path of version ``version``'s manifest in ``log_dir``."""
+    return os.path.join(log_dir, f"v{version:06d}.json")
+
+
+def log_versions(log_dir: str) -> list[int]:
+    """Versions published in ``log_dir``, ascending (empty if none)."""
+    if not os.path.isdir(log_dir):
         return []
     return sorted(
         int(f[1:-5])
-        for f in os.listdir(log)
+        for f in os.listdir(log_dir)
         if f.startswith("v") and f.endswith(".json")
     )
 
 
+def resolve_version(log_dir: str, version: int | None = None) -> int:
+    """``version`` checked against ``log_dir``'s published versions;
+    ``None`` resolves to the latest. A reader resolves ONCE and keeps
+    the number: later publishes never change what it reads."""
+    versions = log_versions(log_dir)
+    if not versions:
+        raise FileNotFoundError(f"no committed versions under {log_dir}")
+    if version is None:
+        return versions[-1]
+    if version not in versions:
+        raise ValueError(f"version {version} not in {versions}")
+    return version
+
+
+def write_json_atomic(path: str, obj) -> None:
+    """Write ``obj`` as JSON to ``path`` through a temp file and one
+    rename (creating the parent directory), so a reader sees the old
+    file or the new one, never a torn write. Every manifest of both
+    logs, and every ANN state file, is written here."""
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    tmp = f"{path}.tmp-{os.getpid()}"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
+def snapshot_versions(table_path: str) -> list[int]:
+    """Committed versions, ascending (empty if never committed)."""
+    return log_versions(_log_path(table_path))
+
+
 def _manifest(table_path: str, version: int) -> dict:
-    with open(os.path.join(_log_path(table_path), f"v{version:06d}.json")) as f:
+    with open(manifest_path(_log_path(table_path), version)) as f:
         return json.load(f)
 
 
@@ -75,8 +117,6 @@ def commit_snapshot(df: DataFrame, table_path: str, mode: str = "append") -> int
     files = list(new_files)
     if mode == "append" and versions:
         files = _manifest(table_path, versions[-1])["files"] + files
-    log = _log_path(table_path)
-    os.makedirs(log, exist_ok=True)
     manifest = {
         "version": version,
         "mode": mode,
@@ -85,10 +125,7 @@ def commit_snapshot(df: DataFrame, table_path: str, mode: str = "append") -> int
             f: os.path.getsize(os.path.join(table_path, f)) for f in new_files
         },
     }
-    tmp = os.path.join(log, f".v{version:06d}.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.rename(tmp, os.path.join(log, f"v{version:06d}.json"))  # atomic publish
+    write_json_atomic(manifest_path(_log_path(table_path), version), manifest)
     return version
 
 
@@ -98,13 +135,7 @@ def read_snapshot(
     """Scan the table AS OF ``version`` (default: latest). Reads exactly
     the manifest's file list — concurrent later commits are invisible
     (snapshot isolation for readers)."""
-    versions = snapshot_versions(table_path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {table_path}")
-    if version is None:
-        version = versions[-1]
-    if version not in versions:
-        raise ValueError(f"version {version} not in {versions}")
+    version = resolve_version(_log_path(table_path), version)
     files = _manifest(table_path, version)["files"]
     if not files:
         raise ValueError(f"version {version} has no files")
@@ -148,7 +179,7 @@ def vacuum_snapshots(table_path: str, keep_last: int = 1) -> list[str]:
                 if os.path.exists(p):
                     os.remove(p)
                     removed.append(f)
-        os.remove(os.path.join(_log_path(table_path), f"v{v:06d}.json"))
+        os.remove(manifest_path(_log_path(table_path), v))
     return sorted(set(removed))
 
 
@@ -167,12 +198,19 @@ def merge_into_snapshot(
     as the next version — Delta's ``MERGE`` + time travel on plain
     parquet. The superseded version stays readable (audit the merge by
     diffing two versions); single-writer contract as everywhere in
-    this module. Returns the new version."""
+    this module. A table with no committed version bootstraps version
+    0 from the change batch alone (the merge over an empty target with
+    the batch's data columns). Returns the new version."""
     from dea05_e2e_kafka_streaming_pipeline_spark.operators.cdc import (
         apply_cdc_changes,
     )
 
-    target = read_snapshot(spark, table_path)
+    if snapshot_versions(table_path):
+        target = read_snapshot(spark, table_path)
+    else:
+        meta = {op_col, ts_col} | ({seq_col} if seq_col else set())
+        data_cols = [c for c in changes.columns if c not in meta]
+        target = spark.createDataFrame([], changes.select(*data_cols).schema)
     merged = apply_cdc_changes(
         target, changes, key, ts_col=ts_col, op_col=op_col, seq_col=seq_col
     )

@@ -683,34 +683,17 @@ def cdc_snapshot_stream_sink(
     DATA (latest-wins is idempotent), so the table converges to the
     exactly-once state — a replay can only add a duplicate version
     whose content equals its predecessor. The first batch bootstraps
-    version 0 from the change batch alone."""
-    from dea05_e2e_kafka_streaming_pipeline_spark.operators.cdc import (
-        apply_cdc_changes,
-    )
+    version 0 from the change batch alone (``merge_into_snapshot`` on a
+    table with no committed version)."""
     from dea05_e2e_kafka_streaming_pipeline_spark.sources.txlog import (
-        commit_snapshot,
         merge_into_snapshot,
-        snapshot_versions,
     )
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
-        if not snapshot_versions(table_path):
-            meta = {op_col, ts_col} | ({seq_col} if seq_col else set())
-            data_cols = [c for c in batch_df.columns if c not in meta]
-            empty = spark.createDataFrame(
-                [], batch_df.select(*data_cols).schema
-            )
-            first = apply_cdc_changes(
-                empty, batch_df, key, ts_col=ts_col, op_col=op_col,
-                seq_col=seq_col,
-            )
-            commit_snapshot(first, table_path, mode="overwrite")
-            return
         merge_into_snapshot(
-            spark, table_path, batch_df, key,
+            batch_df.sparkSession, table_path, batch_df, key,
             ts_col=ts_col, op_col=op_col, seq_col=seq_col,
         )
 
@@ -846,6 +829,8 @@ def _ann_ingest_and_record(
     from dea05_e2e_kafka_streaming_pipeline_spark.operators.similarity import (
         ann_index_ingest_batch,
         ann_occupancy_psi,
+    )
+    from dea05_e2e_kafka_streaming_pipeline_spark.sources.txlog import (
         write_json_atomic,
     )
 
@@ -979,6 +964,8 @@ def ann_ingest_sink_versioned(
         ann_store_publish,
         ann_store_versions,
         ann_train_state,
+    )
+    from dea05_e2e_kafka_streaming_pipeline_spark.sources.txlog import (
         write_json_atomic,
     )
 

@@ -36,7 +36,7 @@ FIXTURE_DIR = "/root/reference/testing"
 ORDERS_AVRO = f"{FIXTURE_DIR}/streaming.public.order.avro"
 CUSTOMERS_AVRO = f"{FIXTURE_DIR}/streaming.public.customers.avro"
 
-pytestmark = pytest.mark.skipif(
+needs_captures = pytest.mark.skipif(
     not os.path.exists(ORDERS_AVRO), reason="reference avro fixtures not present"
 )
 
@@ -46,6 +46,7 @@ def _records(path):
     return [walk_decimals(r, schema) for r in recs]
 
 
+@needs_captures
 def test_avro_lite_decodes_order_capture():
     recs = _records(ORDERS_AVRO)
     assert len(recs) >= 1
@@ -61,6 +62,7 @@ def test_avro_lite_decodes_order_capture():
     assert rec["source"]["snapshot"] == "false"  # io.debezium.data.Enum
 
 
+@needs_captures
 def test_avro_lite_decodes_customer_capture():
     recs = _records(CUSTOMERS_AVRO)
     after = recs[0]["after"]
@@ -74,6 +76,7 @@ def test_avro_lite_decodes_customer_capture():
     }
 
 
+@needs_captures
 def test_decode_cdc_orders_on_real_capture(spark):
     env = spark.createDataFrame(_records(ORDERS_AVRO), CDC_ORDERS_ENVELOPE)
     out = decode_cdc_orders(env).collect()
@@ -92,6 +95,7 @@ def test_decode_cdc_orders_on_real_capture(spark):
     assert isinstance(row.order_amount, float)  # batch-path dtype
 
 
+@needs_captures
 def test_normalize_cdc_matches_reference_flatten(spark):
     """Engine flatten == the reference's selectExpr('after.*') columns
     (curated/dq_kafka.py:158-165) on the real customers capture."""
@@ -113,6 +117,7 @@ def test_normalize_cdc_matches_reference_flatten(spark):
     assert "@" in row.email
 
 
+@needs_captures
 def test_apply_cdc_changes_delete_on_real_capture(spark):
     """A delete event (after=NULL, before=image) built from the real
     capture removes the key from the snapshot."""
@@ -141,6 +146,7 @@ def test_apply_cdc_changes_delete_on_real_capture(spark):
     assert merged.count() == 0  # the only key was deleted
 
 
+@needs_captures
 def test_normalize_cdc_delete_surfaces_before_image(spark):
     base = _records(ORDERS_AVRO)[0]
     delete = dict(base)
@@ -153,6 +159,7 @@ def test_normalize_cdc_delete_surfaces_before_image(spark):
     assert rows[0]._cdc_op == "d"
 
 
+@needs_captures
 def test_read_avro_fallback_end_to_end(spark):
     """S9 functional without the spark-avro jar: read_avro(fallback=True)
     decodes the real capture (schema derived from the embedded writer
@@ -181,6 +188,7 @@ def test_avro_lite_truncated_varint_raises_eoferror():
         r.long()
 
 
+@needs_captures
 def test_read_avro_distributed_matches_driver_fallback(spark):
     """The distributed (binaryFile + mapInPandas) jar-less Avro scan
     must decode the reference's REAL Debezium capture identically to the
@@ -200,3 +208,106 @@ def test_read_avro_distributed_matches_driver_fallback(spark):
     got_rows = sorted((r.asDict(recursive=True) for r in got.collect()), key=key)
     want_rows = sorted((r.asDict(recursive=True) for r in want.collect()), key=key)
     assert got_rows == want_rows
+
+
+# The Debezium envelope shape of the reference captures, as Kafka
+# Connect's AvroConverter writes it: one named ``Value`` record shared
+# by ``before``/``after`` (referenced by name the second time), a
+# bytes-decimal amount, an epoch-day int date (``io.debezium.time.Date``
+# carries no Avro logical type), and the ``source.snapshot`` enum.
+_DEBEZIUM_ORDER_SCHEMA = {
+    "type": "record",
+    "name": "Envelope",
+    "namespace": "streaming.public.order",
+    "fields": [
+        {"name": "before", "type": ["null", {
+            "type": "record",
+            "name": "Value",
+            "fields": [
+                {"name": "order_id", "type": "int"},
+                {"name": "customer_id", "type": ["null", "int"]},
+                {"name": "order_date", "type": ["null", {
+                    "type": "int",
+                    "connect.name": "io.debezium.time.Date",
+                }]},
+                {"name": "order_amount", "type": ["null", {
+                    "type": "bytes",
+                    "logicalType": "decimal",
+                    "precision": 10,
+                    "scale": 2,
+                    "connect.name": "org.apache.kafka.connect.data.Decimal",
+                }]},
+            ],
+        }]},
+        {"name": "after", "type": ["null", "Value"]},
+        {"name": "source", "type": {
+            "type": "record",
+            "name": "Source",
+            "namespace": "io.debezium.connector.postgresql",
+            "fields": [
+                {"name": "connector", "type": "string"},
+                {"name": "ts_ms", "type": "long"},
+                {"name": "snapshot", "type": [{
+                    "type": "enum",
+                    "name": "SnapshotRecord",
+                    "namespace": "io.debezium.connector.common",
+                    "symbols": ["true", "last", "false", "incremental"],
+                }, "null"]},
+                {"name": "lsn", "type": ["null", "long"]},
+            ],
+        }},
+        {"name": "op", "type": "string"},
+        {"name": "ts_ms", "type": ["null", "long"]},
+    ],
+}
+
+
+def test_read_avro_distributed_matches_driver_on_debezium_shape(spark, tmp_path):
+    """The distributed (binaryFile + mapInPandas) jar-less Avro scan
+    decodes a Debezium-shaped container exactly like the driver-side
+    reader: same schema, same rows — snapshot reads, create, update and
+    a delete whose image sits in ``before`` only."""
+    from dea05_e2e_kafka_streaming_pipeline_spark.sources.avro_lite import (
+        read_avro_as_dataframe,
+        write_avro,
+    )
+    from dea05_e2e_kafka_streaming_pipeline_spark.sources.registry import (
+        read_avro_distributed,
+    )
+
+    def image(oid, cust, day, amount):
+        return {"order_id": oid, "customer_id": cust, "order_date": day,
+                "order_amount": None if amount is None else decimal.Decimal(amount)}
+
+    def event(op, before, after, snapshot, ts, lsn):
+        return {"before": before, "after": after, "op": op, "ts_ms": ts,
+                "source": {"connector": "postgresql", "ts_ms": ts - 5,
+                           "snapshot": snapshot, "lsn": lsn}}
+
+    records = [
+        event("r", None, image(21, 4, 19700, "100.25"), "true", 1_000, None),
+        event("r", None, image(22, None, 0, "-0.01"), "last", 1_001, None),
+        event("c", None, image(23, 7, None, None), "false", 2_000, 40),
+        event("u", image(21, 4, 19700, "100.25"),
+              image(21, 4, 19701, "99999999.99"), "false", 3_000, 41),
+        event("d", image(22, None, 0, "-0.01"), None, None, 4_000, 42),
+    ]
+    path = str(tmp_path / "streaming.public.order.avro")
+    write_avro(path, _DEBEZIUM_ORDER_SCHEMA, records)
+
+    want = read_avro_as_dataframe(spark, path)
+    got = read_avro_distributed(spark, path)
+    assert got.schema == want.schema
+    after = got.schema["after"].dataType
+    assert after["order_amount"].dataType.simpleString() == "decimal(10,2)"
+    assert after["order_date"].dataType.simpleString() == "int"
+    key = lambda r: (r["ts_ms"], r["op"])
+    got_rows = sorted((r.asDict(recursive=True) for r in got.collect()), key=key)
+    want_rows = sorted((r.asDict(recursive=True) for r in want.collect()), key=key)
+    assert got_rows == want_rows
+    assert [(r["op"], r["source"]["snapshot"]) for r in got_rows] == [
+        ("r", "true"), ("r", "last"), ("c", "false"), ("u", "false"), ("d", None)
+    ]
+    assert got_rows[3]["after"]["order_amount"] == decimal.Decimal("99999999.99")
+    assert got_rows[4]["after"] is None
+    assert got_rows[4]["before"]["order_amount"] == decimal.Decimal("-0.01")

@@ -171,9 +171,6 @@ _EAGER_BUILD_OK = {
     # materializes the snapshot-log table (commit + merge) at build,
     # like the BPE/IVF trained state
     "orders_snapshot_timetravel",
-    # same materialization + the Python Data Source read path plans
-    # its partitions via driver jobs (DataSource.reader contract)
-    "orders_timetravel_datasource",
     # closes the linkage match graph with the same CC loop as
     # dedup_cc_components (auto union-find edge gate = a count action)
     "entity_resolution_customers",

@@ -3,10 +3,15 @@ logical overwrite, and vacuum on plain parquet."""
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import os
+
+import pytest
 
 from dea05_e2e_kafka_streaming_pipeline_spark.sources.txlog import (
     commit_snapshot,
+    merge_into_snapshot,
     read_snapshot,
     snapshot_history,
     snapshot_versions,
@@ -22,6 +27,10 @@ def test_append_versions_time_travel(spark, tmp_path):
     assert read_snapshot(spark, t, version=0).count() == 100
     assert read_snapshot(spark, t, version=1).count() == 150
     assert read_snapshot(spark, t).count() == 150  # latest by default
+    with pytest.raises(ValueError, match="not in"):
+        read_snapshot(spark, t, version=9)
+    with pytest.raises(FileNotFoundError, match="no committed"):
+        read_snapshot(spark, str(tmp_path / "never_committed"))
 
 
 def test_overwrite_is_logical_old_versions_survive(spark, tmp_path):
@@ -63,12 +72,6 @@ def test_reader_snapshot_isolation(spark, tmp_path):
 def test_merge_into_snapshot_versioned_upserts(spark, tmp_path):
     """CDC MERGE against the snapshot log: upsert + delete land as a
     new version; the pre-merge snapshot remains readable for audit."""
-    from pyspark.sql import functions as F
-
-    from dea05_e2e_kafka_streaming_pipeline_spark.sources.txlog import (
-        merge_into_snapshot,
-    )
-
     t = str(tmp_path / "tbl5")
     base = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c")], "id long, v string"
@@ -154,12 +157,8 @@ def test_snapshot_changes_between_versions(spark, tmp_path):
     """table_changes(v_from, v_to) parity: the change feed between two
     committed versions carries exactly the insert/update/delete rows
     that replay v_from into v_to."""
-    import pytest
-
     from dea05_e2e_kafka_streaming_pipeline_spark.sources.txlog import (
-        commit_snapshot,
         snapshot_changes,
-        vacuum_snapshots,
     )
 
     table = str(tmp_path / "t")
@@ -190,48 +189,79 @@ def test_snapshot_changes_between_versions(spark, tmp_path):
         snapshot_changes(spark, table, 0, 1, key_cols=("id",))
 
 
-def test_txlog_datasource_read_and_time_travel(spark, tmp_path):
-    """r4 verdict item 8: format('txlog') reads the same manifests as
-    read_snapshot — latest by default, any version via versionAsOf —
-    with identical rows and schema."""
-    t = str(tmp_path / "ds_tbl")
-    commit_snapshot(spark.range(0, 100).withColumnRenamed("id", "k"), t)
-    commit_snapshot(
-        spark.range(100, 150).withColumnRenamed("id", "k"), t, mode="append"
+def test_typed_round_trip_as_of_both_versions(spark, tmp_path):
+    """Timestamp, decimal, date and nullable string columns come back
+    from every version exactly as committed, whatever the host's
+    timezone: the write and the read are both JVM parquet."""
+    from pyspark.sql import functions as F
+
+    utc = datetime.timezone.utc
+    epoch = datetime.datetime(1970, 1, 1, tzinfo=utc)
+    schema = "id long, ts timestamp, amount decimal(12,2), d date, note string"
+    rows_v0 = [
+        (1, datetime.datetime(2024, 3, 10, 12, 0, 0, 123456, tzinfo=utc),
+         decimal.Decimal("1234567890.12"), datetime.date(2024, 3, 10), "a"),
+        (2, datetime.datetime(1999, 12, 31, 23, 59, 59, tzinfo=utc),
+         decimal.Decimal("-0.01"), datetime.date(1970, 1, 1), None),
+    ]
+    rows_v1 = [
+        (3, datetime.datetime(2024, 11, 3, 6, 30, tzinfo=utc),
+         decimal.Decimal("0.00"), datetime.date(2000, 2, 29), "c"),
+    ]
+    t = str(tmp_path / "typed")
+    commit_snapshot(spark.createDataFrame(rows_v0, schema), t)
+    commit_snapshot(spark.createDataFrame(rows_v1, schema), t, mode="append")
+
+    def expect(rows):
+        return sorted(
+            (i, (ts - epoch) // datetime.timedelta(microseconds=1), a, d, n)
+            for i, ts, a, d, n in rows
+        )
+
+    def got(version):
+        df = read_snapshot(spark, t, version=version)
+        assert [f.dataType.simpleString() for f in df.schema] == [
+            "bigint", "timestamp", "decimal(12,2)", "date", "string"
+        ]
+        return sorted(
+            tuple(r)
+            for r in df.select(
+                "id", F.unix_micros("ts"), "amount", "d", "note"
+            ).collect()
+        )
+
+    assert got(0) == expect(rows_v0)
+    assert got(1) == expect(rows_v0 + rows_v1)
+
+
+def test_merge_into_snapshot_bootstraps_version_zero(spark, tmp_path):
+    """MERGE INTO a path with no committed version lands version 0 =
+    the change batch replayed over an empty table: latest change per
+    key wins, a delete wins a same-ts tie, deletes leave no row."""
+    changes = [
+        (1, "a", 1, "c"),
+        (1, "a2", 3, "u"),
+        (2, "b", 1, "c"),
+        (2, None, 2, "d"),
+        (3, "c", 5, "c"),
+        (3, None, 5, "d"),
+        (4, "d", 1, "r"),
+    ]
+    t = str(tmp_path / "fresh")
+    v = merge_into_snapshot(
+        spark,
+        t,
+        spark.createDataFrame(
+            changes, "id long, v string, _cdc_ts_ms long, _cdc_op string"
+        ),
+        key="id",
     )
+    assert v == 0 and snapshot_versions(t) == [0]
 
-    latest = spark.read.format("txlog").load(t)
-    assert latest.schema == read_snapshot(spark, t).schema
-    assert sorted(r.k for r in latest.collect()) == list(range(150))
-
-    v0 = spark.read.format("txlog").option("versionAsOf", 0).load(t)
-    assert sorted(r.k for r in v0.collect()) == list(range(100))
-
-    import pytest
-
-    with pytest.raises(Exception, match="not in"):
-        spark.read.format("txlog").option("versionAsOf", 9).load(t).collect()
-
-
-def test_txlog_datasource_write_append_overwrite(spark, tmp_path):
-    """format('txlog') writes publish manifest versions with two-phase
-    commit: append extends the file list, overwrite starts fresh while
-    old versions stay readable; both interoperate with the helper
-    read path."""
-    t = str(tmp_path / "ds_w")
-    spark.range(0, 10).write.format("txlog").mode("append").save(t)
-    spark.range(10, 15).write.format("txlog").mode("append").save(t)
-    assert snapshot_versions(t) == [0, 1]
-    assert read_snapshot(spark, t).count() == 15
-    assert spark.read.format("txlog").load(t).count() == 15
-
-    spark.range(0, 3).write.format("txlog").mode("overwrite").save(t)
-    assert spark.read.format("txlog").load(t).count() == 3
-    # logical overwrite: version 1 still readable (time travel)
-    assert (
-        spark.read.format("txlog").option("versionAsOf", 1).load(t).count()
-        == 15
-    )
-    # round-trip interop: helper commit then data-source read
-    commit_snapshot(spark.range(3, 5), t, mode="append")
-    assert spark.read.format("txlog").load(t).count() == 5
+    replay: dict = {}
+    for key, val, ts, op in sorted(changes, key=lambda c: (c[2], c[3] == "d")):
+        replay[key] = None if op == "d" else val
+    want = {k: val for k, val in replay.items() if val is not None}
+    df = read_snapshot(spark, t)
+    assert df.columns == ["id", "v"]
+    assert {r.id: r.v for r in df.collect()} == want
