@@ -74,6 +74,47 @@ def decode_epoch_days(df: DataFrame, columns: list[str]) -> DataFrame:
     return df
 
 
+def latest_change_per_key(
+    changes: DataFrame,
+    key: str,
+    ts_col: str = "_cdc_ts_ms",
+    op_col: str = "_cdc_op",
+    seq_col: str | None = None,
+) -> DataFrame:
+    """The first half of :func:`apply_cdc_changes`: the LATEST change per
+    key of a change batch, ties at the same ``ts_col`` broken by op
+    (delete wins over upsert), then by ``seq_col`` when given. One
+    window shuffle over the batch; the output keeps every input column
+    and is what :func:`merge_latest_changes` consumes."""
+    from pyspark.sql import Window
+
+    order = [F.desc(ts_col), F.desc(F.col(op_col) == "d")]
+    if seq_col is not None:
+        order.append(F.desc(seq_col))
+    w = Window.partitionBy(key).orderBy(*order)
+    return (
+        changes.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
+def merge_latest_changes(
+    target: DataFrame,
+    latest: DataFrame,
+    key: str,
+    op_col: str = "_cdc_op",
+) -> DataFrame:
+    """The second half of :func:`apply_cdc_changes`: merge at most one
+    change per key (the output of :func:`latest_change_per_key`) into
+    ``target``. Target rows whose key changed are dropped (left-anti
+    join), and the non-delete changes are unioned in with the target's
+    columns."""
+    upserts = latest.filter(F.col(op_col) != "d").select(*target.columns)
+    untouched = target.join(latest.select(key), key, "left_anti")
+    return untouched.unionByName(upserts)
+
+
 def apply_cdc_changes(
     target: DataFrame,
     changes: DataFrame,
@@ -91,6 +132,11 @@ def apply_cdc_changes(
     2. ``op = 'd'`` removes the key; c/u/r upserts the ``after`` image;
     3. target rows for untouched keys pass through.
 
+    Step 1 is :func:`latest_change_per_key`, steps 2-3
+    :func:`merge_latest_changes`; callers that pin the window output
+    between the two (``streaming/pipeline.py:upsert_batch_into_parquet``)
+    call them separately.
+
     ``changes`` is the output of ``normalize_cdc(df, keep_meta=True,
     drop_deletes=False)``. Cost: one window shuffle over the (small)
     change batch + one hash join against the target — the target is
@@ -104,21 +150,8 @@ def apply_cdc_changes(
     equal-ts non-deletes is whichever row_number sees first
     (partition-order-dependent).
     """
-    from pyspark.sql import Window
-
-    order = [F.desc(ts_col), F.desc(F.col(op_col) == "d")]
-    if seq_col is not None:
-        order.append(F.desc(seq_col))
-    w = Window.partitionBy(key).orderBy(*order)
-    latest = (
-        changes.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    upserts = latest.filter(F.col(op_col) != "d").select(*target.columns)
-    touched = latest.select(key)
-    untouched = target.join(touched, key, "left_anti")
-    return untouched.unionByName(upserts)
+    latest = latest_change_per_key(changes, key, ts_col, op_col, seq_col)
+    return merge_latest_changes(target, latest, key, op_col)
 
 
 def scd2_history(

@@ -47,6 +47,23 @@ REPORT_COLUMNS = (
 )
 
 
+def _failed_pct(failed: Column, denominator: Column) -> Column:
+    """Failure percentage, with the zero guard the reference lacked: an
+    empty table fails 0.0% of its rows."""
+    return F.when(
+        denominator != 0, failed.cast("double") * 100.0 / denominator
+    ).otherwise(F.lit(0.0))
+
+
+def _status(failed: Column, denominator: Column, threshold: Column) -> Column:
+    """The one PASS/FAIL rule, shared by ``report()`` and ``passed()``:
+    PASS iff the failure percentage is strictly below the threshold
+    (reference semantics)."""
+    return F.when(_failed_pct(failed, denominator) < threshold, "PASS").otherwise(
+        "FAIL"
+    )
+
+
 @dataclass
 class _AggCheck:
     check_type: str
@@ -182,6 +199,27 @@ class DataQualityValidator:
             )
         return aug.agg(*aggs)
 
+    def _entries(self) -> list[tuple]:
+        """One ``(check_type, check_name, failed_count, denominator,
+        threshold)`` per check, the counts as Columns over
+        :meth:`_aggregate`'s row. Volume is a 0/1 failure over
+        denominator 1 with threshold 100, so it PASSes iff in bounds
+        under the same strict ``<`` rule."""
+        total = F.col("__total")
+        entries = [
+            (chk.check_type, chk.name, F.col(f"__c{i}"), total, chk.threshold_pct)
+            for i, chk in enumerate(self._agg_checks)
+        ]
+        for vol in self._volume:
+            in_bounds = (total >= vol.expected_min) & (total <= vol.expected_max)
+            failed = F.when(in_bounds, F.lit(0)).otherwise(F.lit(1))
+            entries.append(("volume", vol.name, failed, F.lit(1).cast("long"), 100.0))
+        entries += [
+            ("consistency", con.name, F.col(f"__k{j}"), total, con.threshold_pct)
+            for j, con in enumerate(self._consistency)
+        ]
+        return entries
+
     def report(self) -> DataFrame:
         """Long-format report DataFrame (one row per check).
 
@@ -192,63 +230,36 @@ class DataQualityValidator:
         no second scan. One explode turns the 1-row aggregate into the
         long-format report.
 
-        Each check contributes one struct ``(check_type, check_name,
-        failed_count, denominator, threshold)``; ``total_rows``,
-        ``failed_pct`` and ``status`` are computed once, after the
-        explode. Volume is a 0/1 failure over denominator 1 with
-        threshold 100, so it PASSes iff in bounds under the same strict
-        ``<`` rule.
+        Each check contributes one struct of its :meth:`_entries` tuple;
+        ``total_rows``, ``failed_pct`` and ``status`` are computed once,
+        after the explode, by :func:`_failed_pct` and :func:`_status`.
         """
-
-        def entry(check_type, name, failed, denominator, threshold):
-            return F.struct(
+        entries = [
+            F.struct(
                 F.lit(check_type).alias("check_type"),
                 F.lit(name).alias("check_name"),
                 failed.cast("long").alias("failed_count"),
                 denominator.alias("denominator"),
                 F.lit(float(threshold)).alias("threshold"),
             )
-
-        total = F.col("__total")
-        entries = [
-            entry(chk.check_type, chk.name, F.col(f"__c{i}"), total, chk.threshold_pct)
-            for i, chk in enumerate(self._agg_checks)
-        ]
-        for vol in self._volume:
-            in_bounds = (total >= vol.expected_min) & (total <= vol.expected_max)
-            failed = F.when(in_bounds, F.lit(0)).otherwise(F.lit(1))
-            one = F.lit(1).cast("long")
-            entries.append(entry("volume", vol.name, failed, one, 100.0))
-        entries += [
-            entry("consistency", con.name, F.col(f"__k{j}"), total, con.threshold_pct)
-            for j, con in enumerate(self._consistency)
+            for check_type, name, failed, denominator, threshold in self._entries()
         ]
         if not entries:
             spark = self._df.sparkSession
             return spark.createDataFrame([], schema=self._empty_schema())
 
         e = self._aggregate().select(
-            total.alias("total_rows"), F.explode(F.array(*entries)).alias("e")
+            F.col("__total").alias("total_rows"), F.explode(F.array(*entries)).alias("e")
         )
-        # zero-guard the reference lacked: empty table → 0.0%
-        pct = F.when(
-            F.col("e.denominator") != 0,
-            F.col("e.failed_count").cast("double") * 100.0 / F.col("e.denominator"),
-        ).otherwise(F.lit(0.0))
-        out = e.select(
+        failed, denominator = F.col("e.failed_count"), F.col("e.denominator")
+        return e.select(
             "e.check_type",
             "e.check_name",
             "total_rows",
             "e.failed_count",
-            pct.alias("failed_pct"),
+            _failed_pct(failed, denominator).alias("failed_pct"),
             F.col("e.threshold").alias("threshold_pct"),
-        )
-        # strict-< threshold (reference semantics)
-        return out.withColumn(
-            "status",
-            F.when(F.col("failed_pct") < F.col("threshold_pct"), "PASS").otherwise(
-                "FAIL"
-            ),
+            _status(failed, denominator, F.col("e.threshold")).alias("status"),
         )
 
     @staticmethod
@@ -284,10 +295,24 @@ class DataQualityValidator:
         }
 
     def passed(self) -> bool:
-        """True iff every check PASSes (drives the gate). Collects the
-        tiny report — never the data."""
-        rows = self.report().select("status").collect()
-        return all(r.status == "PASS" for r in rows)
+        """True iff every check PASSes (drives the gate). Applies the
+        report's :func:`_status` rule per check to the one-row
+        :meth:`_aggregate` and collects one array of statuses: the same
+        verdict as :meth:`report` without planning its explode, and
+        never the data."""
+        verdicts = self._verdicts()
+        return verdicts is None or all(s == "PASS" for s in verdicts.first()[0])
+
+    def _verdicts(self) -> DataFrame | None:
+        """The one-row frame :meth:`passed` collects: one ``status`` per
+        check, in :meth:`report` order. ``None`` when there is no check."""
+        statuses = [
+            _status(failed, denominator, F.lit(float(threshold)))
+            for _, _, failed, denominator, threshold in self._entries()
+        ]
+        if not statuses:
+            return None
+        return self._aggregate().select(F.array(*statuses).alias("statuses"))
 
     def write_report(self, path: str) -> dict:
         """Land :meth:`summary` as one JSON object at ``path`` — the

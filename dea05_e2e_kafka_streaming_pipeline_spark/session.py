@@ -55,6 +55,22 @@ _DEFAULT_CONFS: dict[str, str] = {
     # row valve is raised to a number that only a runaway (cyclic)
     # recursion would reach.
     "spark.sql.cteRecursionRowLimit": "1000000000",
+    # Streaming checkpoint log (offsets, commits, state metadata) through
+    # the Hadoop FileSystem API rather than FileContext. Without the
+    # native Hadoop library, FileContext.rename calls getFileLinkStatus
+    # on both paths and each call starts a `readlink` process — about
+    # half the processes a micro-batch stream started; FileSystem.rename
+    # on the local file system is File.renameTo, in process. Both
+    # managers write a temp file and rename it to the batch's fresh
+    # name: atomic on the local file system and HDFS, non-atomic on S3A
+    # under either. This manager checks that the name is still free
+    # before its rename instead of the rename refusing to overwrite, so
+    # two runs of one query racing on one batch are not told apart by
+    # the file system; one writer per checkpoint is the contract anyway.
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
     "spark.driver.extraJavaOptions": "-Djava.security.manager=allow",

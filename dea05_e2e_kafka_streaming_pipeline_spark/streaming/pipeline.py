@@ -139,8 +139,21 @@ def upsert_batch_into_parquet(
     its keys hash into, so the read prunes to those partitions and the
     dynamic-overwrite write rewrites only them — cost per batch is
     O(touched buckets), never O(target). The merge itself is
-    :func:`~..operators.cdc.apply_cdc_changes` (latest-change-per-key
-    window over the batch, delete-wins, anti-join pass-through).
+    :func:`~..operators.cdc.apply_cdc_changes` taken in its two halves:
+    the latest-change-per-key window over the batch, then the
+    delete-wins anti-join + union against the touched buckets.
+
+    One read of the batch: the window output is pinned once
+    (``localCheckpoint(eager=True)``), and an ``Observation`` on that
+    pin yields the touched buckets — an empty set means an empty batch,
+    which returns before any write. The merge and the write read the
+    pin, never the batch again.
+
+    No pin sits between the merge and the write, although the write
+    overwrites the buckets the merge reads: dynamic partition overwrite
+    stages every task's output under ``.spark-staging-*`` and replaces
+    a bucket's directory only at job commit, after every task has read
+    it. A failed write therefore leaves every bucket as it was.
 
     Replays are self-healing: merging an already-applied change is a
     no-op upsert (or a re-delete of an absent key), and every affected
@@ -169,40 +182,43 @@ def upsert_batch_into_parquet(
     discipline any parquet table manager applies). The buckets still
     present are observed on the write itself, not by a second job.
 
-    An empty batch returns before any read or write: the one job that
-    lists the touched buckets also decides emptiness.
-
     The target is read with :func:`~..sources.registry.read_parquet_or_none`:
     a missing target, or one left with no data files after every key was
     deleted, merges against an empty frame. Any other read failure (a
-    corrupt file in any bucket fails schema inference) raises, so the
-    batch fails and the checkpoint retries it; merging against an empty
-    frame there would rewrite each touched bucket from the batch alone.
+    corrupt file in any bucket fails schema inference, a corrupt file in
+    a touched bucket fails the write's scan) raises, so the batch fails
+    and the checkpoint retries it; merging against an empty frame there
+    would rewrite each touched bucket from the batch alone.
     """
+    from dea05_e2e_kafka_streaming_pipeline_spark.operators.cdc import (
+        latest_change_per_key,
+        merge_latest_changes,
+    )
+
     spark = batch.sparkSession
     meta = {op_col, ts_col} | ({seq_col} if seq_col else set())
     data_cols = [c for c in batch.columns if c not in meta]
     bucket = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
-    affected = sorted(batch.agg(F.collect_set(bucket)).collect()[0][0])
+    # resolved before any Observation exists: a missing target's failed
+    # analysis would otherwise reach the Observation's listener
+    target = read_parquet_or_none(spark, target_dir)
+    touched = Observation()
+    latest = (
+        latest_change_per_key(batch, key, ts_col, op_col, seq_col)
+        .observe(touched, F.collect_set(bucket).alias("buckets"))
+        .localCheckpoint(eager=True)
+    )
+    affected = sorted(touched.get["buckets"])
     if not affected:
         return
-    target = read_parquet_or_none(spark, target_dir)
     if target is None:  # first batch, or every key deleted
         target = spark.createDataFrame([], batch.select(*data_cols).schema)
     else:
         target = target.filter(F.col("bucket").isin(affected)).select(*data_cols)
-    from dea05_e2e_kafka_streaming_pipeline_spark.operators.cdc import (
-        apply_cdc_changes,
-    )
-
     merged = (
-        apply_cdc_changes(
-            target, batch, key, ts_col=ts_col, op_col=op_col, seq_col=seq_col
-        )
+        merge_latest_changes(target, latest, key, op_col)
         .withColumn("bucket", bucket)
         .repartition("bucket")
-        # materialize BEFORE overwriting the directory the plan reads
-        .localCheckpoint(eager=True)
     )
     written = Observation()
     (

@@ -31,6 +31,7 @@ from dea05_e2e_kafka_streaming_pipeline_spark.sources.avro_lite import (
     read_avro,
     walk_decimals,
 )
+from tests.conftest import write_debezium_orders_avro
 
 FIXTURE_DIR = "/root/reference/testing"
 ORDERS_AVRO = f"{FIXTURE_DIR}/streaming.public.order.avro"
@@ -210,58 +211,6 @@ def test_read_avro_distributed_matches_driver_fallback(spark):
     assert got_rows == want_rows
 
 
-# The Debezium envelope shape of the reference captures, as Kafka
-# Connect's AvroConverter writes it: one named ``Value`` record shared
-# by ``before``/``after`` (referenced by name the second time), a
-# bytes-decimal amount, an epoch-day int date (``io.debezium.time.Date``
-# carries no Avro logical type), and the ``source.snapshot`` enum.
-_DEBEZIUM_ORDER_SCHEMA = {
-    "type": "record",
-    "name": "Envelope",
-    "namespace": "streaming.public.order",
-    "fields": [
-        {"name": "before", "type": ["null", {
-            "type": "record",
-            "name": "Value",
-            "fields": [
-                {"name": "order_id", "type": "int"},
-                {"name": "customer_id", "type": ["null", "int"]},
-                {"name": "order_date", "type": ["null", {
-                    "type": "int",
-                    "connect.name": "io.debezium.time.Date",
-                }]},
-                {"name": "order_amount", "type": ["null", {
-                    "type": "bytes",
-                    "logicalType": "decimal",
-                    "precision": 10,
-                    "scale": 2,
-                    "connect.name": "org.apache.kafka.connect.data.Decimal",
-                }]},
-            ],
-        }]},
-        {"name": "after", "type": ["null", "Value"]},
-        {"name": "source", "type": {
-            "type": "record",
-            "name": "Source",
-            "namespace": "io.debezium.connector.postgresql",
-            "fields": [
-                {"name": "connector", "type": "string"},
-                {"name": "ts_ms", "type": "long"},
-                {"name": "snapshot", "type": [{
-                    "type": "enum",
-                    "name": "SnapshotRecord",
-                    "namespace": "io.debezium.connector.common",
-                    "symbols": ["true", "last", "false", "incremental"],
-                }, "null"]},
-                {"name": "lsn", "type": ["null", "long"]},
-            ],
-        }},
-        {"name": "op", "type": "string"},
-        {"name": "ts_ms", "type": ["null", "long"]},
-    ],
-}
-
-
 def test_read_avro_distributed_matches_driver_on_debezium_shape(spark, tmp_path):
     """The distributed (binaryFile + mapInPandas) jar-less Avro scan
     decodes a Debezium-shaped container exactly like the driver-side
@@ -269,32 +218,12 @@ def test_read_avro_distributed_matches_driver_on_debezium_shape(spark, tmp_path)
     a delete whose image sits in ``before`` only."""
     from dea05_e2e_kafka_streaming_pipeline_spark.sources.avro_lite import (
         read_avro_as_dataframe,
-        write_avro,
     )
     from dea05_e2e_kafka_streaming_pipeline_spark.sources.registry import (
         read_avro_distributed,
     )
 
-    def image(oid, cust, day, amount):
-        return {"order_id": oid, "customer_id": cust, "order_date": day,
-                "order_amount": None if amount is None else decimal.Decimal(amount)}
-
-    def event(op, before, after, snapshot, ts, lsn):
-        return {"before": before, "after": after, "op": op, "ts_ms": ts,
-                "source": {"connector": "postgresql", "ts_ms": ts - 5,
-                           "snapshot": snapshot, "lsn": lsn}}
-
-    records = [
-        event("r", None, image(21, 4, 19700, "100.25"), "true", 1_000, None),
-        event("r", None, image(22, None, 0, "-0.01"), "last", 1_001, None),
-        event("c", None, image(23, 7, None, None), "false", 2_000, 40),
-        event("u", image(21, 4, 19700, "100.25"),
-              image(21, 4, 19701, "99999999.99"), "false", 3_000, 41),
-        event("d", image(22, None, 0, "-0.01"), None, None, 4_000, 42),
-    ]
-    path = str(tmp_path / "streaming.public.order.avro")
-    write_avro(path, _DEBEZIUM_ORDER_SCHEMA, records)
-
+    path = write_debezium_orders_avro(str(tmp_path / "streaming.public.order.avro"))
     want = read_avro_as_dataframe(spark, path)
     got = read_avro_distributed(spark, path)
     assert got.schema == want.schema

@@ -196,6 +196,8 @@ def _fk_frames(spark):
 
 
 def _agreement_case(spark, case):
+    if case == "no_checks":
+        return DataQualityValidator(spark.range(3))
     if case.startswith("empty"):
         df = spark.range(0).select(F.col("id").alias("order_id"))
         lo = 0 if case == "empty" else 1
@@ -234,6 +236,7 @@ def _agreement_case(spark, case):
         ("volume_out_of_bounds", False),
         ("fk_pass", True),
         ("fk_fail", False),
+        ("no_checks", True),
     ],
 )
 def test_passed_agrees_with_report(spark, case, expected):
@@ -245,6 +248,26 @@ def test_passed_agrees_with_report(spark, case, expected):
     statuses = [r.status for r in v.report().collect()]
     assert v.passed() is expected
     assert all(s == "PASS" for s in statuses) is expected
+
+
+def test_passed_plans_no_explode(spark):
+    """passed() reads the one-row aggregate as one array of statuses:
+    its optimized plan has no Generate (report()'s explode) and one
+    Aggregate, while report() still explodes."""
+    facts, dim = _fk_frames(spark)
+    v = (
+        DataQualityValidator(facts)
+        .check_completeness(["customer_id"])
+        .check_accuracy("positive", F.col("customer_id") > 0)
+        .check_consistency("fk", dim, "customer_id")
+        .check_volume(1, 10)
+    )
+    plan = v._verdicts()._jdf.queryExecution().optimizedPlan().toString()
+    assert "Generate" not in plan
+    assert plan.count("Aggregate") == 1
+    assert "Generate" in v.report()._jdf.queryExecution().optimizedPlan().toString()
+    (row,) = v._verdicts().collect()
+    assert row.statuses == [r.status for r in v.report().collect()]
 
 
 def test_consistency_marker_is_existence_join(spark):

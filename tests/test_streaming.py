@@ -542,6 +542,58 @@ def test_upsert_batch_raises_on_unreadable_target(spark, tmp_path):
     assert bucket_rows(1) == before
 
 
+def _keys_in_bucket(spark, b, n_buckets, n=1000):
+    bucket = F.pmod(F.xxhash64("order_id"), F.lit(n_buckets))
+    rows = spark.range(n).withColumnRenamed("id", "order_id").filter(bucket == b)
+    return [r.order_id for r in rows.collect()]
+
+
+def test_upsert_batch_failed_write_leaves_every_bucket(spark, tmp_path):
+    """The merge reads the buckets the write overwrites, with no pin
+    between them: dynamic overwrite replaces a bucket only at job
+    commit. A corrupt file in a touched bucket (not the one schema
+    inference reads) fails the write; every other bucket, touched or
+    not, keeps its files byte for byte, and once the corrupt file is
+    put back the table reads as before the batch."""
+    from dea05_e2e_kafka_streaming_pipeline_spark.streaming.pipeline import (
+        upsert_batch_into_parquet,
+    )
+
+    target = tmp_path / "silver"
+    upsert_batch_into_parquet(
+        _changes(spark, [(k, float(k), "r", 0) for k in range(1000)]),
+        str(target),
+        key="order_id",
+        n_buckets=4,
+    )
+
+    def files():
+        return {p: p.read_bytes() for p in target.rglob("*") if p.is_file()}
+
+    def rows():
+        got = spark.read.parquet(str(target)).select("order_id", "amount").collect()
+        return sorted((r.order_id, r.amount) for r in got)
+
+    before_files, before_rows = files(), rows()
+    # touch buckets 1 and 3; schema inference reads the first file in
+    # path order (bucket=0), so the corrupt bucket-3 file fails the scan
+    keys = _keys_in_bucket(spark, 1, 4)[:5] + _keys_in_bucket(spark, 3, 4)[:5]
+    (corrupt,) = (target / "bucket=3").glob("part-*")
+    corrupt.write_bytes(b"not parquet" * 64)
+    with pytest.raises(Exception):
+        upsert_batch_into_parquet(
+            _changes(spark, [(k, -1.0, "u", 1) for k in keys]),
+            str(target),
+            key="order_id",
+            n_buckets=4,
+        )
+    after_files = files()
+    corrupt.write_bytes(before_files.pop(corrupt))
+    assert after_files.pop(corrupt) == b"not parquet" * 64
+    assert after_files == before_files
+    assert rows() == before_rows
+
+
 def test_upsert_batch_writes_one_file_per_bucket(spark, tmp_path):
     """Each touched bucket is rewritten as one file by one task, however
     many partitions the preload and the change batches arrive in, so the
@@ -619,6 +671,87 @@ def test_stream_upsert_sink_converges_across_batches(spark, tmp_path):
         .collect()
     }
     assert got == {2: 25.0, 3: 30.0}
+
+
+def test_stream_upsert_sink_reads_each_change_once(spark, tmp_path):
+    """Over a two-chunk file-backed topic the upsert sink reads every
+    change exactly once (the progress' summed ``numInputRows`` is the
+    number of changes), and the table ends equal to replaying the
+    changes in order."""
+    import datetime as dt
+    import json
+    import os
+
+    import pyspark.sql.types as T
+
+    from dea05_e2e_kafka_streaming_pipeline_spark.streaming.pipeline import (
+        stream_upsert_sink,
+    )
+    from dea05_e2e_kafka_streaming_pipeline_spark.streaming.sources import (
+        kafka_json_stream_surrogate,
+    )
+
+    chunks = [
+        [(k, float(k), "c", 1) for k in range(40)],
+        [(k, k + 0.5, "u", 2) for k in range(0, 40, 3)]
+        + [(k, None, "d", 2) for k in range(1, 40, 5)]
+        + [(3, 9.0, "u", 3), (100, 1.0, "c", 2), (100, 2.0, "u", 4)]
+        + [(6, None, "d", 3), (6, 7.0, "u", 3)],  # delete wins a tie
+    ]
+    topic = tmp_path / "topic"
+    topic.mkdir()
+    t0 = time.time() - 86400
+    stamp = dt.datetime.fromtimestamp(t0, dt.timezone.utc).isoformat()
+    for i, chunk in enumerate(chunks):
+        path = topic / f"chunk-{i}.json"
+        path.write_text(
+            "".join(
+                json.dumps(
+                    {
+                        "key": str(k),
+                        "value": json.dumps(
+                            {"order_id": k, "amount": a, "_cdc_op": op, "_cdc_ts_ms": ts}
+                        ),
+                        "timestamp": stamp,
+                    }
+                )
+                + "\n"
+                for k, a, op, ts in chunk
+            )
+        )
+        os.utime(path, (t0 + i, t0 + i))  # the file source reads oldest first
+    schema = T.StructType(
+        [
+            T.StructField("order_id", T.LongType()),
+            T.StructField("amount", T.DoubleType()),
+            T.StructField("_cdc_op", T.StringType()),
+            T.StructField("_cdc_ts_ms", T.LongType()),
+        ]
+    )
+    q = stream_upsert_sink(
+        kafka_json_stream_surrogate(spark, str(topic), schema, max_offsets_per_trigger=1),
+        target_dir=str(tmp_path / "silver"),
+        checkpoint=str(tmp_path / "ckpt"),
+        key="order_id",
+        n_buckets=4,
+        available_now=True,
+    )
+    assert q.awaitTermination(600)
+    assert q.exception() is None
+    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(batches) == 2
+    assert sum(p["numInputRows"] for p in batches) == sum(map(len, chunks))
+
+    state: dict[int, float] = {}
+    for chunk in chunks:
+        for k, a, op, _ in sorted(chunk, key=lambda c: (c[3], c[2] == "d")):
+            if op == "d":
+                state.pop(k, None)
+            else:
+                state[k] = a
+    got = spark.read.parquet(str(tmp_path / "silver")).collect()
+    assert len(got) == len(state)
+    assert {r.order_id: r.amount for r in got} == state
 
 
 def test_windowed_stats_sliding_double_counts(spark):
