@@ -133,9 +133,12 @@ def apply_cdc_changes(
     3. target rows for untouched keys pass through.
 
     Step 1 is :func:`latest_change_per_key`, steps 2-3
-    :func:`merge_latest_changes`; callers that pin the window output
-    between the two (``streaming/pipeline.py:upsert_batch_into_parquet``)
-    call them separately.
+    :func:`merge_latest_changes`. This is the merge over DataFrames;
+    the one merge into a stored table,
+    ``streaming/pipeline.py:upsert_batch_into_parquet``, calls the two
+    halves separately: it pins the window output between them and
+    merges only the target buckets the batch touches, publishing each
+    batch as one snapshot-log version (``sources/txlog.py``).
 
     ``changes`` is the output of ``normalize_cdc(df, keep_meta=True,
     drop_deletes=False)``. Cost: one window shuffle over the (small)

@@ -277,19 +277,19 @@ _PROFILE_COL = """
 @lru_cache(maxsize=None)
 def _txlog_table(sf_dir: str) -> str:
     """Materialize (once per process) a snapshot-log table exercising
-    the full txlog flow on the orders entity: version 0 = the entity;
-    version 1 = a deterministic CDC MERGE (every order_id % 97 == 0
-    gets +1.00 on its amount, every % 101 == 0 is deleted; delete wins
-    on the overlap by the merge's same-ts tie-break). Returns the table
-    path — `orders_snapshot_timetravel` reads BOTH versions back."""
+    the full CDC merge flow on the orders entity: version 0 = the
+    entity merged as snapshot reads into an empty table; version 1 = a
+    deterministic CDC MERGE (every order_id % 97 == 0 gets +1.00 on its
+    amount, every % 101 == 0 is deleted; delete wins on the overlap by
+    the merge's same-ts tie-break). Returns the table path —
+    `orders_snapshot_timetravel` reads BOTH versions back."""
     import tempfile
 
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from dea05_e2e_kafka_streaming_pipeline_spark.sources.txlog import (
-        commit_snapshot,
-        merge_into_snapshot,
+    from dea05_e2e_kafka_streaming_pipeline_spark.streaming.pipeline import (
+        upsert_batch_into_parquet,
     )
 
     spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
@@ -297,27 +297,18 @@ def _txlog_table(sf_dir: str) -> str:
     orders = load_orders(spark, sf_dir).withColumn(
         "order_amount", F.col("order_amount").cast("decimal(18,2)")
     )
-    commit_snapshot(orders, path, mode="overwrite")
-    upd = orders.filter(F.col("order_id") % 97 == 0).select(
-        "order_id",
-        "order_date",
-        (F.col("order_amount") + F.lit(1).cast("decimal(18,2)"))
-        .cast("decimal(18,2)")
-        .alias("order_amount"),
-        "customer_id",
-        F.lit(1).alias("_cdc_ts_ms"),
-        F.lit("u").alias("_cdc_op"),
-    )
-    dels = orders.filter(F.col("order_id") % 101 == 0).select(
-        "order_id",
-        "order_date",
+
+    def changes(df, ts, op):
+        return df.withColumn("_cdc_ts_ms", F.lit(ts)).withColumn("_cdc_op", F.lit(op))
+
+    upsert_batch_into_parquet(changes(orders, 0, "r"), path, key="order_id")
+    upd = orders.filter(F.col("order_id") % 97 == 0).withColumn(
         "order_amount",
-        "customer_id",
-        F.lit(1).alias("_cdc_ts_ms"),
-        F.lit("d").alias("_cdc_op"),
+        (F.col("order_amount") + F.lit(1).cast("decimal(18,2)")).cast("decimal(18,2)"),
     )
-    merge_into_snapshot(
-        spark, path, upd.unionByName(dels), key="order_id"
+    dels = orders.filter(F.col("order_id") % 101 == 0)
+    upsert_batch_into_parquet(
+        changes(upd, 1, "u").unionByName(changes(dels, 1, "d")), path, key="order_id"
     )
     return path
 

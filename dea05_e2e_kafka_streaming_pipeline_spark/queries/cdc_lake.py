@@ -74,8 +74,9 @@ def q_sql_daily_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_orders_snapshot_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The snapshot log's FULL flow inside the driver's correctness
-    gate: commit orders as version 0, CDC-MERGE deterministic updates
-    (+1.00 on order_id%97) and deletes (order_id%101) into version 1,
+    gate: CDC-MERGE orders into an empty table as version 0, then
+    deterministic updates (+1.00 on order_id%97) and deletes
+    (order_id%101) into version 1,
     then read BOTH versions back via time travel and aggregate each by
     order year. The oracle recomputes v0/v1 purely in SQL — a mismatch
     anywhere in commit/merge/manifest/read breaks the hash. Eager by

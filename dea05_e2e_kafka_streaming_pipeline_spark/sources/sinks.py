@@ -403,8 +403,10 @@ def backfill_partitions(
 ) -> None:
     """Idempotent partition backfill: rewrite ONLY the partitions
     present in ``df``, leaving every other partition untouched —
-    ``partitionOverwriteMode=dynamic``, the batch twin of the streaming
-    upsert sink's option (streaming/pipeline.py:176). THE reprocessing
+    ``partitionOverwriteMode=dynamic`` over a plain partitioned lake
+    such as :func:`~..streaming.pipeline.ingest_to_lake`'s (a CDC
+    table publishes through ``sources/txlog.py`` instead, atomically
+    per batch). THE reprocessing
     primitive at 100 TB: recomputing one bad day replaces one
     ``date=...`` directory atomically-per-partition instead of
     rewriting (or worse, appending duplicates into) the whole table.

@@ -8,12 +8,22 @@ pipeline, on nothing but parquet + JSON manifests:
 
 - a **snapshot** is a manifest file ``_log/v00000N.json`` listing the
   exact data files (with sizes) that version comprises;
-- **committing** = writing new data files under unique names (never
-  overwriting), then atomically publishing the next manifest
-  (:func:`write_json_atomic`: write-temp + rename — the same
-  single-file atomic-publish trick Delta's ``_last_checkpoint`` uses);
+- **committing** = writing version N's data files under ``data-vN/``
+  (never touching a published file), then atomically publishing
+  manifest N (:func:`write_json_atomic`: write-temp + rename — the same
+  single-file atomic-publish trick Delta's ``_last_checkpoint`` uses).
+  :func:`commit_snapshot` appends or logically overwrites;
+  :func:`commit_buckets` swaps the file lists of the buckets a CDC
+  merge touched (``streaming/pipeline.py:upsert_batch_into_parquet``),
+  Delta's add/remove actions. Both publish through :func:`_commit`;
 - **reading as of version N** = scanning exactly the files in manifest
-  N. Old versions stay readable until their files are vacuumed.
+  N, through :func:`read_snapshot` — a plain parquet read of the table
+  directory sees every version's files. Old versions stay readable
+  until their files are vacuumed.
+
+A bucketed table records ``n_buckets`` in each manifest and keeps
+bucket ``b``'s files under ``data-vN/bucket=b/``, so a merge reads and
+replaces only the buckets its batch touches: O(touched buckets).
 
 This is the one module that knows the log format: a directory of
 ``vNNNNNN.json`` manifests, latest = highest number
@@ -24,7 +34,8 @@ keeps its own log, ``_ann_log/``, through the same three functions.
 What this deliberately does NOT provide: multi-writer conflict
 resolution (Delta's optimistic concurrency) — single-writer-per-table
 (and per ANN store) is the contract, which matches the reference's
-job-per-table layout.
+job-per-table layout. File operations are the driver's local ``os``
+calls.
 
 At 100 TB the manifest is metadata (one JSON row per file); scan
 planning cost is the listing it replaces.
@@ -38,6 +49,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 _LOG_DIR = "_log"
+_BUCKET = "bucket"
 
 
 def _log_path(table_path: str) -> str:
@@ -97,36 +109,92 @@ def _manifest(table_path: str, version: int) -> dict:
 
 
 def commit_snapshot(df: DataFrame, table_path: str, mode: str = "append") -> int:
-    """Write ``df`` as new uniquely-named data files and publish the
-    next snapshot version. ``mode="append"``: the new version = previous
-    version's files + the new files; ``mode="overwrite"``: the new
-    version = only the new files (the OLD files stay on disk, so prior
-    versions remain readable — logical overwrite, physical append).
+    """Write ``df`` as new data files and publish the next snapshot
+    version. ``mode="append"``: the new version = previous version's
+    files + the new files; ``mode="overwrite"``: the new version = only
+    the new files (the OLD files stay on disk, so prior versions remain
+    readable — logical overwrite, physical append).
     Returns the committed version number."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite: {mode!r}")
+    return _commit(df, table_path, mode, None, lambda f: mode == "append")
+
+
+def commit_buckets(
+    df: DataFrame, table_path: str, buckets: list[int], n_buckets: int
+) -> int:
+    """Publish the next version of a table bucketed ``n_buckets`` ways
+    with the files of ``buckets`` replaced by ``df``'s, which carries an
+    int ``bucket`` column. A listed bucket ``df`` has no row for drops
+    out; every other bucket keeps its files. Returns the version."""
+    _bucketed_files(table_path, n_buckets)
+    touched = _in_buckets(buckets)
+    return _commit(df, table_path, "merge", n_buckets, lambda f: not touched(f))
+
+
+def _commit(df: DataFrame, table_path: str, mode: str, n_buckets, keep) -> int:
+    """Write ``df`` as version N's files under ``data-vN/`` (partitioned
+    by bucket when ``n_buckets`` is set), then publish manifest N = the
+    previous version's files that ``keep`` accepts + the new files. The
+    write overwrites ``data-vN``: no manifest lists it, so anything
+    there is what a failed attempt at N left, and the retry is N too."""
     versions = snapshot_versions(table_path)
     version = (versions[-1] + 1) if versions else 0
+    prev = _manifest(table_path, versions[-1])["files"] if versions else []
     data_dir = os.path.join(table_path, f"data-v{version:06d}")
-    df.write.mode("error").parquet(data_dir)
+    writer = df.write.mode("overwrite")
+    if n_buckets is not None:
+        writer = writer.partitionBy(_BUCKET)
+    writer.parquet(data_dir)
     new_files = sorted(
-        os.path.join(f"data-v{version:06d}", f)
-        for f in os.listdir(data_dir)
+        os.path.relpath(os.path.join(d, f), table_path)
+        for d, _, names in os.walk(data_dir)
+        for f in names
         if f.endswith(".parquet")
     )
-    files = list(new_files)
-    if mode == "append" and versions:
-        files = _manifest(table_path, versions[-1])["files"] + files
     manifest = {
         "version": version,
         "mode": mode,
-        "files": files,
+        "n_buckets": n_buckets,
+        "files": [f for f in prev if keep(f)] + new_files,
         "sizes": {
             f: os.path.getsize(os.path.join(table_path, f)) for f in new_files
         },
     }
     write_json_atomic(manifest_path(_log_path(table_path), version), manifest)
     return version
+
+
+def _in_buckets(buckets: list[int]):
+    """Predicate: is the file ``data-vN/bucket=b/…`` in ``buckets``."""
+    dirs = {f"{_BUCKET}={b}" for b in buckets}
+    return lambda f: f.split(os.sep)[1] in dirs
+
+
+def _bucketed_files(table_path: str, n_buckets: int) -> list[str]:
+    """The latest version's files (none before the first commit). A
+    table bucketed another way raises: the merge would read the wrong
+    buckets and leave a second row for every key it moves."""
+    versions = snapshot_versions(table_path)
+    if not versions:
+        return []
+    m = _manifest(table_path, versions[-1])
+    if m.get("n_buckets") != n_buckets:
+        raise ValueError(
+            f"{table_path} has n_buckets={m.get('n_buckets')}, not {n_buckets}"
+        )
+    return m["files"]
+
+
+def read_buckets(
+    spark: SparkSession, table_path: str, buckets: list[int], n_buckets: int
+) -> DataFrame | None:
+    """Scan only ``buckets`` of the latest version of a table bucketed
+    ``n_buckets`` ways — no other file is opened. ``None`` when those
+    buckets hold no file."""
+    files = filter(_in_buckets(buckets), _bucketed_files(table_path, n_buckets))
+    paths = [os.path.join(table_path, f) for f in files]
+    return spark.read.parquet(*paths) if paths else None
 
 
 def read_snapshot(
@@ -160,10 +228,14 @@ def snapshot_history(table_path: str) -> list[dict]:
 
 
 def vacuum_snapshots(table_path: str, keep_last: int = 1) -> list[str]:
-    """Retention for superseded versions: delete data files referenced
-    ONLY by manifests older than the last ``keep_last`` versions, then
-    drop those manifests. Time travel works up to the vacuum horizon —
-    exactly Delta's VACUUM contract."""
+    """Retention for superseded versions: drop the manifests older than
+    the last ``keep_last`` versions, then clear the data directories
+    older than the oldest kept version of every file no kept manifest
+    lists (``.crc`` sidecars and ``_SUCCESS`` markers included) and of
+    the directories left empty. Time travel works up to the vacuum
+    horizon — exactly Delta's VACUUM contract. Manifests go first, so
+    an interrupted vacuum leaves files the next one removes. Returns
+    the removed data files."""
     versions = snapshot_versions(table_path)
     if len(versions) <= keep_last:
         return []
@@ -171,50 +243,27 @@ def vacuum_snapshots(table_path: str, keep_last: int = 1) -> list[str]:
     live: set[str] = set()
     for v in keep:
         live.update(_manifest(table_path, v)["files"])
-    removed = []
     for v in drop:
-        for f in _manifest(table_path, v)["files"]:
-            if f not in live:
-                p = os.path.join(table_path, f)
-                if os.path.exists(p):
-                    os.remove(p)
-                    removed.append(f)
         os.remove(manifest_path(_log_path(table_path), v))
-    return sorted(set(removed))
-
-
-def merge_into_snapshot(
-    spark: SparkSession,
-    table_path: str,
-    changes: DataFrame,
-    key: str,
-    ts_col: str = "_cdc_ts_ms",
-    op_col: str = "_cdc_op",
-    seq_col: str | None = None,
-) -> int:
-    """MERGE INTO for the snapshot log: apply a CDC change batch
-    (latest-wins upserts + deletes, ``operators/cdc.py:
-    apply_cdc_changes``) to the latest snapshot and commit the result
-    as the next version — Delta's ``MERGE`` + time travel on plain
-    parquet. The superseded version stays readable (audit the merge by
-    diffing two versions); single-writer contract as everywhere in
-    this module. A table with no committed version bootstraps version
-    0 from the change batch alone (the merge over an empty target with
-    the batch's data columns). Returns the new version."""
-    from dea05_e2e_kafka_streaming_pipeline_spark.operators.cdc import (
-        apply_cdc_changes,
-    )
-
-    if snapshot_versions(table_path):
-        target = read_snapshot(spark, table_path)
-    else:
-        meta = {op_col, ts_col} | ({seq_col} if seq_col else set())
-        data_cols = [c for c in changes.columns if c not in meta]
-        target = spark.createDataFrame([], changes.select(*data_cols).schema)
-    merged = apply_cdc_changes(
-        target, changes, key, ts_col=ts_col, op_col=op_col, seq_col=seq_col
-    )
-    return commit_snapshot(merged, table_path, mode="overwrite")
+    removed = []
+    for name in os.listdir(table_path):
+        if not name.startswith("data-v") or int(name[6:]) >= keep[0]:
+            continue
+        for d, _, names in os.walk(os.path.join(table_path, name), topdown=False):
+            for f in names:
+                rel = os.path.relpath(os.path.join(d, f), table_path)
+                if f.endswith(".crc"):  # Hadoop's sidecar ".<name>.crc"
+                    rel_data = os.path.join(os.path.dirname(rel), f[1:-4])
+                else:
+                    rel_data = rel
+                if rel_data in live:
+                    continue
+                os.remove(os.path.join(d, f))
+                if f.endswith(".parquet"):
+                    removed.append(rel)
+            if not os.listdir(d):
+                os.rmdir(d)
+    return sorted(removed)
 
 
 def snapshot_changes(

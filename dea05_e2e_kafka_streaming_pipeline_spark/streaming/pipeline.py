@@ -35,6 +35,11 @@ from dea05_e2e_kafka_streaming_pipeline_spark.operators.quality import (
 from dea05_e2e_kafka_streaming_pipeline_spark.sources.registry import (
     read_parquet_or_none,
 )
+from dea05_e2e_kafka_streaming_pipeline_spark.sources.txlog import (
+    commit_buckets,
+    read_buckets,
+    vacuum_snapshots,
+)
 
 
 def _start(
@@ -129,19 +134,22 @@ def upsert_batch_into_parquet(
     seq_col: str | None = None,
     n_buckets: int = 64,
 ) -> None:
-    """Merge ONE change batch into a bucket-partitioned parquet target —
-    the MERGE INTO a plain-parquet silver table needs (no Delta jar).
-    Also the unit :func:`stream_upsert_sink` applies per micro-batch,
-    public so batch backfills reuse the exact same merge.
+    """Merge ONE change batch into a bucketed snapshot table
+    (``sources/txlog.py``; read it with ``read_snapshot``) — the engine's
+    one CDC MERGE INTO, applied per micro-batch by
+    :func:`stream_upsert_sink` and public so batch backfills reuse it.
+    Every version stays readable (time travel) until a vacuum.
 
-    Scale shape: the target is partitioned by ``bucket =
-    pmod(xxhash64(key), n_buckets)``; a batch only touches the buckets
-    its keys hash into, so the read prunes to those partitions and the
-    dynamic-overwrite write rewrites only them — cost per batch is
-    O(touched buckets), never O(target). The merge itself is
-    :func:`~..operators.cdc.apply_cdc_changes` taken in its two halves:
-    the latest-change-per-key window over the batch, then the
-    delete-wins anti-join + union against the touched buckets.
+    Scale shape: a key lives in bucket ``pmod(xxhash64(key),
+    n_buckets)``; a batch reads only the files of the buckets its keys
+    hash into (``txlog.read_buckets``, so a corrupt file elsewhere is
+    never opened) and publishes one version replacing exactly those
+    buckets' files (``txlog.commit_buckets``) — O(touched buckets),
+    never O(target). A merge passing another ``n_buckets`` than the
+    table's raises ``ValueError`` before any write. The merge itself is
+    :func:`~..operators.cdc.apply_cdc_changes` in its two halves: the
+    latest-change-per-key window over the batch, then the delete-wins
+    anti-join + union against the touched buckets.
 
     One read of the batch: the window output is pinned once
     (``localCheckpoint(eager=True)``), and an ``Observation`` on that
@@ -149,46 +157,24 @@ def upsert_batch_into_parquet(
     which returns before any write. The merge and the write read the
     pin, never the batch again.
 
-    No pin sits between the merge and the write, although the write
-    overwrites the buckets the merge reads: dynamic partition overwrite
-    stages every task's output under ``.spark-staging-*`` and replaces
-    a bucket's directory only at job commit, after every task has read
-    it. A failed write therefore leaves every bucket as it was.
+    Atomic and replay-convergent: the files land under a fresh
+    ``data-vN/`` and one manifest publish makes them visible, so a
+    reader sees the whole batch or none of it, and a bucket the batch
+    emptied drops out of the file list. A failed read, write or publish
+    leaves the latest version as it was; the retry overwrites the
+    unpublished ``data-vN``, and merging an already-applied change is a
+    no-op — what makes the streaming wrapper effectively-once.
 
-    Replays are self-healing: merging an already-applied change is a
-    no-op upsert (or a re-delete of an absent key), and every affected
-    bucket is rewritten to the same deterministic final state — a
-    crashed half-committed write converges on the next attempt, which
-    is what makes the streaming wrapper effectively-once end to end.
-
-    Each touched bucket is rewritten as ONE file by ONE task: the merged
-    frame is repartitioned by bucket before the write, so a batch adds
+    Each touched bucket is rewritten as ONE file by ONE task (the merged
+    frame is repartitioned by bucket before the write), so a batch adds
     one file per touched bucket however many partitions the merge ran
-    on (no file, ``.crc`` and commit rename per task per bucket, and no
-    file count growing with the number of batches). A bucket is thus
-    one task's work: pick ``n_buckets`` so a bucket stays near one
-    task's worth of bytes and a batch touches at least as many buckets
-    as there are cores. This targets stream-sized batches (hundreds of
-    changes into buckets of thousands of rows). Measured on 4 cores
-    against one file per task per bucket, it was also no slower for
-    backfills of 2*10^5 changes into 2 or 16 buckets (500k or 62.5k rows
-    each) and 10^6 changes into 16 buckets of 250k rows, but ~20% slower
-    in wall time for 10^6 changes into 2 buckets of 2M rows, where two
-    tasks do the work the per-task write spread over all cores.
-
-    A bucket whose last key is deleted yields zero output rows, which
-    dynamic overwrite alone would leave stale — those partitions are
-    explicitly dropped (driver-side filesystem metadata op, the same
-    discipline any parquet table manager applies). The buckets still
-    present are observed on the write itself, not by a second job.
-
-    The target is read with :func:`~..sources.registry.read_parquet_or_none`:
-    a missing target, or one left with no data files after every key was
-    deleted, merges against an empty frame. Any other read failure (a
-    corrupt file in any bucket fails schema inference, a corrupt file in
-    a touched bucket fails the write's scan) raises, so the batch fails
-    and the checkpoint retries it; merging against an empty frame there
-    would rewrite each touched bucket from the batch alone.
+    on. Pick ``n_buckets`` so a bucket stays near one task's worth of
+    bytes and a batch touches at least as many buckets as there are
+    cores. Measured on 4 cores against one file per task per bucket, it
+    was no slower for backfills of up to 10^6 changes into 16 buckets,
+    but ~20% slower in wall time for 10^6 changes into 2 buckets of 2M
+    rows, where two tasks do the work the per-task write spread over
+    all cores.
     """
     from dea05_e2e_kafka_streaming_pipeline_spark.operators.cdc import (
         latest_change_per_key,
@@ -199,9 +185,6 @@ def upsert_batch_into_parquet(
     meta = {op_col, ts_col} | ({seq_col} if seq_col else set())
     data_cols = [c for c in batch.columns if c not in meta]
     bucket = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
-    # resolved before any Observation exists: a missing target's failed
-    # analysis would otherwise reach the Observation's listener
-    target = read_parquet_or_none(spark, target_dir)
     touched = Observation()
     latest = (
         latest_change_per_key(batch, key, ts_col, op_col, seq_col)
@@ -211,32 +194,15 @@ def upsert_batch_into_parquet(
     affected = sorted(touched.get["buckets"])
     if not affected:
         return
-    if target is None:  # first batch, or every key deleted
+    target = read_buckets(spark, target_dir, affected, n_buckets)
+    if target is None:  # first batch, or every key of these buckets deleted
         target = spark.createDataFrame([], batch.select(*data_cols).schema)
-    else:
-        target = target.filter(F.col("bucket").isin(affected)).select(*data_cols)
     merged = (
         merge_latest_changes(target, latest, key, op_col)
         .withColumn("bucket", bucket)
         .repartition("bucket")
     )
-    written = Observation()
-    (
-        merged.observe(written, F.collect_set("bucket").alias("present"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(target_dir)
-    )
-    emptied = set(affected) - set(written.get["present"])
-    if emptied:
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        for b in emptied:
-            p = jvm.org.apache.hadoop.fs.Path(f"{target_dir}/bucket={b}")
-            fs = p.getFileSystem(conf)
-            if fs.exists(p):
-                fs.delete(p, True)
+    commit_buckets(merged, target_dir, affected, n_buckets)
 
 
 def stream_upsert_sink(
@@ -253,8 +219,13 @@ def stream_upsert_sink(
 ) -> StreamingQuery:
     """Streaming CDC apply: land a normalized change stream
     (:func:`~..operators.cdc.normalize_cdc` with ``keep_meta=True,
-    drop_deletes=False``) as a continuously-merged parquet silver table
-    via :func:`upsert_batch_into_parquet` per micro-batch.
+    drop_deletes=False``) as a continuously-merged bucketed snapshot
+    table via :func:`upsert_batch_into_parquet` per micro-batch.
+
+    Each publish vacuums the version it superseded
+    (``txlog.vacuum_snapshots(keep_last=1)``): the directory holds only
+    the latest version's files and its log, and a scan of the latest
+    version must end before the next batch publishes.
 
     Effectively-once: the checkpoint replays an unacknowledged batch
     after a crash, and the merge is idempotent per batch (see
@@ -273,6 +244,7 @@ def stream_upsert_sink(
             seq_col=seq_col,
             n_buckets=n_buckets,
         )
+        vacuum_snapshots(target_dir, keep_last=1)
 
     writer = stream.writeStream.foreachBatch(_apply).outputMode("update")
     return _start(writer, checkpoint, available_now, trigger_seconds)
@@ -672,48 +644,6 @@ def avro_stream_sink(
         write_avro_distributed(batch_df, out, codec=codec, mode="overwrite")
 
     writer = stream.writeStream.foreachBatch(_land).outputMode("append")
-    return _start(writer, checkpoint, available_now, trigger_seconds)
-
-
-def cdc_snapshot_stream_sink(
-    stream: DataFrame,
-    table_path: str,
-    checkpoint: str,
-    key: str,
-    ts_col: str = "_cdc_ts_ms",
-    op_col: str = "_cdc_op",
-    seq_col: str | None = None,
-    available_now: bool = False,
-    trigger_seconds: int | None = 5,
-) -> StreamingQuery:
-    """Streaming CDC into the VERSIONED snapshot table
-    (``sources/txlog.py``): every micro-batch of normalized changes
-    merges latest-wins into the current snapshot and commits the next
-    version — the reference's whole Debezium→lakehouse story, jar-free,
-    with time travel per epoch (read any intermediate state back with
-    ``read_snapshot(version=...)``; bound log growth with
-    ``vacuum_snapshots``).
-
-    Recovery semantics: the checkpoint replays an unacknowledged batch
-    after a crash; re-merging the same change batch is a no-op on the
-    DATA (latest-wins is idempotent), so the table converges to the
-    exactly-once state — a replay can only add a duplicate version
-    whose content equals its predecessor. The first batch bootstraps
-    version 0 from the change batch alone (``merge_into_snapshot`` on a
-    table with no committed version)."""
-    from dea05_e2e_kafka_streaming_pipeline_spark.sources.txlog import (
-        merge_into_snapshot,
-    )
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merge_into_snapshot(
-            batch_df.sparkSession, table_path, batch_df, key,
-            ts_col=ts_col, op_col=op_col, seq_col=seq_col,
-        )
-
-    writer = stream.writeStream.foreachBatch(_apply).outputMode("update")
     return _start(writer, checkpoint, available_now, trigger_seconds)
 
 

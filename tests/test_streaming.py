@@ -2,6 +2,8 @@
 windowed aggregation streaming/batch equivalence, synthetic sources."""
 
 import time
+from pathlib import Path
+from urllib.parse import urlparse
 
 import pyspark.sql.functions as F
 import pytest
@@ -11,9 +13,15 @@ from dea05_e2e_kafka_streaming_pipeline_spark.operators.quality import (
 )
 from dea05_e2e_kafka_streaming_pipeline_spark.schemas import EVENTS_SCHEMA
 from dea05_e2e_kafka_streaming_pipeline_spark.sources.registry import load_table
+from dea05_e2e_kafka_streaming_pipeline_spark.sources.txlog import (
+    read_snapshot,
+    snapshot_history,
+    snapshot_versions,
+)
 from dea05_e2e_kafka_streaming_pipeline_spark.streaming.pipeline import (
     dq_gated_sink,
     ingest_to_lake,
+    upsert_batch_into_parquet,
     windowed_event_stats,
 )
 from dea05_e2e_kafka_streaming_pipeline_spark.streaming.sources import (
@@ -450,96 +458,23 @@ def _changes(spark, rows):
     )
 
 
-def test_upsert_batch_into_parquet_merge_delete_replay(spark, tmp_path):
-    from dea05_e2e_kafka_streaming_pipeline_spark.streaming.pipeline import (
-        upsert_batch_into_parquet,
-    )
-
-    target = str(tmp_path / "silver")
-    b1 = _changes(spark, [(1, 10.0, "c", 1), (2, 20.0, "c", 1), (3, 30.0, "c", 1)])
-    upsert_batch_into_parquet(b1, target, key="order_id", n_buckets=4)
-    b2 = _changes(spark, [(2, 25.0, "u", 2), (1, None, "d", 2)])
-    upsert_batch_into_parquet(b2, target, key="order_id", n_buckets=4)
-
-    def state():
-        return {
-            r.order_id: r.amount
-            for r in spark.read.parquet(target).select("order_id", "amount").collect()
-        }
-
-    assert state() == {2: 25.0, 3: 30.0}
-    # replaying an already-applied batch is a no-op (crash-recovery path)
-    upsert_batch_into_parquet(b2, target, key="order_id", n_buckets=4)
-    assert state() == {2: 25.0, 3: 30.0}
-    # meta columns never land in the silver table
-    assert set(spark.read.parquet(target).columns) == {"order_id", "amount", "bucket"}
+def _state(spark, target, version=None):
+    got = read_snapshot(spark, str(target), version).select("order_id", "amount")
+    return {r.order_id: r.amount for r in got.collect()}
 
 
-def test_upsert_batch_clears_fully_deleted_buckets(spark, tmp_path):
-    from dea05_e2e_kafka_streaming_pipeline_spark.streaming.pipeline import (
-        upsert_batch_into_parquet,
-    )
-
-    target = tmp_path / "silver"
-    upsert_batch_into_parquet(
-        _changes(spark, [(42, 1.0, "c", 1)]), str(target), key="order_id", n_buckets=4
-    )
-    assert len(list(target.glob("bucket=*"))) == 1
-    upsert_batch_into_parquet(
-        _changes(spark, [(42, None, "d", 2)]), str(target), key="order_id", n_buckets=4
-    )
-    # dynamic overwrite can't emit an empty partition: the sink must
-    # drop the emptied bucket directory itself, or the delete resurrects
-    assert list(target.glob("bucket=*")) == []
-    # the emptied target holds no data files; the next batch still lands
-    upsert_batch_into_parquet(
-        _changes(spark, [(7, 3.0, "c", 3)]), str(target), key="order_id", n_buckets=4
-    )
-    got = spark.read.parquet(str(target)).select("order_id", "amount").collect()
-    assert [(r.order_id, r.amount) for r in got] == [(7, 3.0)]
+def _files(df):
+    """A scan's data files, as local paths."""
+    return {urlparse(f).path for f in df.inputFiles()}
 
 
-def test_upsert_batch_raises_on_unreadable_target(spark, tmp_path):
-    """A corrupt file in a bucket the batch does not touch fails the
-    target's schema inference. The upsert must raise (so the checkpoint
-    retries the batch) instead of merging against an empty target, which
-    would rewrite the touched bucket from the batch alone."""
-    from dea05_e2e_kafka_streaming_pipeline_spark.streaming.pipeline import (
-        upsert_batch_into_parquet,
-    )
-
-    target = tmp_path / "silver"
+def _preload(spark, target, n_buckets=4):
     upsert_batch_into_parquet(
         _changes(spark, [(k, float(k), "r", 0) for k in range(1000)]),
         str(target),
         key="order_id",
-        n_buckets=4,
+        n_buckets=n_buckets,
     )
-
-    def bucket_rows(b):
-        return spark.read.parquet(str(target / f"bucket={b}")).count()
-
-    before = bucket_rows(1)
-    assert before > 1
-    bucket = F.pmod(F.xxhash64("order_id"), F.lit(4))
-    key = (
-        spark.range(1000)
-        .withColumnRenamed("id", "order_id")
-        .filter(bucket == 1)
-        .first()
-        .order_id
-    )
-    # schema inference reads the first file in path order: bucket=0
-    for f in (target / "bucket=0").glob("part-*"):
-        f.write_bytes(b"not parquet" * 64)
-    with pytest.raises(Exception):
-        upsert_batch_into_parquet(
-            _changes(spark, [(key, -1.0, "u", 1)]),
-            str(target),
-            key="order_id",
-            n_buckets=4,
-        )
-    assert bucket_rows(1) == before
 
 
 def _keys_in_bucket(spark, b, n_buckets, n=1000):
@@ -548,64 +483,198 @@ def _keys_in_bucket(spark, b, n_buckets, n=1000):
     return [r.order_id for r in rows.collect()]
 
 
-def test_upsert_batch_failed_write_leaves_every_bucket(spark, tmp_path):
-    """The merge reads the buckets the write overwrites, with no pin
-    between them: dynamic overwrite replaces a bucket only at job
-    commit. A corrupt file in a touched bucket (not the one schema
-    inference reads) fails the write; every other bucket, touched or
-    not, keeps its files byte for byte, and once the corrupt file is
-    put back the table reads as before the batch."""
-    from dea05_e2e_kafka_streaming_pipeline_spark.streaming.pipeline import (
-        upsert_batch_into_parquet,
-    )
+def _bucket_file(target, b):
+    """The one data file of bucket ``b`` in the latest version."""
+    (f,) = Path(target).glob(f"data-v*/bucket={b}/part-*.parquet")
+    return f
 
-    target = tmp_path / "silver"
+
+def test_upsert_batch_into_parquet_merge_delete_replay(spark, tmp_path):
+    target = str(tmp_path / "silver")
+    b1 = _changes(spark, [(1, 10.0, "c", 1), (2, 20.0, "c", 1), (3, 30.0, "c", 1)])
+    upsert_batch_into_parquet(b1, target, key="order_id", n_buckets=4)
+    b2 = _changes(spark, [(2, 25.0, "u", 2), (1, None, "d", 2)])
+    upsert_batch_into_parquet(b2, target, key="order_id", n_buckets=4)
+    assert _state(spark, target) == {2: 25.0, 3: 30.0}
+    # replaying an already-applied batch is a no-op (crash-recovery path)
+    upsert_batch_into_parquet(b2, target, key="order_id", n_buckets=4)
+    assert _state(spark, target) == {2: 25.0, 3: 30.0}
+    # every version stays readable until a vacuum
+    assert snapshot_versions(target) == [0, 1, 2]
+    assert _state(spark, target, 0) == {1: 10.0, 2: 20.0, 3: 30.0}
+    # meta columns never land in the silver table, nor does the bucket
+    assert read_snapshot(spark, target).columns == ["order_id", "amount"]
+
+
+def test_upsert_batch_clears_fully_deleted_buckets(spark, tmp_path):
+    target = str(tmp_path / "silver")
     upsert_batch_into_parquet(
-        _changes(spark, [(k, float(k), "r", 0) for k in range(1000)]),
-        str(target),
-        key="order_id",
-        n_buckets=4,
+        _changes(spark, [(42, 1.0, "c", 1)]), target, key="order_id", n_buckets=4
     )
+    assert snapshot_history(target)[-1]["n_files"] == 1
+    upsert_batch_into_parquet(
+        _changes(spark, [(42, None, "d", 2)]), target, key="order_id", n_buckets=4
+    )
+    # the emptied bucket drops out of the file list: an empty version
+    assert snapshot_history(target)[-1]["n_files"] == 0
+    # the next batch still lands
+    upsert_batch_into_parquet(
+        _changes(spark, [(7, 3.0, "c", 3)]), target, key="order_id", n_buckets=4
+    )
+    assert _state(spark, target) == {7: 3.0}
 
-    def files():
-        return {p: p.read_bytes() for p in target.rglob("*") if p.is_file()}
 
-    def rows():
-        got = spark.read.parquet(str(target)).select("order_id", "amount").collect()
-        return sorted((r.order_id, r.amount) for r in got)
-
-    before_files, before_rows = files(), rows()
-    # touch buckets 1 and 3; schema inference reads the first file in
-    # path order (bucket=0), so the corrupt bucket-3 file fails the scan
-    keys = _keys_in_bucket(spark, 1, 4)[:5] + _keys_in_bucket(spark, 3, 4)[:5]
-    (corrupt,) = (target / "bucket=3").glob("part-*")
+def test_upsert_batch_skips_unreadable_untouched_bucket(spark, tmp_path):
+    """A corrupt file in a bucket the batch does not touch is never
+    opened: the merge succeeds and the file stays listed, so once it is
+    put back the table reads every row, the update included."""
+    target = tmp_path / "silver"
+    _preload(spark, target)
+    (key,) = _keys_in_bucket(spark, 1, 4)[:1]
+    corrupt = _bucket_file(target, 0)
+    good = corrupt.read_bytes()
     corrupt.write_bytes(b"not parquet" * 64)
+    upsert_batch_into_parquet(
+        _changes(spark, [(key, -1.0, "u", 1)]), str(target), key="order_id", n_buckets=4
+    )
+    assert snapshot_versions(str(target)) == [0, 1]
+    corrupt.write_bytes(good)
+    want = {k: -1.0 if k == key else float(k) for k in range(1000)}
+    assert _state(spark, target) == want
+
+
+def test_upsert_batch_raises_on_unreadable_target(spark, tmp_path):
+    """A corrupt file in a bucket the batch touches fails the read of
+    the target. The upsert must raise (so the checkpoint retries the
+    batch) instead of merging against an empty target, which would
+    rewrite the bucket from the batch alone; the latest version stays."""
+    target = tmp_path / "silver"
+    _preload(spark, target)
+    (key,) = _keys_in_bucket(spark, 1, 4)[:1]
+    _bucket_file(target, 1).write_bytes(b"not parquet" * 64)
     with pytest.raises(Exception):
         upsert_batch_into_parquet(
-            _changes(spark, [(k, -1.0, "u", 1) for k in keys]),
+            _changes(spark, [(key, -1.0, "u", 1)]),
             str(target),
             key="order_id",
             n_buckets=4,
         )
+    assert snapshot_versions(str(target)) == [0]
+
+
+def test_upsert_batch_failed_write_leaves_every_bucket(spark, tmp_path):
+    """A corrupt file in a touched bucket that schema inference does not
+    read fails the write's scan. Every published file keeps its bytes and
+    the latest version stays; once the file is put back, the retry
+    overwrites the failed attempt's directory and publishes the batch."""
+    target = tmp_path / "silver"
+    _preload(spark, target)
+
+    def files():
+        published = target.glob("data-v000000/**/*")
+        return {p: p.read_bytes() for p in published if p.is_file()}
+
+    before_files = files()
+    # touch buckets 1 and 3; schema inference reads the first listed
+    # file (bucket=1), so the corrupt bucket-3 file fails the scan
+    keys = _keys_in_bucket(spark, 1, 4)[:5] + _keys_in_bucket(spark, 3, 4)[:5]
+    batch = _changes(spark, [(k, -1.0, "u", 1) for k in keys])
+    corrupt = _bucket_file(target, 3)
+    corrupt.write_bytes(b"not parquet" * 64)
+    with pytest.raises(Exception):
+        upsert_batch_into_parquet(batch, str(target), key="order_id", n_buckets=4)
+    assert snapshot_versions(str(target)) == [0]
     after_files = files()
     corrupt.write_bytes(before_files.pop(corrupt))
     assert after_files.pop(corrupt) == b"not parquet" * 64
     assert after_files == before_files
-    assert rows() == before_rows
+    assert _state(spark, target) == {k: float(k) for k in range(1000)}
+    upsert_batch_into_parquet(batch, str(target), key="order_id", n_buckets=4)
+    assert snapshot_versions(str(target)) == [0, 1]
+    want = {k: -1.0 if k in keys else float(k) for k in range(1000)}
+    assert _state(spark, target) == want
+
+
+def test_upsert_batch_publish_is_atomic(spark, tmp_path, monkeypatch):
+    """A reader that lists and reads the table after the merge has
+    written its files but before the publish sees the whole pre-batch
+    state; a publish that fails leaves that state, and the retry lands
+    the whole post-batch state."""
+    from dea05_e2e_kafka_streaming_pipeline_spark.sources import txlog
+
+    target = tmp_path / "silver"
+    _preload(spark, target)
+    keys = _keys_in_bucket(spark, 0, 4)[:5] + _keys_in_bucket(spark, 2, 4)[:5]
+    batch = _changes(spark, [(k, -1.0, "u", 1) for k in keys] + [(5000, 1.0, "c", 1)])
+    pre = {k: float(k) for k in range(1000)}
+    post = {**pre, **{k: -1.0 for k in keys}, 5000: 1.0}
+    seen = []
+
+    def publish_fails(path, obj):
+        assert list(target.glob("data-v000001/bucket=*/part-*.parquet"))
+        seen.append(_state(spark, target))
+        raise OSError("publish failed")
+
+    monkeypatch.setattr(txlog, "write_json_atomic", publish_fails)
+    with pytest.raises(OSError, match="publish failed"):
+        upsert_batch_into_parquet(batch, str(target), key="order_id", n_buckets=4)
+    monkeypatch.undo()
+    assert seen == [pre]
+    assert _state(spark, target) == pre
+    upsert_batch_into_parquet(batch, str(target), key="order_id", n_buckets=4)
+    assert _state(spark, target) == post
+
+
+def test_upsert_batch_replaces_only_touched_buckets(spark, tmp_path):
+    """Version N+1 differs from version N only in the files of the
+    buckets the batch touched: one new file each, every other bucket's
+    file carried over as is."""
+    target = tmp_path / "silver"
+    _preload(spark, target)
+    keys = _keys_in_bucket(spark, 1, 4)[:3] + _keys_in_bucket(spark, 2, 4)[:3]
+    upsert_batch_into_parquet(
+        _changes(spark, [(k, None, "d", 1) for k in keys]),
+        str(target),
+        key="order_id",
+        n_buckets=4,
+    )
+    v0 = _files(read_snapshot(spark, str(target), 0))
+    v1 = _files(read_snapshot(spark, str(target), 1))
+    assert v0 & v1 == {str(_bucket_file(target, b)) for b in (0, 3)}
+    assert sorted(Path(f).parent.name for f in v0 - v1) == ["bucket=1", "bucket=2"]
+    assert {Path(f).parent.parent.name for f in v1 - v0} == {"data-v000001"}
+    assert sorted(Path(f).parent.name for f in v1 - v0) == ["bucket=1", "bucket=2"]
+    assert len(_state(spark, target)) == 1000 - len(keys)
+
+
+def test_upsert_batch_rejects_other_n_buckets(spark, tmp_path):
+    """``n_buckets`` is fixed when the table is first written: a merge
+    with another value would read the wrong buckets and leave a second
+    row for every key it moves, so it raises before writing anything."""
+    target = str(tmp_path / "silver")
+    rows = [(k, float(k), "c", 1) for k in range(20)]
+    upsert_batch_into_parquet(
+        _changes(spark, rows), target, key="order_id", n_buckets=4
+    )
+    with pytest.raises(ValueError, match="n_buckets"):
+        upsert_batch_into_parquet(
+            _changes(spark, [(k, -1.0, "u", 2) for k in range(6)]),
+            target,
+            key="order_id",
+            n_buckets=8,
+        )
+    assert snapshot_versions(target) == [0]
+    assert _state(spark, target) == {k: float(k) for k in range(20)}
 
 
 def test_upsert_batch_writes_one_file_per_bucket(spark, tmp_path):
     """Each touched bucket is rewritten as one file by one task, however
     many partitions the preload and the change batches arrive in, so the
     file count stays at one per bucket across batches."""
-    from dea05_e2e_kafka_streaming_pipeline_spark.streaming.pipeline import (
-        upsert_batch_into_parquet,
-    )
-
-    target = tmp_path / "silver"
+    target = str(tmp_path / "silver")
     preload = [(k, float(k), "r", 0) for k in range(200)]
     upsert_batch_into_parquet(
-        _changes(spark, preload).repartition(8), str(target), key="order_id", n_buckets=4
+        _changes(spark, preload).repartition(8), target, key="order_id", n_buckets=4
     )
     state = {k: float(k) for k in range(200)}
     for ts in (1, 2, 3):
@@ -613,20 +682,30 @@ def test_upsert_batch_writes_one_file_per_bucket(spark, tmp_path):
         rows += [(k, None, "d", ts) for k in range(ts + 3, 200, 11)]
         rows += [(1000 * ts + k, 1.0, "c", ts) for k in range(20)]
         upsert_batch_into_parquet(
-            _changes(spark, rows).repartition(4), str(target), key="order_id", n_buckets=4
+            _changes(spark, rows).repartition(4), target, key="order_id", n_buckets=4
         )
         for k, amount, op, _ in sorted(rows, key=lambda r: r[2] == "d"):
             if op == "d":
                 state.pop(k, None)
             else:
                 state[k] = amount
-        buckets = list(target.glob("bucket=*"))
-        assert len(buckets) == 4
-        for b in buckets:
-            assert len(list(b.glob("part-*"))) == 1, b
-    got = spark.read.parquet(str(target)).select("order_id", "amount").collect()
-    assert len(got) == len(state)
-    assert {r.order_id: r.amount for r in got} == state
+        buckets = [Path(f).parent.name for f in _files(read_snapshot(spark, target))]
+        assert sorted(buckets) == [f"bucket={b}" for b in range(4)]
+    assert _state(spark, target) == state
+
+
+def _assert_only_latest_on_disk(spark, target):
+    """Nothing is left under the table but its log, the latest version's
+    data files with their ``.crc`` sidecars, and that write's
+    ``_SUCCESS``: no superseded file, marker or empty directory."""
+    live = _files(read_snapshot(spark, str(target)))
+    latest = target / f"data-v{snapshot_versions(str(target))[-1]:06d}"
+    for p in target.rglob("*"):
+        if p.is_dir():
+            assert any(p.iterdir()), p
+        elif p.parent.name != "_log":
+            f = p.with_name(p.name[1:-4]) if p.suffix == ".crc" else p
+            assert str(f) in live or f == latest / "_SUCCESS", p
 
 
 def test_stream_upsert_sink_converges_across_batches(spark, tmp_path):
@@ -664,13 +743,10 @@ def test_stream_upsert_sink_converges_across_batches(spark, tmp_path):
         available_now=True,
     )
     assert q.awaitTermination(600)
-    got = {
-        r.order_id: r.amount
-        for r in spark.read.parquet(str(tmp_path / "silver"))
-        .select("order_id", "amount")
-        .collect()
-    }
-    assert got == {2: 25.0, 3: 30.0}
+    assert _state(spark, tmp_path / "silver") == {2: 25.0, 3: 30.0}
+    # each publish vacuums the version it superseded
+    assert len(snapshot_versions(str(tmp_path / "silver"))) == 1
+    _assert_only_latest_on_disk(spark, tmp_path / "silver")
 
 
 def test_stream_upsert_sink_reads_each_change_once(spark, tmp_path):
@@ -749,9 +825,10 @@ def test_stream_upsert_sink_reads_each_change_once(spark, tmp_path):
                 state.pop(k, None)
             else:
                 state[k] = a
-    got = spark.read.parquet(str(tmp_path / "silver")).collect()
+    got = read_snapshot(spark, str(tmp_path / "silver")).collect()
     assert len(got) == len(state)
     assert {r.order_id: r.amount for r in got} == state
+    _assert_only_latest_on_disk(spark, tmp_path / "silver")
 
 
 def test_windowed_stats_sliding_double_counts(spark):

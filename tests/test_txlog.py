@@ -1,5 +1,5 @@
 """Versioned snapshot log (sources/txlog.py): time travel, history,
-logical overwrite, and vacuum on plain parquet."""
+logical overwrite, vacuum and the CDC merge's publish on plain parquet."""
 
 from __future__ import annotations
 
@@ -11,11 +11,13 @@ import pytest
 
 from dea05_e2e_kafka_streaming_pipeline_spark.sources.txlog import (
     commit_snapshot,
-    merge_into_snapshot,
     read_snapshot,
     snapshot_history,
     snapshot_versions,
     vacuum_snapshots,
+)
+from dea05_e2e_kafka_streaming_pipeline_spark.streaming.pipeline import (
+    upsert_batch_into_parquet,
 )
 
 
@@ -54,9 +56,33 @@ def test_vacuum_drops_only_superseded_files(spark, tmp_path):
     assert removed  # v0/v1 data gone
     assert snapshot_versions(t) == [2]
     assert read_snapshot(spark, t).count() == 9  # survivor intact
-    # vacuumed files really deleted from disk
+    # vacuumed files really deleted from disk, and nothing of v0/v1
+    # left behind: no .crc sidecar, _SUCCESS marker or empty directory
     for f in removed:
         assert not os.path.exists(os.path.join(t, f))
+    assert sorted(os.listdir(t)) == ["_log", "data-v000002"]
+    assert os.listdir(os.path.join(t, "_log")) == ["v000002.json"]
+
+
+def test_commit_retries_after_failed_write(spark, tmp_path):
+    """A commit whose write fails publishes nothing and leaves the
+    version's unpublished directory behind; the retry computes the same
+    version, overwrites that directory, publishes and reads back."""
+    from pyspark.sql import functions as F
+
+    t = str(tmp_path / "wedge")
+    commit_snapshot(spark.range(0, 5), t)
+    boom = spark.range(0, 10).select(
+        F.when(F.col("id") == 7, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id"))
+        .alias("id")
+    )
+    with pytest.raises(Exception, match="boom"):
+        commit_snapshot(boom, t)
+    assert snapshot_versions(t) == [0]
+    assert os.path.isdir(os.path.join(t, "data-v000001"))
+    assert commit_snapshot(spark.range(5, 8), t) == 1
+    assert sorted(r.id for r in read_snapshot(spark, t).collect()) == list(range(8))
 
 
 def test_reader_snapshot_isolation(spark, tmp_path):
@@ -73,20 +99,21 @@ def test_merge_into_snapshot_versioned_upserts(spark, tmp_path):
     """CDC MERGE against the snapshot log: upsert + delete land as a
     new version; the pre-merge snapshot remains readable for audit."""
     t = str(tmp_path / "tbl5")
+    meta = "id long, v string, _cdc_ts_ms long, _cdc_op string"
     base = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "id long, v string"
+        [(1, "a", 0, "r"), (2, "b", 0, "r"), (3, "c", 0, "r")], meta
     )
-    commit_snapshot(base, t)
+    upsert_batch_into_parquet(base, t, key="id")
     changes = spark.createDataFrame(
         [
             (2, "B", 100, "u"),   # update
             (4, "d", 100, "c"),   # insert
             (3, None, 100, "d"),  # delete
         ],
-        "id long, v string, _cdc_ts_ms long, _cdc_op string",
+        meta,
     )
-    v = merge_into_snapshot(spark, t, changes, key="id")
-    assert v == 1
+    upsert_batch_into_parquet(changes, t, key="id")
+    assert snapshot_versions(t) == [0, 1]
     got = {
         r.id: r.v
         for r in read_snapshot(spark, t).select("id", "v").collect()
@@ -95,62 +122,6 @@ def test_merge_into_snapshot_versioned_upserts(spark, tmp_path):
     # audit: pre-merge snapshot intact
     old = {r.id: r.v for r in read_snapshot(spark, t, version=0).collect()}
     assert old == {1: "a", 2: "b", 3: "c"}
-
-
-def test_cdc_snapshot_stream_sink_versions_per_epoch(spark, tmp_path):
-    """Streaming CDC → versioned snapshot table: each micro-batch
-    commits a version; intermediate states stay readable; final state
-    reflects latest-wins upserts + deletes."""
-    import os as _os
-    import time as _time
-
-    from dea05_e2e_kafka_streaming_pipeline_spark.streaming.pipeline import (
-        cdc_snapshot_stream_sink,
-    )
-
-    landing = tmp_path / "cdc_landing"
-    rows_schema = (
-        "id long, v string, _cdc_ts_ms long, _cdc_op string"
-    )
-    spark.createDataFrame(
-        [(1, "a", 1, "c"), (2, "b", 1, "c")], rows_schema
-    ).coalesce(1).write.mode("append").json(str(landing / "b1"))
-    spark.createDataFrame(
-        [(2, "B", 2, "u"), (1, None, 2, "d"), (3, "c", 2, "c")], rows_schema
-    ).coalesce(1).write.mode("append").json(str(landing / "b2"))
-    now = _time.time()
-    for i, d in enumerate(["b1", "b2"]):
-        for f in (landing / d).glob("*.json"):
-            _os.utime(f, (now + 10 * i, now + 10 * i))
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("v", T.StringType()),
-            T.StructField("_cdc_ts_ms", T.LongType()),
-            T.StructField("_cdc_op", T.StringType()),
-        ]
-    )
-    from dea05_e2e_kafka_streaming_pipeline_spark.streaming.sources import (
-        file_stream,
-    )
-
-    table = str(tmp_path / "versioned")
-    q = cdc_snapshot_stream_sink(
-        file_stream(spark, str(landing / "*"), schema, max_files_per_trigger=1),
-        table,
-        checkpoint=str(tmp_path / "ckpt"),
-        key="id",
-        available_now=True,
-    )
-    q.awaitTermination(300)
-    assert snapshot_versions(table) == [0, 1]
-    v0 = {r.id: r.v for r in read_snapshot(spark, table, version=0).collect()}
-    assert v0 == {1: "a", 2: "b"}
-    v1 = {r.id: r.v for r in read_snapshot(spark, table).collect()}
-    assert v1 == {2: "B", 3: "c"}  # 1 deleted, 2 updated, 3 inserted
 
 
 def test_snapshot_changes_between_versions(spark, tmp_path):
@@ -248,15 +219,14 @@ def test_merge_into_snapshot_bootstraps_version_zero(spark, tmp_path):
         (4, "d", 1, "r"),
     ]
     t = str(tmp_path / "fresh")
-    v = merge_into_snapshot(
-        spark,
-        t,
+    upsert_batch_into_parquet(
         spark.createDataFrame(
             changes, "id long, v string, _cdc_ts_ms long, _cdc_op string"
         ),
+        t,
         key="id",
     )
-    assert v == 0 and snapshot_versions(t) == [0]
+    assert snapshot_versions(t) == [0]
 
     replay: dict = {}
     for key, val, ts, op in sorted(changes, key=lambda c: (c[2], c[3] == "d")):

@@ -35,7 +35,7 @@ FAMILIES = [
     ("Reference entities", f"{PKG}.sources.entities", "orders/customers entity mapping over the testdata star schema (FIXTURES.md §4)."),
     ("Catalog & metadata", f"{PKG}.sources.catalog", "Table DDL registration, file/row-group inventory, zone maps, small-files doctor."),
     ("Sinks (partitioned parquet, compaction, retention)", f"{PKG}.sources.sinks", "Date-partitioned writes, compaction, backfill, retention."),
-    ("Versioned snapshot log (Delta-semantics substitute)", f"{PKG}.sources.txlog", "Atomic manifest commits: time travel, history, VACUUM, MERGE INTO — jar-less."),
+    ("Versioned snapshot log (Delta-semantics substitute)", f"{PKG}.sources.txlog", "Atomic manifest commits: time travel, history, VACUUM, bucket-scoped MERGE publish — jar-less."),
     ("Z-order clustering layout", f"{PKG}.sources.layout", "Morton-key clustering writes, Hilbert ranks + zone-map pruning decisions (measured skipping benefit)."),
     ("Gold aggregates", f"{PKG}.plans.gold", "Reference gold tables: daily sales by region, customer lifetime value."),
     ("Analytics plans (windows, cubes, global ordering)", f"{PKG}.plans.analytics", "Ranking/lag/ntile windows, grouping sets, gap-fill, funnel, global row numbering."),
