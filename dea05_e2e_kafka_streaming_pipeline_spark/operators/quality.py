@@ -8,11 +8,11 @@ different execution plan:
 
 **The reference runs one Spark job per column/rule** (a ``.filter().count()``
 inside a loop — O(checks) full scans). **This engine folds every
-completeness/accuracy/volume check into ONE aggregate job** over the input
+completeness/accuracy/volume check into ONE pass** over the input
 (conditional-sum pattern); each referential-integrity check is an
-existence-join marker column summed inside that same aggregate. At
-100 TB the difference is "12 scans" vs "1 scan + 1 broadcast existence
-join".
+existence-join marker column summed in that same pass (an aggregate
+for the report, an ``Observation`` for the write gate). At 100 TB the
+difference is "12 scans" vs "1 scan + 1 broadcast existence join".
 
 Faithful semantics preserved:
 
@@ -31,9 +31,9 @@ decision, not a crash.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 REPORT_COLUMNS = (
@@ -89,9 +89,9 @@ class _VolumeCheck:
 
 
 class DataQualityValidator:
-    """Fluent DQ check builder; ``report()`` and ``passed()`` execute
-    everything in one aggregate job, with one existence-join marker per
-    consistency check inside it.
+    """Fluent DQ check builder; every check is a counter over one pass
+    of the input, with one existence-join marker per consistency check
+    in it — aggregated by ``report()``, observed by ``passed()``.
 
     Usage (mirrors reference curated/data_quality.py:137-157)::
 
@@ -163,18 +163,16 @@ class DataQualityValidator:
 
     # -- execution --------------------------------------------------------
 
-    def _aggregate(self) -> DataFrame:
-        """The one-row aggregate every check is read from: ``__total``,
-        one failure count per completeness/accuracy check (``__c{i}``)
-        and one orphan count per consistency check (``__k{j}``).
+    def _marked(self) -> DataFrame:
+        """The input plus one hit-marker column ``__dim{j}`` per
+        consistency check.
 
-        Each consistency check adds a hit-marker column to the fact side
-        as an IN-subquery against the dim's key column, which Spark plans
-        as an ExistenceJoin: one boolean per fact row whatever the dim's
-        key multiplicity, so the dim keys need no per-batch distinct.
-        The marker is ``coalesce(key IN dim, false)``: a NULL fact key,
-        or a miss against a dim holding NULL keys, is an orphan — the
-        reference's left-anti semantics."""
+        Each marker is an IN-subquery against the dim's key column,
+        which Spark plans as an ExistenceJoin: one boolean per fact row
+        whatever the dim's key multiplicity, so the dim keys need no
+        per-batch distinct. The marker is ``coalesce(key IN dim,
+        false)``: a NULL fact key, or a miss against a dim holding NULL
+        keys, is an orphan — the reference's left-anti semantics."""
         aug = self._df
         for j, con in enumerate(self._consistency):
             dim_keys = con.dim.select(F.col(con.key))
@@ -183,31 +181,33 @@ class DataQualityValidator:
             aug = aug.withColumn(
                 f"__dim{j}", F.coalesce(F.col(con.key).isin(dim_keys), F.lit(False))
             )
+        return aug
 
-        aggs = [F.count(F.lit(1)).cast("long").alias("__total")]
+    def _counters(self) -> dict[str, Column]:
+        """The one counter list, long aggregates over :meth:`_marked` by
+        name: ``__total``, one failure count per completeness/accuracy
+        check (``__c{i}``), one orphan count per consistency check
+        (``__k{j}``)."""
+        counters = {"__total": F.count(F.lit(1))}
         for i, chk in enumerate(self._agg_checks):
-            aggs.append(
-                F.sum(F.when(chk.fail_condition, 1).otherwise(0))
-                .cast("long")
-                .alias(f"__c{i}")
-            )
+            counters[f"__c{i}"] = F.sum(F.when(chk.fail_condition, 1).otherwise(0))
         for j, _con in enumerate(self._consistency):
-            aggs.append(
-                F.sum(F.when(F.col(f"__dim{j}"), 0).otherwise(1))
-                .cast("long")
-                .alias(f"__k{j}")
-            )
-        return aug.agg(*aggs)
+            counters[f"__k{j}"] = F.sum(F.when(F.col(f"__dim{j}"), 0).otherwise(1))
+        return counters
 
-    def _entries(self) -> list[tuple]:
+    def _aggregate(self) -> DataFrame:
+        """The one-row aggregate :meth:`report` reads, a column per counter."""
+        return self._marked().agg(*[c.alias(n) for n, c in self._counters().items()])
+
+    def _entries(self, counter) -> list[tuple]:
         """One ``(check_type, check_name, failed_count, denominator,
-        threshold)`` per check, the counts as Columns over
-        :meth:`_aggregate`'s row. Volume is a 0/1 failure over
-        denominator 1 with threshold 100, so it PASSes iff in bounds
-        under the same strict ``<`` rule."""
-        total = F.col("__total")
+        threshold)`` per check, the counts as Columns read through
+        ``counter`` (a counter name → Column). Volume is a 0/1 failure
+        over denominator 1 with threshold 100, so it PASSes iff in
+        bounds under the same strict ``<`` rule."""
+        total = counter("__total")
         entries = [
-            (chk.check_type, chk.name, F.col(f"__c{i}"), total, chk.threshold_pct)
+            (chk.check_type, chk.name, counter(f"__c{i}"), total, chk.threshold_pct)
             for i, chk in enumerate(self._agg_checks)
         ]
         for vol in self._volume:
@@ -215,7 +215,7 @@ class DataQualityValidator:
             failed = F.when(in_bounds, F.lit(0)).otherwise(F.lit(1))
             entries.append(("volume", vol.name, failed, F.lit(1).cast("long"), 100.0))
         entries += [
-            ("consistency", con.name, F.col(f"__k{j}"), total, con.threshold_pct)
+            ("consistency", con.name, counter(f"__k{j}"), total, con.threshold_pct)
             for j, con in enumerate(self._consistency)
         ]
         return entries
@@ -242,7 +242,7 @@ class DataQualityValidator:
                 denominator.alias("denominator"),
                 F.lit(float(threshold)).alias("threshold"),
             )
-            for check_type, name, failed, denominator, threshold in self._entries()
+            for check_type, name, failed, denominator, threshold in self._entries(F.col)
         ]
         if not entries:
             spark = self._df.sparkSession
@@ -295,24 +295,25 @@ class DataQualityValidator:
         }
 
     def passed(self) -> bool:
-        """True iff every check PASSes (drives the gate). Applies the
-        report's :func:`_status` rule per check to the one-row
-        :meth:`_aggregate` and collects one array of statuses: the same
-        verdict as :meth:`report` without planning its explode, and
-        never the data."""
-        verdicts = self._verdicts()
-        return verdicts is None or all(s == "PASS" for s in verdicts.first()[0])
-
-    def _verdicts(self) -> DataFrame | None:
-        """The one-row frame :meth:`passed` collects: one ``status`` per
-        check, in :meth:`report` order. ``None`` when there is no check."""
+        """True iff every check PASSes (drives the gate). ONE pass pins
+        the input (``localCheckpoint(eager=True)``, markers dropped) and
+        observes the row count and the report's :func:`_status` per
+        check over :meth:`_counters` — no driver-side copy of the rule,
+        no second job. :meth:`gate` writes the pin; a standalone call
+        pays for it too."""
+        counters = self._counters()
         statuses = [
             _status(failed, denominator, F.lit(float(threshold)))
-            for _, _, failed, denominator, threshold in self._entries()
+            for _, _, failed, denominator, threshold in self._entries(counters.get)
         ]
-        if not statuses:
-            return None
-        return self._aggregate().select(F.array(*statuses).alias("statuses"))
+        seen = Observation()
+        marked = self._marked().observe(
+            seen, counters["__total"].alias("total"), F.array(*statuses).alias("status")
+        )
+        markers = [f"__dim{j}" for j in range(len(self._consistency))]
+        self._pinned = marked.drop(*markers).localCheckpoint(eager=True)
+        self._total = seen.get["total"]
+        return all(s == "PASS" for s in seen.get["status"])
 
     def write_report(self, path: str) -> dict:
         """Land :meth:`summary` as one JSON object at ``path`` — the
@@ -339,42 +340,16 @@ class DataQualityValidator:
     ) -> bool:
         """The reference's write gate (curated/data_quality.py:169-175):
         all checks pass → ``curated_writer(df)``; any failure →
-        ``quarantine_writer(df)``. Returns the pass/fail decision."""
+        ``quarantine_writer(df)``; empty input → no write. Returns the
+        pass/fail decision.
+
+        The writer gets :meth:`passed`'s pin, so a batch is read once;
+        over a whole table (``run_medallion_batch``) the pin is one
+        local-disk materialisation in place of a second source read."""
         ok = self.passed()
-        (curated_writer if ok else quarantine_writer)(self._df)
+        if self._total:
+            (curated_writer if ok else quarantine_writer)(self._pinned)
         return ok
-
-
-def observed_audit(
-    df: DataFrame,
-    name: str = "audit",
-    value_col: str | None = None,
-):
-    """Attach an ``observe`` audit to a DataFrame: row count, null-free
-    row count of ``value_col`` (when given) and its exact decimal sum —
-    collected as a side effect of whatever action runs downstream, with
-    ZERO extra passes over the data (vs the reference's separate
-    ``count()`` jobs per metric, curated/data_quality.py:32-45).
-
-    Returns ``(df, handle)``. On batch DataFrames ``handle`` is a
-    ``pyspark.sql.Observation`` — read ``handle.get`` after the first
-    action. On streaming DataFrames metrics surface per micro-batch in
-    ``StreamingQueryProgress.observedMetrics[name]`` and ``handle`` is
-    the ``name`` string."""
-    metrics = [F.count(F.lit(1)).alias("n_rows")]
-    if value_col is not None:
-        metrics += [
-            F.count(value_col).alias("n_nonnull"),
-            F.sum(F.col(value_col).cast("decimal(18,2)"))
-            .cast("double")
-            .alias("value_sum"),
-        ]
-    if df.isStreaming:
-        return df.observe(name, *metrics), name
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    return df.observe(obs, *metrics), obs
 
 
 def profile_table(

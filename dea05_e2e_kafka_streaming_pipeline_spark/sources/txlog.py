@@ -47,6 +47,7 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _LOG_DIR = "_log"
 _BUCKET = "bucket"
@@ -135,7 +136,9 @@ def commit_buckets(
 def _commit(df: DataFrame, table_path: str, mode: str, n_buckets, keep) -> int:
     """Write ``df`` as version N's files under ``data-vN/`` (partitioned
     by bucket when ``n_buckets`` is set), then publish manifest N = the
-    previous version's files that ``keep`` accepts + the new files. The
+    previous version's files that ``keep`` accepts + the new files, and
+    the schema of ``df``'s files (a bucket column is in the path, not
+    the file), so a version with no file still reads. The
     write overwrites ``data-vN``: no manifest lists it, so anything
     there is what a failed attempt at N left, and the retry is N too."""
     versions = snapshot_versions(table_path)
@@ -146,6 +149,7 @@ def _commit(df: DataFrame, table_path: str, mode: str, n_buckets, keep) -> int:
     if n_buckets is not None:
         writer = writer.partitionBy(_BUCKET)
     writer.parquet(data_dir)
+    file_schema = df.drop(_BUCKET).schema if n_buckets is not None else df.schema
     new_files = sorted(
         os.path.relpath(os.path.join(d, f), table_path)
         for d, _, names in os.walk(data_dir)
@@ -156,6 +160,7 @@ def _commit(df: DataFrame, table_path: str, mode: str, n_buckets, keep) -> int:
         "version": version,
         "mode": mode,
         "n_buckets": n_buckets,
+        "schema": file_schema.json(),
         "files": [f for f in prev if keep(f)] + new_files,
         "sizes": {
             f: os.path.getsize(os.path.join(table_path, f)) for f in new_files
@@ -202,12 +207,16 @@ def read_snapshot(
 ) -> DataFrame:
     """Scan the table AS OF ``version`` (default: latest). Reads exactly
     the manifest's file list — concurrent later commits are invisible
-    (snapshot isolation for readers)."""
+    (snapshot isolation for readers). A version with no file (a merge
+    that deleted every key) reads as an empty frame of the manifest's
+    schema."""
     version = resolve_version(_log_path(table_path), version)
-    files = _manifest(table_path, version)["files"]
-    if not files:
+    m = _manifest(table_path, version)
+    if m["files"]:
+        return spark.read.parquet(*[os.path.join(table_path, f) for f in m["files"]])
+    if "schema" not in m:  # published before manifests recorded one
         raise ValueError(f"version {version} has no files")
-    return spark.read.parquet(*[os.path.join(table_path, f) for f in files])
+    return spark.createDataFrame([], StructType.fromJson(json.loads(m["schema"])))
 
 
 def snapshot_history(table_path: str) -> list[dict]:

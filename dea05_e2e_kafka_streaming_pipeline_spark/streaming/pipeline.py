@@ -105,17 +105,18 @@ def dq_gated_sink(
     trigger_seconds: int | None = 5,
 ) -> StreamingQuery:
     """Streaming DQ gate: validate each micro-batch, write passing
-    batches to curated (``fmt``), failing batches to JSON quarantine.
+    batches to curated (``fmt``), failing batches to JSON quarantine,
+    empty batches nowhere.
 
     ``validator_builder`` receives the micro-batch DataFrame and returns
     a configured validator, e.g.::
 
         lambda df: DataQualityValidator(df).check_completeness([...])
-    """
+
+    The gate reads the batch once: the write reads the pass that
+    observed its verdict and row count."""
 
     def _gate(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         validator_builder(batch_df).gate(
             lambda df: df.write.mode("append").format(fmt).save(curated_path),
             lambda df: df.write.mode("append").json(quarantine_path),

@@ -524,6 +524,30 @@ def test_upsert_batch_clears_fully_deleted_buckets(spark, tmp_path):
     assert _state(spark, target) == {7: 3.0}
 
 
+def test_read_snapshot_of_emptied_table(spark, tmp_path):
+    """A batch that deletes every key publishes a version with no file;
+    it reads as zero rows with the table's columns."""
+    target = str(tmp_path / "silver")
+    keys = range(50)
+    upsert_batch_into_parquet(
+        _changes(spark, [(k, float(k), "c", 1) for k in keys]),
+        target,
+        key="order_id",
+        n_buckets=4,
+    )
+    upsert_batch_into_parquet(
+        _changes(spark, [(k, None, "d", 2) for k in keys]),
+        target,
+        key="order_id",
+        n_buckets=4,
+    )
+    assert snapshot_history(target)[-1]["n_files"] == 0
+    emptied = read_snapshot(spark, target)
+    assert emptied.count() == 0
+    assert emptied.dtypes == read_snapshot(spark, target, 0).dtypes
+    assert emptied.columns == ["order_id", "amount"]
+
+
 def test_upsert_batch_skips_unreadable_untouched_bucket(spark, tmp_path):
     """A corrupt file in a bucket the batch does not touch is never
     opened: the merge succeeds and the file stays listed, so once it is
