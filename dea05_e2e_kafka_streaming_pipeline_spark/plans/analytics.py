@@ -19,6 +19,7 @@ SMALL_ROWS: dict[str, int] = {
     "global_row_number": 2_000_000,
     "global_cumsum": 2_000_000,
     "theil_sen": 8_000_000,
+    "cdc_merge": 1_000_000,
 }
 """Row bound of the single-node branch of each size-adaptive operator:
 inputs of at most ``SMALL_ROWS[op]`` rows run on the driver or in ONE
@@ -41,6 +42,12 @@ memory bounded:
 - ``theil_sen`` (pairwise slopes or intercept candidates; one JVM
   task): the ``repartition(1)`` sort of one 8- or 16-byte key, ~40 B/row
   with row overhead and sort pointer — ~0.3 GB at the bound.
+- ``cdc_merge`` (a change batch plus the rows of the buckets it
+  touches; driver heap and Python process): the JVM collects the batch
+  as Arrow batches for ``toArrow()``; Python then holds the batch, its
+  sorted copy, the touched rows and the merged per-bucket copies, about
+  4× the Arrow bytes of the rows at the bound — ~0.4 GB for 100-byte
+  rows (``streaming.pipeline.upsert_batch_into_parquet``).
 
 Every entry is read at call time, so a test can force the distributed
 branch with ``monkeypatch.setitem(SMALL_ROWS, op, 0)``.

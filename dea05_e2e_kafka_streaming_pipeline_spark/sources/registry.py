@@ -46,7 +46,16 @@ def read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
     target whose every bucket was deleted). Any other failure — a
     corrupt footer, IO, permissions — propagates, so the batch fails
     and the checkpoint retries it instead of the sink rewriting its
-    target from the batch alone."""
+    target from the batch alone.
+
+    A missing path is found through the Hadoop file system before the
+    read: a failing analysis would make every ``Observation`` listener
+    of the session log an error."""
+    jvm = spark.sparkContext._jvm
+    hadoop_path = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hadoop_path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if not fs.exists(hadoop_path):
+        return None
     try:
         return spark.read.parquet(path)
     except AnalysisException as exc:

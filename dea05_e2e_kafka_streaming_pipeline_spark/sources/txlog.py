@@ -13,17 +13,23 @@ pipeline, on nothing but parquet + JSON manifests:
   manifest N (:func:`write_json_atomic`: write-temp + rename — the same
   single-file atomic-publish trick Delta's ``_last_checkpoint`` uses).
   :func:`commit_snapshot` appends or logically overwrites;
-  :func:`commit_buckets` swaps the file lists of the buckets a CDC
-  merge touched (``streaming/pipeline.py:upsert_batch_into_parquet``),
-  Delta's add/remove actions. Both publish through :func:`_commit`;
+  :func:`commit_buckets` (Spark writes the files) and
+  :func:`commit_bucket_tables` (pyarrow writes them, for a merge that
+  ran on the driver) swap the file lists of the buckets a CDC merge
+  touched (``streaming/pipeline.py:upsert_batch_into_parquet``),
+  Delta's add/remove actions. All three go through :func:`_commit`'s
+  two steps: write the files, then publish the manifest;
 - **reading as of version N** = scanning exactly the files in manifest
-  N, through :func:`read_snapshot` — a plain parquet read of the table
+  N with the schema manifest N records, through :func:`read_snapshot`
+  (no schema-inference job) — a plain parquet read of the table
   directory sees every version's files. Old versions stay readable
   until their files are vacuumed.
 
 A bucketed table records ``n_buckets`` in each manifest and keeps
 bucket ``b``'s files under ``data-vN/bucket=b/``, so a merge reads and
-replaces only the buckets its batch touches: O(touched buckets).
+replaces only the buckets its batch touches (:func:`read_buckets`,
+:func:`bucket_files`): O(touched buckets), which is O(table) once a
+batch holds more keys than there are buckets.
 
 This is the one module that knows the log format: a directory of
 ``vNNNNNN.json`` manifests, latest = highest number
@@ -34,8 +40,9 @@ keeps its own log, ``_ann_log/``, through the same three functions.
 What this deliberately does NOT provide: multi-writer conflict
 resolution (Delta's optimistic concurrency) — single-writer-per-table
 (and per ANN store) is the contract, which matches the reference's
-job-per-table layout. File operations are the driver's local ``os``
-calls.
+job-per-table layout. File operations, and the pyarrow footer reads
+and writes of a merge on the driver, are the driver's local file
+system calls.
 
 At 100 TB the manifest is metadata (one JSON row per file); scan
 planning cost is the listing it replaces.
@@ -45,7 +52,12 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import uuid
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -118,7 +130,9 @@ def commit_snapshot(df: DataFrame, table_path: str, mode: str = "append") -> int
     Returns the committed version number."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite: {mode!r}")
-    return _commit(df, table_path, mode, None, lambda f: mode == "append")
+    return _commit(
+        table_path, mode, None, df.schema, lambda f: mode == "append", df.write.parquet
+    )
 
 
 def commit_buckets(
@@ -128,28 +142,76 @@ def commit_buckets(
     with the files of ``buckets`` replaced by ``df``'s, which carries an
     int ``bucket`` column. A listed bucket ``df`` has no row for drops
     out; every other bucket keeps its files. Returns the version."""
-    _bucketed_files(table_path, n_buckets)
+    return _commit_buckets(
+        table_path,
+        buckets,
+        n_buckets,
+        df.drop(_BUCKET).schema,
+        df.write.partitionBy(_BUCKET).parquet,
+    )
+
+
+def commit_bucket_tables(
+    tables: dict[int, pa.Table], schema: StructType, table_path: str, n_buckets: int
+) -> int:
+    """:func:`commit_buckets` for a merge that ran on the driver: bucket
+    ``b``'s files are replaced by ``tables[b]``, written by pyarrow as
+    one ``part-*.parquet`` file (none when it has no row, so the bucket
+    drops out). ``schema`` is the Spark schema of the tables' columns,
+    recorded in the manifest. Returns the version."""
+
+    def write(data_dir: str) -> None:
+        for b, table in tables.items():
+            if table.num_rows:
+                d = os.path.join(data_dir, f"{_BUCKET}={b}")
+                os.makedirs(d)
+                name = f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"
+                pq.write_table(
+                    table,
+                    os.path.join(d, name),
+                    use_dictionary=_dictionary_columns(table),
+                )
+
+    return _commit_buckets(table_path, sorted(tables), n_buckets, schema, write)
+
+
+def _dictionary_columns(table: pa.Table) -> list[str]:
+    """The flat columns of ``table`` with at most half as many distinct
+    values as rows, the ones a dictionary shrinks. Spark's parquet
+    writer falls back to PLAIN where a dictionary does not pay; pyarrow
+    dictionary-encodes every column, and a near-unique one grows."""
+    return [
+        name
+        for name, col in zip(table.column_names, table.columns)
+        if not (pa.types.is_nested(col.type) or pa.types.is_null(col.type))
+        and 2 * pc.count_distinct(col).as_py() <= table.num_rows
+    ]
+
+
+def _commit_buckets(table_path, buckets, n_buckets, schema, write) -> int:
+    """Both bucket commits: check ``n_buckets`` before any write, then
+    commit with ``buckets``' old files dropped."""
+    _bucketed_manifest(table_path, n_buckets)
     touched = _in_buckets(buckets)
-    return _commit(df, table_path, "merge", n_buckets, lambda f: not touched(f))
+    return _commit(table_path, "merge", n_buckets, schema, lambda f: not touched(f), write)
 
 
-def _commit(df: DataFrame, table_path: str, mode: str, n_buckets, keep) -> int:
-    """Write ``df`` as version N's files under ``data-vN/`` (partitioned
-    by bucket when ``n_buckets`` is set), then publish manifest N = the
+def _commit(table_path: str, mode: str, n_buckets, schema: StructType, keep, write) -> int:
+    """Commit version N in two steps. First ``write(data_dir)`` writes
+    N's files under ``data-vN/`` (bucket ``b``'s under ``bucket=b/``
+    when ``n_buckets`` is set); anything already there is what a failed
+    attempt at N left, since no manifest lists it, so it is removed
+    first and the retry is N too. Then manifest N is published: the
     previous version's files that ``keep`` accepts + the new files, and
-    the schema of ``df``'s files (a bucket column is in the path, not
-    the file), so a version with no file still reads. The
-    write overwrites ``data-vN``: no manifest lists it, so anything
-    there is what a failed attempt at N left, and the retry is N too."""
+    ``schema``, the Spark schema of the files' columns (a bucket column
+    is in the path, not the file), so a version with no file still
+    reads and every read skips schema inference."""
     versions = snapshot_versions(table_path)
     version = (versions[-1] + 1) if versions else 0
     prev = _manifest(table_path, versions[-1])["files"] if versions else []
     data_dir = os.path.join(table_path, f"data-v{version:06d}")
-    writer = df.write.mode("overwrite")
-    if n_buckets is not None:
-        writer = writer.partitionBy(_BUCKET)
-    writer.parquet(data_dir)
-    file_schema = df.drop(_BUCKET).schema if n_buckets is not None else df.schema
+    shutil.rmtree(data_dir, ignore_errors=True)
+    write(data_dir)
     new_files = sorted(
         os.path.relpath(os.path.join(d, f), table_path)
         for d, _, names in os.walk(data_dir)
@@ -160,7 +222,7 @@ def _commit(df: DataFrame, table_path: str, mode: str, n_buckets, keep) -> int:
         "version": version,
         "mode": mode,
         "n_buckets": n_buckets,
-        "schema": file_schema.json(),
+        "schema": schema.json(),
         "files": [f for f in prev if keep(f)] + new_files,
         "sizes": {
             f: os.path.getsize(os.path.join(table_path, f)) for f in new_files
@@ -176,19 +238,52 @@ def _in_buckets(buckets: list[int]):
     return lambda f: f.split(os.sep)[1] in dirs
 
 
-def _bucketed_files(table_path: str, n_buckets: int) -> list[str]:
-    """The latest version's files (none before the first commit). A
-    table bucketed another way raises: the merge would read the wrong
-    buckets and leave a second row for every key it moves."""
+def _bucketed_manifest(table_path: str, n_buckets: int) -> dict:
+    """The latest manifest (``{}`` before the first commit). A table
+    bucketed another way raises: the merge would read the wrong buckets
+    and leave a second row for every key it moves."""
     versions = snapshot_versions(table_path)
     if not versions:
-        return []
+        return {}
     m = _manifest(table_path, versions[-1])
     if m.get("n_buckets") != n_buckets:
         raise ValueError(
             f"{table_path} has n_buckets={m.get('n_buckets')}, not {n_buckets}"
         )
-    return m["files"]
+    return m
+
+
+def _schema(m: dict) -> StructType | None:
+    """The schema manifest ``m`` records (``None`` in a manifest written
+    before manifests recorded one)."""
+    return StructType.fromJson(json.loads(m["schema"])) if "schema" in m else None
+
+
+def _scan(spark: SparkSession, table_path: str, m: dict, files) -> DataFrame:
+    """Parquet scan of ``files`` (relative to ``table_path``) with the
+    schema ``m`` records, so planning it runs no inference job;
+    inferred from the files when ``m`` records none."""
+    reader = spark.read
+    schema = _schema(m)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(*[os.path.join(table_path, f) for f in files])
+
+
+def bucket_files(
+    table_path: str, buckets: list[int], n_buckets: int
+) -> tuple[dict[int, list[str]], StructType | None]:
+    """The latest version's files of each of ``buckets`` (absolute
+    paths; an empty list for a bucket with none) of a table bucketed
+    ``n_buckets`` ways, and the schema its manifest records (``None``
+    before the first commit)."""
+    m = _bucketed_manifest(table_path, n_buckets)
+    listed = m.get("files", [])
+    files = {
+        b: [os.path.join(table_path, f) for f in filter(_in_buckets([b]), listed)]
+        for b in buckets
+    }
+    return files, _schema(m)
 
 
 def read_buckets(
@@ -197,9 +292,9 @@ def read_buckets(
     """Scan only ``buckets`` of the latest version of a table bucketed
     ``n_buckets`` ways — no other file is opened. ``None`` when those
     buckets hold no file."""
-    files = filter(_in_buckets(buckets), _bucketed_files(table_path, n_buckets))
-    paths = [os.path.join(table_path, f) for f in files]
-    return spark.read.parquet(*paths) if paths else None
+    m = _bucketed_manifest(table_path, n_buckets)
+    files = list(filter(_in_buckets(buckets), m.get("files", [])))
+    return _scan(spark, table_path, m, files) if files else None
 
 
 def read_snapshot(
@@ -207,16 +302,17 @@ def read_snapshot(
 ) -> DataFrame:
     """Scan the table AS OF ``version`` (default: latest). Reads exactly
     the manifest's file list — concurrent later commits are invisible
-    (snapshot isolation for readers). A version with no file (a merge
-    that deleted every key) reads as an empty frame of the manifest's
-    schema."""
+    (snapshot isolation for readers) — with the manifest's schema, so
+    no job runs before the caller's action. A version with no file (a
+    merge that deleted every key) reads as an empty frame of the
+    manifest's schema."""
     version = resolve_version(_log_path(table_path), version)
     m = _manifest(table_path, version)
     if m["files"]:
-        return spark.read.parquet(*[os.path.join(table_path, f) for f in m["files"]])
+        return _scan(spark, table_path, m, m["files"])
     if "schema" not in m:  # published before manifests recorded one
         raise ValueError(f"version {version} has no files")
-    return spark.createDataFrame([], StructType.fromJson(json.loads(m["schema"])))
+    return spark.createDataFrame([], _schema(m))
 
 
 def snapshot_history(table_path: str) -> list[dict]:

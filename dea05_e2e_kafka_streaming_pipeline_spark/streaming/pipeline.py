@@ -28,6 +28,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.types import StructType
 
 from dea05_e2e_kafka_streaming_pipeline_spark.operators.quality import (
     DataQualityValidator,
@@ -36,10 +37,14 @@ from dea05_e2e_kafka_streaming_pipeline_spark.sources.registry import (
     read_parquet_or_none,
 )
 from dea05_e2e_kafka_streaming_pipeline_spark.sources.txlog import (
+    bucket_files,
+    commit_bucket_tables,
     commit_buckets,
     read_buckets,
     vacuum_snapshots,
 )
+
+_BUCKET = "bucket"  # the CDC merge's bucket column, a directory in the table
 
 
 def _start(
@@ -143,20 +148,31 @@ def upsert_batch_into_parquet(
 
     Scale shape: a key lives in bucket ``pmod(xxhash64(key),
     n_buckets)``; a batch reads only the files of the buckets its keys
-    hash into (``txlog.read_buckets``, so a corrupt file elsewhere is
-    never opened) and publishes one version replacing exactly those
-    buckets' files (``txlog.commit_buckets``) — O(touched buckets),
-    never O(target). A merge passing another ``n_buckets`` than the
-    table's raises ``ValueError`` before any write. The merge itself is
-    :func:`~..operators.cdc.apply_cdc_changes` in its two halves: the
-    latest-change-per-key window over the batch, then the delete-wins
-    anti-join + union against the touched buckets.
+    hash into (so a corrupt file elsewhere is never opened) and
+    publishes one version replacing exactly those buckets' files —
+    O(touched buckets). A batch holding more keys than ``n_buckets``
+    touches nearly all of them, and then rewrites nearly the whole
+    table. A merge passing another ``n_buckets`` than the table's raises
+    ``ValueError`` before any write.
 
-    One read of the batch: the window output is pinned once
-    (``localCheckpoint(eager=True)``), and an ``Observation`` on that
-    pin yields the touched buckets — an empty set means an empty batch,
-    which returns before any write. The merge and the write read the
-    pin, never the batch again.
+    Size-adaptive (``plans.analytics.size_gate``): the batch, with its
+    ``bucket`` column, is pinned and counted once. When the changes
+    plus the touched buckets' rows (counted from the parquet footers of
+    the latest version's files) are at most
+    ``SMALL_ROWS["cdc_merge"]``, the pin is collected with
+    ``toArrow()`` and the merge runs on the driver
+    (:func:`~..operators.cdc.apply_cdc_changes_arrow`); each touched
+    bucket is written by pyarrow as one file
+    (``txlog.commit_bucket_tables``). A micro-batch's fixed cost of
+    Spark jobs and per-file writers is what this skips. Otherwise the
+    distributed merge reads the pin: the latest-change-per-key window,
+    pinned once (``localCheckpoint(eager=True)``) with an
+    ``Observation`` that yields the touched buckets, then the
+    delete-wins anti-join + union against those buckets
+    (``txlog.read_buckets``), repartitioned by bucket so ONE task writes
+    each touched bucket as one file (``txlog.commit_buckets``). Either
+    way the batch is read once, and an empty batch returns before any
+    write.
 
     Atomic and replay-convergent: the files land under a fresh
     ``data-vN/`` and one manifest publish makes them visible, so a
@@ -166,44 +182,97 @@ def upsert_batch_into_parquet(
     unpublished ``data-vN``, and merging an already-applied change is a
     no-op — what makes the streaming wrapper effectively-once.
 
-    Each touched bucket is rewritten as ONE file by ONE task (the merged
-    frame is repartitioned by bucket before the write), so a batch adds
-    one file per touched bucket however many partitions the merge ran
-    on. Pick ``n_buckets`` so a bucket stays near one task's worth of
-    bytes and a batch touches at least as many buckets as there are
-    cores. Measured on 4 cores against one file per task per bucket, it
-    was no slower for backfills of up to 10^6 changes into 16 buckets,
-    but ~20% slower in wall time for 10^6 changes into 2 buckets of 2M
-    rows, where two tasks do the work the per-task write spread over
-    all cores.
+    Pick ``n_buckets`` so a bucket stays near one task's worth of bytes
+    and a large batch touches at least as many buckets as there are
+    cores. Measured on 4 cores against one file per task per bucket,
+    the distributed write was no slower for backfills of up to 10^6
+    changes into 16 buckets, but ~20% slower in wall time for 10^6
+    changes into 2 buckets of 2M rows, where two tasks do the work the
+    per-task write spread over all cores.
     """
     from dea05_e2e_kafka_streaming_pipeline_spark.operators.cdc import (
         latest_change_per_key,
         merge_latest_changes,
     )
+    from dea05_e2e_kafka_streaming_pipeline_spark.plans.analytics import size_gate
 
-    spark = batch.sparkSession
     meta = {op_col, ts_col} | ({seq_col} if seq_col else set())
     data_cols = [c for c in batch.columns if c not in meta]
     bucket = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
+    pinned, n, small = size_gate(batch.withColumn(_BUCKET, bucket), "cdc_merge")
+    if n == 0:
+        return
+    schema = pinned.select(*data_cols).schema
+    merge = (key, ts_col, op_col, seq_col)
+    if small and _merge_on_driver(pinned, n, schema, target_dir, n_buckets, *merge):
+        return
     touched = Observation()
     latest = (
-        latest_change_per_key(batch, key, ts_col, op_col, seq_col)
-        .observe(touched, F.collect_set(bucket).alias("buckets"))
+        latest_change_per_key(pinned, *merge)
+        .observe(touched, F.collect_set(_BUCKET).alias("buckets"))
         .localCheckpoint(eager=True)
     )
     affected = sorted(touched.get["buckets"])
-    if not affected:
-        return
-    target = read_buckets(spark, target_dir, affected, n_buckets)
+    target = read_buckets(batch.sparkSession, target_dir, affected, n_buckets)
     if target is None:  # first batch, or every key of these buckets deleted
-        target = spark.createDataFrame([], batch.select(*data_cols).schema)
+        target = batch.sparkSession.createDataFrame([], schema)
     merged = (
         merge_latest_changes(target, latest, key, op_col)
-        .withColumn("bucket", bucket)
-        .repartition("bucket")
+        .withColumn(_BUCKET, bucket)
+        .repartition(_BUCKET)
     )
     commit_buckets(merged, target_dir, affected, n_buckets)
+
+
+def _merge_on_driver(
+    pinned: DataFrame,
+    n: int,
+    schema: StructType,
+    target_dir: str,
+    n_buckets: int,
+    key: str,
+    ts_col: str,
+    op_col: str,
+    seq_col: str | None,
+) -> bool:
+    """The single-node branch of :func:`upsert_batch_into_parquet`:
+    collect the ``n`` pinned changes and merge them into the touched
+    buckets on the driver, then publish. Returns ``False``, having
+    written nothing, when the changes plus the touched buckets' rows
+    pass ``SMALL_ROWS["cdc_merge"]`` or the table records another
+    schema than the batch's data columns, ``schema``. Each bucket is
+    written in the Arrow form of ``schema``, microsecond timestamps."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from dea05_e2e_kafka_streaming_pipeline_spark.operators.cdc import (
+        apply_cdc_changes_arrow,
+    )
+    from dea05_e2e_kafka_streaming_pipeline_spark.plans.analytics import SMALL_ROWS
+
+    changes = pinned.toArrow()
+    affected = pc.unique(changes[_BUCKET]).to_pylist()
+    files, recorded = bucket_files(target_dir, affected, n_buckets)
+    if recorded is not None and [(f.name, f.dataType) for f in recorded] != [
+        (f.name, f.dataType) for f in schema
+    ]:
+        return False
+    rows = sum(pq.read_metadata(f).num_rows for fs in files.values() for f in fs)
+    if n + rows > SMALL_ROWS["cdc_merge"]:
+        return False
+    arrow = pa.schema([f.with_nullable(True) for f in to_arrow_schema(schema)])
+    tables = {}
+    for b, fs in files.items():  # a key's changes all hash into its bucket
+        target = pa.concat_tables(
+            [arrow.empty_table()]
+            + [pq.read_table(f, columns=arrow.names).cast(arrow) for f in fs]
+        )
+        mine = changes.filter(pc.equal(changes[_BUCKET], b))
+        tables[b] = apply_cdc_changes_arrow(target, mine, key, ts_col, op_col, seq_col)
+    commit_bucket_tables(tables, schema, target_dir, n_buckets)
+    return True
 
 
 def stream_upsert_sink(

@@ -1,16 +1,22 @@
 """Structured Streaming layer: checkpointed ingestion, DQ-gated sink,
 windowed aggregation streaming/batch equivalence, synthetic sources."""
 
+import functools
+import os
+import tempfile
 import time
 from pathlib import Path
 from urllib.parse import urlparse
 
 import pyspark.sql.functions as F
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
 from dea05_e2e_kafka_streaming_pipeline_spark.operators.quality import (
     DataQualityValidator,
 )
+from dea05_e2e_kafka_streaming_pipeline_spark.plans.analytics import SMALL_ROWS
 from dea05_e2e_kafka_streaming_pipeline_spark.schemas import EVENTS_SCHEMA
 from dea05_e2e_kafka_streaming_pipeline_spark.sources.registry import load_table
 from dea05_e2e_kafka_streaming_pipeline_spark.sources.txlog import (
@@ -587,10 +593,12 @@ def test_upsert_batch_raises_on_unreadable_target(spark, tmp_path):
 
 
 def test_upsert_batch_failed_write_leaves_every_bucket(spark, tmp_path):
-    """A corrupt file in a touched bucket that schema inference does not
-    read fails the write's scan. Every published file keeps its bytes and
-    the latest version stays; once the file is put back, the retry
-    overwrites the failed attempt's directory and publishes the batch."""
+    """A corrupt file in a touched bucket fails the merge: its footer
+    read on the driver branch, the write's scan on the distributed one
+    (the read takes the manifest's schema, so no schema inference opens
+    a file first). Every published file keeps its bytes and the latest
+    version stays; once the file is put back, the retry overwrites the
+    failed attempt's directory and publishes the batch."""
     target = tmp_path / "silver"
     _preload(spark, target)
 
@@ -599,8 +607,7 @@ def test_upsert_batch_failed_write_leaves_every_bucket(spark, tmp_path):
         return {p: p.read_bytes() for p in published if p.is_file()}
 
     before_files = files()
-    # touch buckets 1 and 3; schema inference reads the first listed
-    # file (bucket=1), so the corrupt bucket-3 file fails the scan
+    # touch buckets 1 and 3; the second one's file is corrupt
     keys = _keys_in_bucket(spark, 1, 4)[:5] + _keys_in_bucket(spark, 3, 4)[:5]
     batch = _changes(spark, [(k, -1.0, "u", 1) for k in keys])
     corrupt = _bucket_file(target, 3)
@@ -853,6 +860,207 @@ def test_stream_upsert_sink_reads_each_change_once(spark, tmp_path):
     assert len(got) == len(state)
     assert {r.order_id: r.amount for r in got} == state
     _assert_only_latest_on_disk(spark, tmp_path / "silver")
+
+
+@pytest.fixture
+def distributed_merge():
+    """Force ``upsert_batch_into_parquet`` onto its distributed branch
+    for the whole test, also past a ``monkeypatch.undo()`` in it."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setitem(SMALL_ROWS, "cdc_merge", 0)
+        yield
+
+
+def _on_distributed_branch(test):
+    """A copy of ``test`` that runs with :func:`distributed_merge`."""
+
+    @functools.wraps(test)
+    def run(*args, **kwargs):
+        return test(*args, **kwargs)
+
+    return pytest.mark.usefixtures("distributed_merge")(run)
+
+
+# Every merge test above runs on both branches: as written (its inputs
+# are small, so the merge runs on the driver) and as ``<name>_distributed``.
+for _test in [
+    test_upsert_batch_into_parquet_merge_delete_replay,
+    test_upsert_batch_clears_fully_deleted_buckets,
+    test_upsert_batch_skips_unreadable_untouched_bucket,
+    test_upsert_batch_raises_on_unreadable_target,
+    test_upsert_batch_failed_write_leaves_every_bucket,
+    test_upsert_batch_publish_is_atomic,
+    test_upsert_batch_replaces_only_touched_buckets,
+    test_upsert_batch_rejects_other_n_buckets,
+    test_upsert_batch_writes_one_file_per_bucket,
+    test_stream_upsert_sink_converges_across_batches,
+    test_stream_upsert_sink_reads_each_change_once,
+]:
+    globals()[f"{_test.__name__}_distributed"] = _on_distributed_branch(_test)
+
+
+def _spy_branches(monkeypatch) -> list[str]:
+    """The branch of each later merge, in call order."""
+    from dea05_e2e_kafka_streaming_pipeline_spark.streaming import pipeline
+
+    taken = []
+    for name, branch in (
+        ("commit_bucket_tables", "driver"),
+        ("commit_buckets", "distributed"),
+    ):
+
+        def spy(*args, _commit=getattr(pipeline, name), _branch=branch, **kwargs):
+            taken.append(_branch)
+            return _commit(*args, **kwargs)
+
+        monkeypatch.setattr(pipeline, name, spy)
+    return taken
+
+
+def test_upsert_batch_gate_counts_changes_and_touched_rows(spark, tmp_path, monkeypatch):
+    """The merge runs on the driver iff the changes plus the rows of the
+    buckets they touch are at most ``SMALL_ROWS["cdc_merge"]`` and the
+    table records the batch's column types; either branch lands the same
+    state."""
+    target = tmp_path / "silver"
+    _preload(spark, target)
+    in_bucket_1 = _keys_in_bucket(spark, 1, 4)
+    keys = in_bucket_1[:10]
+    taken = _spy_branches(monkeypatch)
+    for bound, branch in [
+        (len(keys) + len(in_bucket_1) - 1, "distributed"),
+        (len(keys) + len(in_bucket_1), "driver"),
+    ]:
+        monkeypatch.setitem(SMALL_ROWS, "cdc_merge", bound)
+        batch = _changes(spark, [(k, -float(bound), "u", bound) for k in keys])
+        upsert_batch_into_parquet(batch, str(target), key="order_id", n_buckets=4)
+        assert taken[-1] == branch
+        want = {k: -float(bound) if k in keys else float(k) for k in range(1000)}
+        assert _state(spark, target) == want
+    # a float amount: Spark's union widens it to the table's double
+    batch = spark.createDataFrame(
+        [(keys[0], 1.5, "u", 9999)],
+        "order_id long, amount float, _cdc_op string, _cdc_ts_ms long",
+    )
+    upsert_batch_into_parquet(batch, str(target), key="order_id", n_buckets=4)
+    assert taken == ["distributed", "driver", "distributed"]
+    assert _state(spark, target)[keys[0]] == 1.5
+    assert dict(read_snapshot(spark, str(target)).dtypes)["amount"] == "double"
+
+
+_CHANGE_SCHEMA = "k long, v long, _cdc_op string, _cdc_ts_ms long, seq long"
+# the NULL key, and keys 0-7, which hash into all 4 buckets
+_KEYS = st.one_of(st.none(), st.integers(0, 7))
+_CHANGE = st.tuples(
+    _KEYS,
+    st.one_of(st.none(), st.integers(-5, 5)),
+    st.sampled_from(["c", "u", "r", "d"]),
+    st.integers(0, 2),
+    st.integers(0, 1),
+)
+# (key, ts, is-delete, seq) is unique within a batch: a tie on all four
+# has a partition-order-dependent winner in Spark
+_BATCH = st.lists(
+    _CHANGE, min_size=1, max_size=10, unique_by=lambda c: (c[0], c[3], c[2] == "d", c[4])
+)
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(batches=st.lists(_BATCH, min_size=1, max_size=4))
+@example(  # re-insert after delete, with a delete/upsert tie at one ts
+    batches=[[(1, 1, "c", 0, 0)], [(1, None, "d", 1, 0), (1, 2, "u", 1, 1)], [(1, 3, "c", 2, 0)]]
+)
+@example(  # a batch that empties a bucket, then a seq tie broken by ts
+    batches=[[(k, k, "c", 0, 0) for k in range(8)], [(k, None, "d", 1, 0) for k in range(8)]]
+    + [[(None, 1, "u", 1, 0), (None, 2, "u", 2, 0), (3, 4, "c", 2, 1)]]
+)
+def test_upsert_batch_branches_agree(spark, tmp_path, batches):
+    """Differential: any batch sequence merged on the driver and on the
+    distributed branch leaves equal snapshots and equal bucket file
+    lists after every batch — NULL keys, ties at one ``ts`` decided by
+    delete-wins or ``seq``, re-inserts and emptied buckets included."""
+    root = tempfile.mkdtemp(dir=tmp_path)
+    tables = {b: os.path.join(root, b) for b in ("driver", "distributed")}
+
+    def merge(branch, rows):
+        with pytest.MonkeyPatch.context() as mp:
+            if branch == "distributed":
+                mp.setitem(SMALL_ROWS, "cdc_merge", 0)
+            upsert_batch_into_parquet(
+                spark.createDataFrame(rows, _CHANGE_SCHEMA),
+                tables[branch],
+                key="k",
+                seq_col="seq",
+                n_buckets=4,
+            )
+
+    def snapshot(branch):
+        df = read_snapshot(spark, tables[branch])
+        buckets = sorted(Path(f).parent.name for f in _files(df))
+        return sorted(df.collect(), key=repr), buckets
+
+    for rows in batches:
+        for branch in tables:
+            merge(branch, rows)
+        assert snapshot("driver") == snapshot("distributed")
+
+
+def test_upsert_batch_typed_round_trip_across_branches(spark, tmp_path):
+    """Timestamp, date and decimal columns survive a table the
+    distributed branch writes first (Spark's INT96 timestamps) and the
+    driver branch merges next: untouched and rewritten buckets read
+    back with the same types and values."""
+    import datetime as dt
+    import decimal
+
+    schema = (
+        "id long, at timestamp, day date, amount decimal(18,2), "
+        "_cdc_op string, _cdc_ts_ms long"
+    )
+
+    def row(k, ts, op="c"):
+        at = dt.datetime(2024, 1, 1, 12, 30, 15, 123456) + dt.timedelta(hours=k)
+        return (
+            k,
+            at,
+            dt.date(2023, 12, 31) + dt.timedelta(days=k),
+            decimal.Decimal(k * 1000 + ts).scaleb(-2),
+            op,
+            ts,
+        )
+
+    target = str(tmp_path / "typed")
+    first = [row(k, 1) for k in range(40)]
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setitem(SMALL_ROWS, "cdc_merge", 0)
+        upsert_batch_into_parquet(
+            spark.createDataFrame(first, schema), target, key="id", n_buckets=8
+        )
+    later = [row(k, 2) for k in range(0, 40, 3)] + [row(k, 2, "d") for k in range(1, 40, 7)]
+    later.append(row(100, 2))
+    with pytest.MonkeyPatch.context() as mp:
+        taken = _spy_branches(mp)
+        upsert_batch_into_parquet(
+            spark.createDataFrame(later, schema), target, key="id", n_buckets=8
+        )
+    assert taken == ["driver"]
+
+    def state(version=None):
+        return {r.id: tuple(r)[1:] for r in read_snapshot(spark, target, version).collect()}
+
+    want = {r[0]: r[1:4] for r in first}
+    for r in later:
+        if r[4] == "d":
+            want.pop(r[0])
+        else:
+            want[r[0]] = r[1:4]
+    assert state() == want
+    assert state(0) == {r[0]: r[1:4] for r in first}
+    assert read_snapshot(spark, target).dtypes == read_snapshot(spark, target, 0).dtypes
 
 
 def test_windowed_stats_sliding_double_counts(spark):

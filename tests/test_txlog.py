@@ -85,6 +85,78 @@ def test_commit_retries_after_failed_write(spark, tmp_path):
     assert sorted(r.id for r in read_snapshot(spark, t).collect()) == list(range(8))
 
 
+def test_snapshot_read_runs_no_job_before_its_action(spark, tmp_path):
+    """Reads take the schema the manifest records, so planning a read of
+    a plain or a bucketed table runs no schema-inference job; a manifest
+    without a schema still reads, by inference."""
+    import json
+
+    from dea05_e2e_kafka_streaming_pipeline_spark.sources.txlog import (
+        manifest_path,
+        read_buckets,
+    )
+
+    def n_jobs() -> int:
+        return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+    plain, bucketed = str(tmp_path / "plain"), str(tmp_path / "bucketed")
+    commit_snapshot(spark.range(0, 10), plain)
+    commit_snapshot(spark.range(10, 20), plain)
+    upsert_batch_into_parquet(
+        spark.createDataFrame(
+            [(k, "c", 1) for k in range(20)], "k long, _cdc_op string, _cdc_ts_ms long"
+        ),
+        bucketed,
+        key="k",
+        n_buckets=4,
+    )
+    before = n_jobs()
+    reads = [
+        read_snapshot(spark, plain),
+        read_snapshot(spark, plain, 0),
+        read_snapshot(spark, bucketed),
+        read_buckets(spark, bucketed, [0, 1, 2, 3], 4),
+    ]
+    assert n_jobs() == before
+    assert [df.count() for df in reads] == [20, 10, 20, 20]
+    assert n_jobs() > before
+
+    manifest = manifest_path(os.path.join(plain, "_log"), 1)
+    with open(manifest) as f:
+        m = json.load(f)
+    del m["schema"]
+    with open(manifest, "w") as f:
+        json.dump(m, f)
+    assert read_snapshot(spark, plain).count() == 20
+
+
+def test_commit_bucket_tables_dictionary_only_where_it_pays(spark, tmp_path):
+    """A bucket file written on the driver dictionary-encodes only the
+    columns with at most half as many distinct values as rows, as
+    Spark's writer keeps a dictionary only where it shrinks the column."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dea05_e2e_kafka_streaming_pipeline_spark.sources.txlog import (
+        commit_bucket_tables,
+    )
+
+    t = str(tmp_path / "dict")
+    table = pa.table({"id": pa.array(range(100), pa.int64()), "flag": ["a", "b"] * 50})
+    schema = spark.createDataFrame([], "id long, flag string").schema
+    commit_bucket_tables({0: table}, schema, t, 4)
+    (path,) = glob.glob(os.path.join(t, "data-v*", "bucket=0", "part-*.parquet"))
+    group = pq.read_metadata(path).row_group(0)
+    encodings = {group.column(i).path_in_schema: group.column(i).encodings for i in range(2)}
+    assert "RLE_DICTIONARY" not in encodings["id"]
+    assert "RLE_DICTIONARY" in encodings["flag"]
+    assert sorted(read_snapshot(spark, t).collect()) == sorted(
+        (i, "ab"[i % 2]) for i in range(100)
+    )
+
+
 def test_reader_snapshot_isolation(spark, tmp_path):
     """A reader planned against version N does not see a later commit."""
     t = str(tmp_path / "tbl4")
