@@ -141,11 +141,11 @@ def apply_cdc_changes(
     :func:`merge_latest_changes`. This is the merge over DataFrames;
     the one merge into a stored table,
     ``streaming/pipeline.py:upsert_batch_into_parquet``, calls the two
-    halves separately on its distributed branch: it pins the window
-    output between them and merges only the target buckets the batch
-    touches, publishing each batch as one snapshot-log version
-    (``sources/txlog.py``). Its single-node branch runs
-    :func:`apply_cdc_changes_arrow` instead.
+    halves separately: it pins the window output between them and
+    merges only the target buckets the batch touches, publishing each
+    batch as one snapshot-log version (``sources/txlog.py``). A small
+    merge collects that pin and runs :func:`merge_latest_changes_arrow`
+    as the second half.
 
     ``changes`` is the output of ``normalize_cdc(df, keep_meta=True,
     drop_deletes=False)``. Cost: one window shuffle over the (small)
@@ -164,42 +164,20 @@ def apply_cdc_changes(
     return merge_latest_changes(target, latest, key, op_col)
 
 
-def apply_cdc_changes_arrow(
-    target: pa.Table,
-    changes: pa.Table,
-    key: str,
-    ts_col: str = "_cdc_ts_ms",
-    op_col: str = "_cdc_op",
-    seq_col: str | None = None,
+def merge_latest_changes_arrow(
+    target: pa.Table, latest: pa.Table, key: str, op_col: str = "_cdc_op"
 ) -> pa.Table:
-    """:func:`apply_cdc_changes` over pyarrow Tables, for merges small
-    enough to run on the driver (the single-node branch of
-    ``upsert_batch_into_parquet``). Same semantics, both halves:
-
-    1. the latest change per key: ordered by ``ts_col`` desc, then
-       delete first, then ``seq_col`` desc, NULLs last as in Spark's
-       ``desc`` (a NULL op sorts after both; all NULL keys are one key,
-       as in the window's partition);
-    2. target rows whose key changed are dropped — a NULL key never
-       matches, as in the left-anti join — and the non-delete changes
-       (a NULL op is not one, as in ``filter(op != 'd')``) are appended
-       with the target's columns, cast to its schema.
-
-    Ties on every sort column keep the first change in ``changes``'
-    order (the sort is stable); Spark's winner among such ties depends
-    on partition order, which is why ``seq_col`` exists."""
-    import numpy as np
+    """:func:`merge_latest_changes` over pyarrow Tables, for merges
+    small enough to run on the driver (the single-node branch of
+    ``upsert_batch_into_parquet``, whose ``latest`` is the collected
+    output of :func:`latest_change_per_key`). Target rows whose key
+    changed are dropped — a NULL key never matches, as in the left-anti
+    join — and the non-delete changes (a NULL op is not one, as in
+    ``filter(op != 'd')``) are appended with the target's columns, cast
+    to its schema."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    order = [(ts_col, "descending"), ("__del", "descending")]
-    if seq_col is not None:
-        order.append((seq_col, "descending"))
-    ranked = changes.append_column("__del", pc.equal(changes[op_col], "d"))
-    ranked = ranked.take(pc.sort_indices(ranked, order, null_placement="at_end"))
-    ranked = ranked.append_column("__pos", pa.array(np.arange(ranked.num_rows)))
-    first = ranked.group_by(key).aggregate([("__pos", "min")])
-    latest = ranked.take(first["__pos_min"])
     upserts = latest.filter(pc.not_equal(latest[op_col], "d"))
     changed = pc.drop_null(latest[key])
     untouched = target.filter(pc.invert(pc.is_in(target[key], value_set=changed)))

@@ -62,7 +62,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 _LOG_DIR = "_log"
-_BUCKET = "bucket"
+BUCKET = "bucket"
+"""A bucketed table's bucket column: bucket ``b``'s files sit under
+``data-vN/bucket=b/``, and a frame passed to :func:`commit_buckets`
+carries the column."""
 
 
 def _log_path(table_path: str) -> str:
@@ -146,8 +149,8 @@ def commit_buckets(
         table_path,
         buckets,
         n_buckets,
-        df.drop(_BUCKET).schema,
-        df.write.partitionBy(_BUCKET).parquet,
+        df.drop(BUCKET).schema,
+        df.write.partitionBy(BUCKET).parquet,
     )
 
 
@@ -163,7 +166,7 @@ def commit_bucket_tables(
     def write(data_dir: str) -> None:
         for b, table in tables.items():
             if table.num_rows:
-                d = os.path.join(data_dir, f"{_BUCKET}={b}")
+                d = os.path.join(data_dir, f"{BUCKET}={b}")
                 os.makedirs(d)
                 name = f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"
                 pq.write_table(
@@ -177,9 +180,15 @@ def commit_bucket_tables(
 
 def _dictionary_columns(table: pa.Table) -> list[str]:
     """The flat columns of ``table`` with at most half as many distinct
-    values as rows, the ones a dictionary shrinks. Spark's parquet
-    writer falls back to PLAIN where a dictionary does not pay; pyarrow
-    dictionary-encodes every column, and a near-unique one grows."""
+    values as rows, the ones written with a dictionary. pyarrow
+    dictionary-encodes every column, and a near-unique one grows;
+    Spark's parquet writer (parquet-mr) instead falls back to PLAIN when
+    the first page's encoded bytes plus the dictionary's are no fewer
+    than the plain bytes. The count ratio approximates that byte rule:
+    it was set so the files of the CDC benchmark's columns (unique ids,
+    120 dates, near-unique amounts and customers per bucket) come out
+    near Spark's size, and it is not derived for other value widths.
+    It costs one ``count_distinct`` per column per written bucket."""
     return [
         name
         for name, col in zip(table.column_names, table.columns)
@@ -234,7 +243,7 @@ def _commit(table_path: str, mode: str, n_buckets, schema: StructType, keep, wri
 
 def _in_buckets(buckets: list[int]):
     """Predicate: is the file ``data-vN/bucket=b/…`` in ``buckets``."""
-    dirs = {f"{_BUCKET}={b}" for b in buckets}
+    dirs = {f"{BUCKET}={b}" for b in buckets}
     return lambda f: f.split(os.sep)[1] in dirs
 
 

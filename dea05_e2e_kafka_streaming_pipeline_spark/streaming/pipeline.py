@@ -37,14 +37,13 @@ from dea05_e2e_kafka_streaming_pipeline_spark.sources.registry import (
     read_parquet_or_none,
 )
 from dea05_e2e_kafka_streaming_pipeline_spark.sources.txlog import (
+    BUCKET,
     bucket_files,
     commit_bucket_tables,
     commit_buckets,
     read_buckets,
     vacuum_snapshots,
 )
-
-_BUCKET = "bucket"  # the CDC merge's bucket column, a directory in the table
 
 
 def _start(
@@ -155,24 +154,24 @@ def upsert_batch_into_parquet(
     table. A merge passing another ``n_buckets`` than the table's raises
     ``ValueError`` before any write.
 
-    Size-adaptive (``plans.analytics.size_gate``): the batch, with its
-    ``bucket`` column, is pinned and counted once. When the changes
-    plus the touched buckets' rows (counted from the parquet footers of
-    the latest version's files) are at most
-    ``SMALL_ROWS["cdc_merge"]``, the pin is collected with
-    ``toArrow()`` and the merge runs on the driver
-    (:func:`~..operators.cdc.apply_cdc_changes_arrow`); each touched
-    bucket is written by pyarrow as one file
+    Size-adaptive (``plans.analytics.size_gate``): the latest change
+    per key of the batch (:func:`~..operators.cdc.latest_change_per_key`,
+    Spark's window, the one place the change order is decided), with
+    its ``bucket`` column, is pinned and counted once, and an
+    ``Observation`` on the same job yields the touched buckets. Both
+    branches read that pin, never the batch again, and an empty batch
+    returns before any write. When the latest changes plus the touched
+    buckets' rows (counted from the parquet footers of the latest
+    version's files) are at most ``SMALL_ROWS["cdc_merge"]``, the pin
+    is collected with ``toArrow()``, the anti-join + union run on the
+    driver (:func:`~..operators.cdc.merge_latest_changes_arrow`) and
+    each touched bucket is written by pyarrow as one file
     (``txlog.commit_bucket_tables``). A micro-batch's fixed cost of
     Spark jobs and per-file writers is what this skips. Otherwise the
-    distributed merge reads the pin: the latest-change-per-key window,
-    pinned once (``localCheckpoint(eager=True)``) with an
-    ``Observation`` that yields the touched buckets, then the
-    delete-wins anti-join + union against those buckets
-    (``txlog.read_buckets``), repartitioned by bucket so ONE task writes
-    each touched bucket as one file (``txlog.commit_buckets``). Either
-    way the batch is read once, and an empty batch returns before any
-    write.
+    distributed merge reads those buckets (``txlog.read_buckets``),
+    runs the delete-wins anti-join + union against the pin, and
+    repartitions by bucket so ONE task writes each touched bucket as
+    one file (``txlog.commit_buckets``).
 
     Atomic and replay-convergent: the files land under a fresh
     ``data-vN/`` and one manifest publish makes them visible, so a
@@ -199,61 +198,61 @@ def upsert_batch_into_parquet(
     meta = {op_col, ts_col} | ({seq_col} if seq_col else set())
     data_cols = [c for c in batch.columns if c not in meta]
     bucket = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
-    pinned, n, small = size_gate(batch.withColumn(_BUCKET, bucket), "cdc_merge")
+    touched = Observation()
+    latest, n, small = size_gate(
+        latest_change_per_key(batch.withColumn(BUCKET, bucket), key, ts_col, op_col, seq_col)
+        .observe(touched, F.collect_set(BUCKET).alias("buckets")),
+        "cdc_merge",
+    )
     if n == 0:
         return
-    schema = pinned.select(*data_cols).schema
-    merge = (key, ts_col, op_col, seq_col)
-    if small and _merge_on_driver(pinned, n, schema, target_dir, n_buckets, *merge):
-        return
-    touched = Observation()
-    latest = (
-        latest_change_per_key(pinned, *merge)
-        .observe(touched, F.collect_set(_BUCKET).alias("buckets"))
-        .localCheckpoint(eager=True)
-    )
     affected = sorted(touched.get["buckets"])
+    schema = latest.select(*data_cols).schema
+    if small and _merge_on_driver(
+        latest, n, affected, schema, target_dir, n_buckets, key, op_col
+    ):
+        return
     target = read_buckets(batch.sparkSession, target_dir, affected, n_buckets)
     if target is None:  # first batch, or every key of these buckets deleted
         target = batch.sparkSession.createDataFrame([], schema)
     merged = (
         merge_latest_changes(target, latest, key, op_col)
-        .withColumn(_BUCKET, bucket)
-        .repartition(_BUCKET)
+        .withColumn(BUCKET, bucket)
+        .repartition(BUCKET)
     )
     commit_buckets(merged, target_dir, affected, n_buckets)
 
 
 def _merge_on_driver(
-    pinned: DataFrame,
+    latest: DataFrame,
     n: int,
+    affected: list[int],
     schema: StructType,
     target_dir: str,
     n_buckets: int,
     key: str,
-    ts_col: str,
     op_col: str,
-    seq_col: str | None,
 ) -> bool:
     """The single-node branch of :func:`upsert_batch_into_parquet`:
-    collect the ``n`` pinned changes and merge them into the touched
-    buckets on the driver, then publish. Returns ``False``, having
-    written nothing, when the changes plus the touched buckets' rows
-    pass ``SMALL_ROWS["cdc_merge"]`` or the table records another
-    schema than the batch's data columns, ``schema``. Each bucket is
-    written in the Arrow form of ``schema``, microsecond timestamps."""
+    collect the ``n`` pinned latest changes, ``latest``, and merge them
+    into the ``affected`` buckets on the driver, then publish. Returns
+    ``False``, having collected and written nothing, when the changes
+    plus those buckets' rows pass ``SMALL_ROWS["cdc_merge"]`` or the
+    table records another schema than the batch's data columns,
+    ``schema``. Each bucket is written in the Arrow form of ``schema``,
+    microsecond timestamps; Spark's INT96 timestamps are read at that
+    unit too, so none outside the nanosecond range (years 1677-2262)
+    wraps."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from dea05_e2e_kafka_streaming_pipeline_spark.operators.cdc import (
-        apply_cdc_changes_arrow,
+        merge_latest_changes_arrow,
     )
     from dea05_e2e_kafka_streaming_pipeline_spark.plans.analytics import SMALL_ROWS
 
-    changes = pinned.toArrow()
-    affected = pc.unique(changes[_BUCKET]).to_pylist()
     files, recorded = bucket_files(target_dir, affected, n_buckets)
     if recorded is not None and [(f.name, f.dataType) for f in recorded] != [
         (f.name, f.dataType) for f in schema
@@ -262,15 +261,21 @@ def _merge_on_driver(
     rows = sum(pq.read_metadata(f).num_rows for fs in files.values() for f in fs)
     if n + rows > SMALL_ROWS["cdc_merge"]:
         return False
+    changes = latest.toArrow()
     arrow = pa.schema([f.with_nullable(True) for f in to_arrow_schema(schema)])
     tables = {}
     for b, fs in files.items():  # a key's changes all hash into its bucket
         target = pa.concat_tables(
             [arrow.empty_table()]
-            + [pq.read_table(f, columns=arrow.names).cast(arrow) for f in fs]
+            + [
+                pq.read_table(
+                    f, columns=arrow.names, coerce_int96_timestamp_unit="us"
+                ).cast(arrow)
+                for f in fs
+            ]
         )
-        mine = changes.filter(pc.equal(changes[_BUCKET], b))
-        tables[b] = apply_cdc_changes_arrow(target, mine, key, ts_col, op_col, seq_col)
+        mine = changes.filter(pc.equal(changes[BUCKET], b))
+        tables[b] = merge_latest_changes_arrow(target, mine, key, op_col)
     commit_bucket_tables(tables, schema, target_dir, n_buckets)
     return True
 

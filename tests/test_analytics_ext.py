@@ -578,6 +578,32 @@ def test_global_row_number_matches_window(spark, monkeypatch):
     assert got_scaffold == want
 
 
+def test_size_gate_pins_and_counts_in_one_job(spark, monkeypatch):
+    """The size gate pins and counts its input with one Spark job, and
+    an Observation the caller put on the input fires with that job."""
+    from pyspark.sql import Observation
+
+    from dea05_e2e_kafka_streaming_pipeline_spark.plans.analytics import (
+        SMALL_ROWS,
+        size_gate,
+    )
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    seen = Observation()
+    df = spark.range(0, 1000, numPartitions=4).withColumn("b", F.col("id") % 3)
+    before = dag.nextJobId()
+    pinned, n, small = size_gate(
+        df.observe(seen, F.collect_set("b").alias("bs"), F.sum("id").alias("s")),
+        "k_core",
+    )
+    assert dag.nextJobId() - before == 1
+    assert (n, small) == (1000, True)
+    assert sorted(seen.get["bs"]) == [0, 1, 2] and seen.get["s"] == 499500
+    assert pinned.count() == 1000
+    monkeypatch.setitem(SMALL_ROWS, "k_core", 999)
+    assert size_gate(df, "k_core")[1:] == (1000, False)
+
+
 def test_hbos_flags_sparse_bin_rows(spark):
     """99 clustered rows + 1 far outlier: the outlier occupies a
     singleton bin in both features -> top HBOS score by construction."""

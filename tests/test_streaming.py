@@ -1013,7 +1013,8 @@ def test_upsert_batch_typed_round_trip_across_branches(spark, tmp_path):
     """Timestamp, date and decimal columns survive a table the
     distributed branch writes first (Spark's INT96 timestamps) and the
     driver branch merges next: untouched and rewritten buckets read
-    back with the same types and values."""
+    back with the same types and values, sentinel dates and timestamps
+    outside the nanosecond range (years 1677-2262) included."""
     import datetime as dt
     import decimal
 
@@ -1022,38 +1023,51 @@ def test_upsert_batch_typed_round_trip_across_branches(spark, tmp_path):
         "_cdc_op string, _cdc_ts_ms long"
     )
 
+    # two keys of each bucket carry the sentinels of open-ended and of
+    # unknown validity
+    sentinels = {}
+    for b in range(8):
+        late, early = [k for k in _keys_in_bucket(spark, b, 8, 400) if k >= 200][:2]
+        sentinels[late] = (dt.datetime(9999, 12, 31, 23, 59, 59, 999999), dt.date(9999, 12, 31))
+        sentinels[early] = (dt.datetime(1, 1, 1), dt.date(1, 1, 1))
+
     def row(k, ts, op="c"):
         at = dt.datetime(2024, 1, 1, 12, 30, 15, 123456) + dt.timedelta(hours=k)
-        return (
-            k,
-            at,
-            dt.date(2023, 12, 31) + dt.timedelta(days=k),
-            decimal.Decimal(k * 1000 + ts).scaleb(-2),
-            op,
-            ts,
-        )
+        day = dt.date(2023, 12, 31) + dt.timedelta(days=k)
+        at, day = sentinels.get(k, (at, day))
+        return (k, at, day, decimal.Decimal(k * 1000 + ts).scaleb(-2), op, ts)
 
     target = str(tmp_path / "typed")
-    first = [row(k, 1) for k in range(40)]
+    first = [row(k, 1) for k in [*range(40), *sentinels]]
     with pytest.MonkeyPatch.context() as mp:
         mp.setitem(SMALL_ROWS, "cdc_merge", 0)
         upsert_batch_into_parquet(
             spark.createDataFrame(first, schema), target, key="id", n_buckets=8
         )
     later = [row(k, 2) for k in range(0, 40, 3)] + [row(k, 2, "d") for k in range(1, 40, 7)]
-    later.append(row(100, 2))
+    later += [row(_keys_in_bucket(spark, b, 8, 40)[0], 2) for b in range(8)]
+    # rewrite bucket 0's late and bucket 1's early sentinel on the driver
+    later += [row(100, 2)] + [row(k, 2) for k in list(sentinels)[0:4:3]]
     with pytest.MonkeyPatch.context() as mp:
         taken = _spy_branches(mp)
         upsert_batch_into_parquet(
             spark.createDataFrame(later, schema), target, key="id", n_buckets=8
         )
     assert taken == ["driver"]
+    # the driver rewrote every bucket, each still holding a sentinel it did not change
+    assert {Path(f).parent.parent.name for f in _files(read_snapshot(spark, target))} == {
+        "data-v000001"
+    }
 
     def state(version=None):
-        return {r.id: tuple(r)[1:] for r in read_snapshot(spark, target, version).collect()}
+        # through Arrow: PySpark's Row conversion cannot build year-1 datetimes
+        rows = read_snapshot(spark, target, version).toArrow().to_pylist()
+        return {
+            r["id"]: (r["at"].replace(tzinfo=None), r["day"], r["amount"]) for r in rows
+        }
 
     want = {r[0]: r[1:4] for r in first}
-    for r in later:
+    for r in sorted(later, key=lambda r: r[4] == "d"):  # a delete wins a tie
         if r[4] == "d":
             want.pop(r[0])
         else:
